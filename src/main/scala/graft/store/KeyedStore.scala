@@ -142,46 +142,75 @@ object KeyedStore {
       .option("graft.asofVersion", version.toString).load(path)
 
   /**
-   * Index-pruned merge — the write-side twin of the connector's split pruning,
-   * and the answer to "every upsert rewrites the whole 100 TB table": only the
-   * files whose key range actually CONTAINS a put key are read, merged and
-   * rewritten; every other file (and its index entry) is untouched. This is
-   * what HBase gives structurally — a put lands in exactly the region owning
-   * its key (reference HbaseTable.scala:373-423's pooled per-region writes) —
-   * reproduced over immutable parquet: rewrite cost is O(affected ranges +
-   * puts), not O(table).
+   * Index-pruned upsert — the write-side twin of the connector's split
+   * pruning, and the answer to "every upsert rewrites the whole 100 TB
+   * table": only the files whose key range actually CONTAINS a put key are
+   * read, merged and rewritten; every other file (and its index entry) is
+   * untouched. This is what HBase gives structurally — a put lands in
+   * exactly the region owning its key (reference HbaseTable.scala:373-423's
+   * pooled per-region writes) — reproduced over immutable parquet: rewrite
+   * cost is O(affected ranges + puts), not O(table).
    *
-   * Put keys outside every file's range are pure inserts and ride along into
-   * the rewritten ranges (the merged output is re-range-partitioned), which
-   * can loosen range tightness across gaps; pruning stays sound (it tests
-   * intersection, not disjointness) and a periodic [[writeIndexed]] compaction
-   * restores the tight layout.
+   * Put keys outside every file's range are pure inserts, placed by the
+   * slot rule of [[mergeIndexed]]: an insert in a gap next to a rewritten
+   * file joins that file, an insert in a gap between two untouched files
+   * gets one new file per gap, and keys below the first file or above the
+   * last get one new file per side. No rewritten file ever spans an
+   * untouched one, so live ranges stay disjoint; [[compact]] merges the
+   * small files appends leave behind.
    *
-   * `puts` follows [[upsert]]'s contract (at most one row per key).
+   * A one-op [[MutationBatch]]; `puts` follows [[upsert]]'s contract (at
+   * most one row per key).
    */
   def upsertIndexed(spark: SparkSession, path: String, puts: DataFrame,
       keyCol: String = "key"): Unit =
-    mergeIndexed(spark, path, puts, keyCol, outsideKeysInsert = true)(upsert(_, _, keyCol))
+    MutationBatch(keyCol).put(puts).executeIndexed(spark, path): Unit
 
   /** Index-pruned [[deleteRows]]: only files whose range contains a delete key
     * are rewritten; delete keys outside every range are no-ops. */
   def deleteIndexed(spark: SparkSession, path: String, keys: DataFrame,
       keyCol: String = "key"): Unit =
-    mergeIndexed(spark, path, keys, keyCol, outsideKeysInsert = false)(
-      deleteRows(_, _, keyCol))
+    MutationBatch(keyCol).delete(keys).executeIndexed(spark, path): Unit
 
   /** Index-pruned [[increment]]: deltas for existing keys rewrite only their
     * range files; deltas for new keys create rows (coalesce(old,0)+delta). */
   def incrementIndexed(spark: SparkSession, path: String, deltas: DataFrame,
       keyCol: String = "key"): Unit =
-    mergeIndexed(spark, path, deltas, keyCol, outsideKeysInsert = true)(
-      increment(_, _, keyCol))
+    MutationBatch(keyCol).increment(deltas).executeIndexed(spark, path): Unit
+
+  /** Op kinds of the routed pass — also the [[OpsResult]] buckets. Deletes
+    * of any form never insert; puts and increments insert keys that fall
+    * in no file. */
+  private[store] val DeleteKind = 0
+  private[store] val PutKind = 1
+  private[store] val IncrementKind = 2
 
   /**
-   * The shared index-pruned write machinery: route each batch key to its
-   * range file via binary search, read+merge+swap only the affected files,
-   * refresh only their index entries. `outsideKeysInsert` = whether keys
-   * outside every range still produce rows (puts/increments yes, deletes no).
+   * The one indexed write path every keyed mutation shares
+   * ([[MutationBatch.executeIndexed]]; the single-op verbs above are
+   * one-op batches). `keys` holds each op's key column (first column) with
+   * its kind; `plan` maps the current rows of the affected files to their
+   * merged rows (the batch's deletes → puts → increments algebra). Returns
+   * the rows each kind was asked to mutate.
+   *
+   *  1. ROUTE ONCE: one aggregate over the union of every op's keys, routed
+   *     by a floor-mode binary search over the live ranges, collects
+   *     (file or gap, kind) → rows: the affected files, the gaps that
+   *     receive inserts, and the per-kind counts.
+   *  2. MERGE ONCE: the affected files are read once, under the schema
+   *     from a live file's footer (no inference job), and `plan` runs once.
+   *  3. EXACT SLOTS: the driver numbers the output files — one per
+   *     affected file; an insert gap next to an affected file joins it (the
+   *     lower neighbour first); any other interior gap gets its own file;
+   *     the gaps below the first and above the last file always do (so an
+   *     append-keyed table grows small tail files that [[compact]] merges,
+   *     instead of rewriting its last file on every batch). Merged rows are
+   *     hash-partitioned on a literal preimage of their slot, so slot `s`
+   *     is exactly task `s` and no output range can span an untouched file.
+   *  4. GUARD, WRITE AND COMMIT ONCE: if any staged range overlaps another
+   *     staged range or an untouched file the staging is deleted and the
+   *     mutation fails having applied nothing; otherwise one rename-in,
+   *     one fenced index commit, one stray sweep.
    *
    * Crash + reader-concurrency contract (the HBase-durability analogue —
    * reference HbaseTable.scala:373-423 never loses acked region writes):
@@ -199,12 +228,14 @@ object KeyedStore {
    *
    * Legacy advisory (v1) indexes upgrade to the manifest dialect on the
    * first mutation (unindexed late-arrival files are scanned once for their
-   * stats and folded in — O(unindexed), not O(table)).
+   * stats and folded in — O(unindexed), not O(table)). A table with no
+   * usable index takes the full-rewrite fallback.
    */
-  private[store] def mergeIndexed(spark: SparkSession, path: String, batch: DataFrame,
-      keyCol: String, outsideKeysInsert: Boolean)(
-      merge: (DataFrame, DataFrame) => DataFrame): Unit = {
+  private[store] def mergeIndexed(spark: SparkSession, path: String, keyCol: String,
+      keys: Seq[(DataFrame, Int)])(plan: DataFrame => DataFrame): Array[Long] = {
     import org.apache.spark.sql.graft.GraftIndex
+    val counts = new Array[Long](3)
+    if (keys.isEmpty) return counts
     val hadoopConf = spark.sessionState.newHadoopConf()
     val dirPath = new org.apache.hadoop.fs.Path(path)
     val fs = dirPath.getFileSystem(hadoopConf)
@@ -215,129 +246,86 @@ object KeyedStore {
       .filter(_._2.keyCol == keyCol)
       .map { case (v, i) => GraftIndex.ensureManifestVersioned(spark, path, v, i) }
     val ix = ixV.map(_._2)
-    if (ix.isEmpty) { // no usable index: full merge + fresh indexed layout
-      // the fallback reads the dir by PLAIN listing — only safe when no
-      // manifest discipline ever ran here. Index versions present but
-      // unusable for this keyCol mean a manifest table (whose on-disk
-      // strays a plain listing would read as duplicate rows) addressed by
-      // the wrong key, or a corrupted index: refuse loudly instead.
-      require(!fs.exists(dirPath) ||
-          GraftIndex.versionFiles(fs, dirPath).isEmpty,
+    val tag = ix.map(_.keyTag).getOrElse("")
+    val isNum = tag == "num"
+    // (name, lo, hi) sorted by lo — the router's binary-search table
+    val ranges: Array[(String, (Any, Any, Long))] = ix.map { i =>
+      i.ranges.toArray.sortWith((a, b) => keyOrder(tag)(a._2._1, b._2._1) < 0)
+    }.getOrElse(Array.empty)
+    val n = ranges.length
+    // the routed pass: (route code, kind) → rows over every op's keys
+    def routedPass(key: DataFrame => Column, route: Column): Array[org.apache.spark.sql.Row] = {
+      val routed = keys.map { case (k, kind) =>
+        k.select(key(k).as("__k"), lit(kind).as("__kind"))
+      }.reduce(_ union _)
+        .groupBy(route.as("__r"), col("__kind")).count().collect()
+      routed.foreach(r => counts(r.getInt(1)) += r.getLong(2))
+      routed
+    }
+    if (ix.isEmpty) { // no usable index: count, then full merge + fresh indexed layout
+      require(!fs.exists(dirPath) || GraftIndex.versionFiles(fs, dirPath).isEmpty,
         s"mergeIndexed: $path carries a graft index, but none usable for " +
           s"key '$keyCol' — wrong key column, or a damaged index (run " +
           "KeyedStore.fsckIndexed / rebuild via writeIndexed)")
-      // FENCE the dir swap (round 15): unlike the indexed path, this
-      // fallback's commit point is a rename PAIR, which create-exclusive
-      // on an index version cannot arbitrate. A .swapclaim marker next to
-      // the table dir is claimed create-exclusive (verify-after-write on
-      // PUT stores — GraftIndex.writeCommitFile) BEFORE staging, and
-      // ownership is re-verified just before the renames: two racing
-      // full-rewrite maintainers produce exactly one winner, the loser
-      // throws GraftConcurrentCommitException having applied nothing. A
-      // crashed attempt leaves the claim behind, fencing further
-      // full-rewrites loudly until fsckIndexed sweeps it (its
-      // no-writer-in-flight contract makes the sweep safe).
-      val swapClaim = new org.apache.hadoop.fs.Path(path + SwapClaimSuffix)
-      val nonce = java.util.UUID.randomUUID().toString
-      try GraftIndex.writeCommitFile(fs, swapClaim, nonce.getBytes("UTF-8"))
-      catch {
-        case e: org.apache.spark.sql.graft.GraftConcurrentCommitException =>
-          throw new org.apache.spark.sql.graft.GraftConcurrentCommitException(
-            s"mergeIndexed: full-rewrite swap claim for $path is held — a " +
-              "concurrent maintainer is mid-rewrite, or a crashed rewrite " +
-              "left debris (run KeyedStore.fsckIndexed, then retry); " +
-              "nothing was applied", e)
-      }
-      def claimStillOurs(): Boolean = scala.util.Try {
-        val in = fs.open(swapClaim)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim == nonce
-        finally in.close()
-      }.getOrElse(false)
-      val stamp = System.currentTimeMillis()
-      // per-attempt staging name: two racing maintainers must never write
-      // into the SAME staging dir (they would corrupt each other's staged
-      // bytes before the commit fence can even arbitrate)
-      val staging = path + "__staging-" + java.util.UUID.randomUUID().toString.take(8)
-      val stagingPath = new org.apache.hadoop.fs.Path(staging)
-      try {
-        // plan construction INSIDE the try: an analysis error (missing key
-        // column, mismatched schema) must release the claim like any other
-        // surviving failure, not leak it and fence the table until fsck
-        val merged = merge(read(spark, path), batch)
-        // stage through the graft write so the new layout arrives WITH its
-        // manifest index; a _COMMITTED marker records job success so fsck can
-        // tell a complete staging from a dead one
-        merged.repartitionByRange(col(keyCol)).sortWithinPartitions(keyCol)
-          .write.format("graft").option("key", keyCol).mode("overwrite").save(staging)
-        fs.create(new org.apache.hadoop.fs.Path(stagingPath, CommittedMarker), true).close()
-        // stolen-claim re-check (PUT stores): the staging phase separates
-        // the claim from the swap — a racer whose claim PUT landed inside
-        // the claim-verify window is caught here, before any rename
-        if (GraftIndex.verifyAfterWrite(fs) && !claimStillOurs()) {
-          fs.delete(stagingPath, true)
-          throw new org.apache.spark.sql.graft.GraftConcurrentCommitException(
-            s"mergeIndexed: swap claim for $path was overwritten by a " +
-              "concurrent maintainer mid-staging — fenced off, nothing " +
-              "applied (serialize the maintainers and retry)")
-        }
-        // dir swap with a backup instead of delete-then-rename: a crash
-        // between the renames leaves the table LOUDLY missing (both copies on
-        // disk), healed by fsckIndexed — never silently lost
-        val oldPath = new org.apache.hadoop.fs.Path(path + BackupSuffix + stamp)
-        if (fs.exists(dirPath) && !fs.rename(dirPath, oldPath))
-          throw new java.io.IOException(s"mergeIndexed: cannot back up $path")
-        if (!fs.rename(stagingPath, dirPath))
-          throw new java.io.IOException(s"mergeIndexed: cannot swap in $staging")
-        fs.delete(new org.apache.hadoop.fs.Path(dirPath, CommittedMarker), false)
-        fs.delete(oldPath, true)
-        fs.delete(swapClaim, false)
-      } catch {
-        case t: Throwable =>
-          // a SURVIVING loser releases its claim (a crash leaves it for
-          // fsck); never touch a claim a racer now owns
-          if (claimStillOurs()) fs.delete(swapClaim, false)
-          throw t
-      }
-      return
+      routedPass(_ => lit(null), lit(-1))
+      fullRewrite(spark, path, keyCol)(plan)
+      return counts
     }
-    val tag = ix.get.keyTag
-    val isNum = tag == "num"
-    // (name, lo, hi) sorted by lo — the router's binary-search table
-    val ranges: Array[(String, (Any, Any, Long))] =
-      if (isNum) ix.get.ranges.toArray.sortBy(_._2._1.asInstanceOf[BigDecimal])
-      else ix.get.ranges.toArray.sortBy(_._2._1.toString)
-    // key→file routing: a codegen'd binary search in the key's OWN value
-    // space (see routerColumn — exactness is load-bearing: a boundary
+    val schema = GraftIndex.liveSchema(dirPath, hadoopConf)
+      .getOrElse(read(spark, path).schema)
+    val keyDt = schema(keyCol).dataType
+    // key→file-or-gap routing: a codegen'd binary search in the key's OWN
+    // value space (see routerColumn — exactness is load-bearing: a boundary
     // mis-route leaves a duplicate row behind)
-    val fileOf = routerColumn(spark, batch.schema(keyCol).dataType,
-      keyCol, ranges, isNum)
-    val affectedIdx = batch
-      .select(fileOf.as("__f")).where(col("__f") >= 0)
-      .distinct().collect().map(_.getInt(0)).toSet
-    val affectedNames = affectedIdx.toSeq.sorted.map(i => ranges(i)._1)
-    if (affectedNames.isEmpty && !outsideKeysInsert) return // nothing to touch
+    def route(c: String): Column =
+      routerColumn(spark, keyDt, c, ranges, isNum, floor = true)
+    val routed = routedPass(k => col(k.columns.head).cast(keyDt), route("__k"))
+    val affected = routed.map(_.getInt(0)).filter(_ >= 0).toSet
+    val gaps = routed.filter(r => r.getInt(0) < 0 && r.getInt(1) != DeleteKind)
+      .map(r => -r.getInt(0) - 1).toSet
+    if (affected.isEmpty && gaps.isEmpty) return counts // nothing to touch
+    val slotOf = slotsOf(n, affected, gaps)
+    val numSlots = slotOf.max + 1
     val current =
-      if (affectedNames.isEmpty) spark.read.parquet(path).limit(0)
-      else spark.read.parquet(affectedNames.map(n => s"$path/$n"): _*)
-    val merged = merge(current, batch)
+      if (affected.isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+      else spark.read.schema(schema)
+        .parquet(affected.toSeq.sorted.map(i => s"$path/${ranges(i)._1}"): _*)
+    // slot → a literal whose Murmur3 hash lands in partition `slot` of a
+    // numSlots-way hash repartition: the shuffle places every row by the
+    // driver's slot table, never by sampled range bounds
+    val preimage = hashPreimages(numSlots)
+    val partKey = slotOf.map(s => if (s < 0) null else Integer.valueOf(preimage(s)))
+    val code = route(keyCol)
+    val slotKey = coalesce(
+      element_at(typedLit(partKey.toSeq), when(code >= 0, code + 1).otherwise(lit(n) - code)),
+      raise_error(lit(s"mergeIndexed: a merged row of $path routes to no output slot")))
     // per-attempt staging name AND per-attempt salt in the renamed-in data
     // file names: racing maintainers must collide only at the index commit
     // (where the fence arbitrates loudly), never on staging dirs or final
     // data-file names (where POSIX rename would silently replace bytes)
     val salt = java.util.UUID.randomUUID().toString.take(8)
     val staging = path + "__staging-" + salt
+    val stagingPath = new org.apache.hadoop.fs.Path(staging)
     // stage through the graft write: each task records its file's key stats,
     // so the staging dir arrives with its own sidecar — no re-scan needed
-    merged.repartitionByRange(math.max(1, affectedNames.size), col(keyCol))
-      .sortWithinPartitions(keyCol)
+    val merged = plan(current)
+    merged.repartition(numSlots, slotKey.as("__slot")).sortWithinPartitions(keyCol)
       .write.format("graft").option("key", keyCol).mode("overwrite").save(staging)
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
     val (stagedRanged, stagedUnranged) =
       GraftIndex.read(stagingPath, hadoopConf).filter(_.keyCol == keyCol)
         .map(s => (s.ranges, s.unranged))
         .getOrElse(GraftIndex.computeEntries(spark,
           fs.listStatus(stagingPath).filter(_.getPath.getName.endsWith(".parquet"))
             .map(_.getPath.toString).toSeq, keyCol, tag))
+    val affectedNames = affected.map(i => ranges(i)._1)
+    val untouched = ix.get.ranges -- affectedNames
+    val overlaps = overlappingRanges(tag, untouched.values ++ stagedRanged.values)
+    if (overlaps > 0) {
+      fs.delete(stagingPath, true)
+      throw new IllegalStateException(s"mergeIndexed: $overlaps staged key range(s) of " +
+        s"$path overlap another live range — staging deleted, nothing applied")
+    }
     // crash-safe swap (see scaladoc): staged parts rename IN first under
     // fresh m<stamp> names — invisible to manifest-dialect readers until the
     // index commit below — then the new index version publishes ATOMICALLY;
@@ -355,18 +343,162 @@ object KeyedStore {
         staged -> name
       }.toMap
     GraftIndex.writeRanges(spark, path, keyCol, tag,
-      ix.get.ranges -- affectedNames ++
-        stagedRanged.map { case (n, e) => renamed(n) -> e },
-      ix.get.unranged -- affectedNames ++
-        stagedUnranged.map { case (n, r) => renamed(n) -> r },
+      untouched ++ stagedRanged.map { case (n, e) => renamed(n) -> e },
+      ix.get.unranged ++ stagedUnranged.map { case (n, r) => renamed(n) -> r },
       manifest = true, basedOn = ixV.map(_._1)): Unit // FENCED COMMIT POINT
     fs.delete(stagingPath, true)
     GraftIndex.sweepStrays(spark, path): Unit
+    counts
   }
 
-  /** Marker written into a completed staging dir by [[mergeIndexed]]'s
-    * full-rewrite fallback so [[fsckIndexed]] can roll an interrupted dir
-    * swap FORWARD (complete staging) instead of back (backup restore). */
+  /**
+   * The output slot of every route code, for a table of `n` sorted files:
+   * index `f < n` is file `f`, index `n + g` is gap `g` (gap 0 below file
+   * 0, gap `n` above file `n - 1`); -1 marks codes no merged row can carry.
+   * Affected files take slots 0.. in key order; an interior insert gap
+   * joins its lower affected neighbour, else its upper one, else opens a
+   * slot of its own; the two outer gaps always open their own.
+   */
+  private[graft] def slotsOf(n: Int, affected: Set[Int], gaps: Set[Int]): Array[Int] = {
+    val slotOf = Array.fill(2 * n + 1)(-1)
+    val files = affected.toSeq.sorted
+    files.zipWithIndex.foreach { case (f, s) => slotOf(f) = s }
+    var next = files.size
+    gaps.toSeq.sorted.foreach { g =>
+      slotOf(n + g) =
+        if (g > 0 && g < n && affected(g - 1)) slotOf(g - 1)
+        else if (g > 0 && g < n && affected(g)) slotOf(g)
+        else { next += 1; next - 1 }
+    }
+    slotOf
+  }
+
+  /** For each of `n` partitions, an int whose Spark hash (Murmur3, seed 42
+    * — `HashPartitioning`'s) lands in that partition of an `n`-way
+    * `repartition`. */
+  private def hashPreimages(n: Int): Array[Int] = {
+    val out = Array.fill(n)(-1)
+    var left = n
+    var v = 0
+    while (left > 0) {
+      val p = Math.floorMod(org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(v, 42), n)
+      if (out(p) < 0) { out(p) = v; left -= 1 }
+      v += 1
+    }
+    out
+  }
+
+  /** The order the key→file router compares index bounds in: numeric, or
+    * UTF-8 bytes for strings (Spark's string order, which the sorted files
+    * follow too). */
+  private def keyOrder(tag: String)(a: Any, b: Any): Int =
+    if (tag == "num") a.asInstanceOf[BigDecimal].compare(b.asInstanceOf[BigDecimal])
+    else org.apache.spark.unsafe.types.UTF8String.fromString(a.toString)
+      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b.toString))
+
+  /** Pairs of key ranges (index-dialect bounds of key tag `tag`) that
+    * overlap in [[keyOrder]] — 0 on any layout the key→file router can
+    * serve exactly. */
+  private[graft] def overlappingRanges(tag: String,
+      ranges: Iterable[(Any, Any, Long)]): Int = {
+    val cmp = keyOrder(tag) _
+    val sorted = ranges.toArray.sortWith((a, b) => cmp(a._1, b._1) < 0)
+    // each range against every later one it reaches: sorted by lo, so the
+    // scan stops at the first later range starting past this one's hi
+    sorted.indices.map { i =>
+      var j = i + 1
+      while (j < sorted.length && cmp(sorted(j)._1, sorted(i)._2) <= 0) j += 1
+      j - i - 1
+    }.sum
+  }
+
+  /**
+   * The no-index fallback: `plan` over the whole table, staged and swapped
+   * in as a fresh indexed layout. It reads the dir by PLAIN listing — only
+   * safe when no manifest discipline ever ran here, which [[mergeIndexed]]
+   * checks first: index versions present but unusable for the key column
+   * mean a manifest table (whose on-disk strays a plain listing would read
+   * as duplicate rows) addressed by the wrong key, or a corrupted index.
+   */
+  private def fullRewrite(spark: SparkSession, path: String, keyCol: String)(
+      plan: DataFrame => DataFrame): Unit = {
+    import org.apache.spark.sql.graft.GraftIndex
+    val dirPath = new org.apache.hadoop.fs.Path(path)
+    val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
+    // FENCE the dir swap (round 15): unlike the indexed path, this
+    // fallback's commit point is a rename PAIR, which create-exclusive
+    // on an index version cannot arbitrate. A .swapclaim marker next to
+    // the table dir is claimed create-exclusive (verify-after-write on
+    // PUT stores — GraftIndex.writeCommitFile) BEFORE staging, and
+    // ownership is re-verified just before the renames: two racing
+    // full-rewrite maintainers produce exactly one winner, the loser
+    // throws GraftConcurrentCommitException having applied nothing. A
+    // crashed attempt leaves the claim behind, fencing further
+    // full-rewrites loudly until fsckIndexed sweeps it (its
+    // no-writer-in-flight contract makes the sweep safe).
+    val swapClaim = new org.apache.hadoop.fs.Path(path + SwapClaimSuffix)
+    val nonce = java.util.UUID.randomUUID().toString
+    try GraftIndex.writeCommitFile(fs, swapClaim, nonce.getBytes("UTF-8"))
+    catch {
+      case e: org.apache.spark.sql.graft.GraftConcurrentCommitException =>
+        throw new org.apache.spark.sql.graft.GraftConcurrentCommitException(
+          s"mergeIndexed: full-rewrite swap claim for $path is held — a " +
+            "concurrent maintainer is mid-rewrite, or a crashed rewrite " +
+            "left debris (run KeyedStore.fsckIndexed, then retry); " +
+            "nothing was applied", e)
+    }
+    def claimStillOurs(): Boolean = scala.util.Try {
+      val in = fs.open(swapClaim)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim == nonce
+      finally in.close()
+    }.getOrElse(false)
+    val stamp = System.currentTimeMillis()
+    // per-attempt staging name: two racing maintainers must never write
+    // into the SAME staging dir (they would corrupt each other's staged
+    // bytes before the commit fence can even arbitrate)
+    val staging = path + "__staging-" + java.util.UUID.randomUUID().toString.take(8)
+    val stagingPath = new org.apache.hadoop.fs.Path(staging)
+    try {
+      // plan construction INSIDE the try: an analysis error (missing key
+      // column, mismatched schema) must release the claim like any other
+      // surviving failure, not leak it and fence the table until fsck
+      val merged = plan(read(spark, path))
+      // stage through the graft write so the new layout arrives WITH its
+      // manifest index; a _COMMITTED marker records job success so fsck can
+      // tell a complete staging from a dead one
+      merged.repartitionByRange(col(keyCol)).sortWithinPartitions(keyCol)
+        .write.format("graft").option("key", keyCol).mode("overwrite").save(staging)
+      fs.create(new org.apache.hadoop.fs.Path(stagingPath, CommittedMarker), true).close()
+      // stolen-claim re-check (PUT stores): the staging phase separates
+      // the claim from the swap — a racer whose claim PUT landed inside
+      // the claim-verify window is caught here, before any rename
+      if (GraftIndex.verifyAfterWrite(fs) && !claimStillOurs()) {
+        fs.delete(stagingPath, true)
+        throw new org.apache.spark.sql.graft.GraftConcurrentCommitException(
+          s"mergeIndexed: swap claim for $path was overwritten by a " +
+            "concurrent maintainer mid-staging — fenced off, nothing " +
+            "applied (serialize the maintainers and retry)")
+      }
+      // dir swap with a backup instead of delete-then-rename: a crash
+      // between the renames leaves the table LOUDLY missing (both copies on
+      // disk), healed by fsckIndexed — never silently lost
+      val oldPath = new org.apache.hadoop.fs.Path(path + BackupSuffix + stamp)
+      if (fs.exists(dirPath) && !fs.rename(dirPath, oldPath))
+        throw new java.io.IOException(s"mergeIndexed: cannot back up $path")
+      if (!fs.rename(stagingPath, dirPath))
+        throw new java.io.IOException(s"mergeIndexed: cannot swap in $staging")
+      fs.delete(new org.apache.hadoop.fs.Path(dirPath, CommittedMarker), false)
+      fs.delete(oldPath, true)
+      fs.delete(swapClaim, false)
+    } catch {
+      case t: Throwable =>
+        // a SURVIVING loser releases its claim (a crash leaves it for
+        // fsck); never touch a claim a racer now owns
+        if (claimStillOurs()) fs.delete(swapClaim, false)
+        throw t
+    }
+  }
+
   /**
    * The key→file router column for a sorted, non-overlapping range table —
    * a native codegen'd binary search ([[org.apache.spark.sql.graft.RangeBucketSearch]])
@@ -377,11 +509,12 @@ object KeyedStore {
    * index today, i.e. unreachable from any indexed layout). Float bounds
    * parse back to FLOAT first and widen — parsing the decimal string
    * straight to double would land beside the widened float value and
-   * mis-route boundary keys.
+   * mis-route boundary keys. With `floor`, keys in no range route to their
+   * gap's code `-(gap + 1)` instead of -1 (see RangeBucketSearch).
    */
   private[graft] def routerColumn(spark: SparkSession, keyDt: DataType,
       keyCol: String, ranges: Array[(String, (Any, Any, Long))],
-      isNum: Boolean): Column = {
+      isNum: Boolean, floor: Boolean = false): Column = {
     import org.apache.spark.sql.graft.{Bridge, RangeBucketSearchDouble, RangeBucketSearchLong, RangeBucketSearchString}
     def bd(v: Any): BigDecimal = v.asInstanceOf[BigDecimal]
     keyDt match {
@@ -389,30 +522,30 @@ object KeyedStore {
         Bridge.column(RangeBucketSearchLong(
           Bridge.expression(col(keyCol).cast("long")),
           ranges.map(r => bd(r._2._1).toLong),
-          ranges.map(r => bd(r._2._2).toLong)))
+          ranges.map(r => bd(r._2._2).toLong), floor))
       case DoubleType =>
         Bridge.column(RangeBucketSearchDouble(
           Bridge.expression(col(keyCol)),
           ranges.map(r => bd(r._2._1).toDouble),
-          ranges.map(r => bd(r._2._2).toDouble)))
+          ranges.map(r => bd(r._2._2).toDouble), floor))
       case FloatType =>
         Bridge.column(RangeBucketSearchDouble(
           Bridge.expression(col(keyCol).cast("double")),
           ranges.map(r => bd(r._2._1).toFloat.toDouble),
-          ranges.map(r => bd(r._2._2).toFloat.toDouble)))
+          ranges.map(r => bd(r._2._2).toFloat.toDouble), floor))
       case StringType =>
         Bridge.column(RangeBucketSearchString(
           Bridge.expression(col(keyCol)),
           ranges.map(r => org.apache.spark.unsafe.types.UTF8String
             .fromString(r._2._1.toString)),
           ranges.map(r => org.apache.spark.unsafe.types.UTF8String
-            .fromString(r._2._2.toString))))
+            .fromString(r._2._2.toString)), floor))
       case _: DecimalType =>
         import org.apache.spark.sql.graft.RangeBucketSearchDecimal
         Bridge.column(RangeBucketSearchDecimal(
           Bridge.expression(col(keyCol)),
           ranges.map(r => org.apache.spark.sql.types.Decimal(bd(r._2._1))),
-          ranges.map(r => org.apache.spark.sql.types.Decimal(bd(r._2._2)))))
+          ranges.map(r => org.apache.spark.sql.types.Decimal(bd(r._2._2))), floor))
       case _ =>
         val bcLos = spark.sparkContext.broadcast(ranges.map(_._2._1))
         val bcHis = spark.sparkContext.broadcast(ranges.map(_._2._2))
@@ -428,13 +561,17 @@ object KeyedStore {
               val mid = (lo + hi) >>> 1
               if (le(bcLos.value(mid), k)) { found = mid; lo = mid + 1 } else hi = mid - 1
             }
-            if (found >= 0 && le(k, bcHis.value(found))) found else -1
+            if (found >= 0 && le(k, bcHis.value(found))) found
+            else if (floor) -(found + 2) else -1
           }
         }
         fileOf(col(keyCol).cast("string"))
     }
   }
 
+  /** Marker written into a completed staging dir by [[mergeIndexed]]'s
+    * full-rewrite fallback so [[fsckIndexed]] can roll an interrupted dir
+    * swap FORWARD (complete staging) instead of back (backup restore). */
   private[graft] val CommittedMarker = "_GRAFT_COMMITTED"
   private[graft] val BackupSuffix = "__old"
   /** Sibling marker fencing [[mergeIndexed]]'s full-rewrite dir swap —
@@ -451,7 +588,7 @@ object KeyedStore {
    * proven). Each merge group is one tiny job over just its files — at scale,
    * groups are independent and can run as parallel jobs. A full
    * [[writeIndexed]] rewrite is the MAJOR compaction (also reclaims
-   * dropped-column bytes and re-tightens ranges loosened by gap inserts).
+   * dropped-column bytes and rebalances file sizes).
    * Returns the number of groups merged.
    */
   def compact(spark: SparkSession, path: String, keyCol: String = "key",
@@ -522,8 +659,9 @@ object KeyedStore {
     * legacy v1 index (upgraded by the next mutation, not damage). */
   final case class IndexedFsckStat(path: String, healedSwap: Boolean,
       sweptStrays: Int, sweptDirs: Int, sweptTmpFiles: Int,
-      missingFiles: Int, advisory: Boolean, tableExists: Boolean = true) {
-    def ok: Boolean = tableExists && missingFiles == 0
+      missingFiles: Int, advisory: Boolean, tableExists: Boolean = true,
+      overlappingRanges: Int = 0) {
+    def ok: Boolean = tableExists && missingFiles == 0 && overlappingRanges == 0
   }
 
   /**
@@ -542,6 +680,9 @@ object KeyedStore {
    *    live).
    *  - Index-named data files that are GONE → reported, never healed
    *    silently.
+   *  - Pairs of live files whose key ranges OVERLAP → reported (the
+   *    key→file router assumes disjoint ranges, so a later keyed mutation
+   *    could duplicate a row there); a [[writeIndexed]] rebuild heals it.
    *
    * Single-maintainer op like every mutation verb.
    */
@@ -621,7 +762,8 @@ object KeyedStore {
     // completed staging, no backup) is the worst state there is — never ok
     IndexedFsckStat(path, healed, strays, deadDirs.length, tmps.length + torn,
       missing, advisory = ix.exists(!_.manifest),
-      tableExists = fs.exists(dirPath))
+      tableExists = fs.exists(dirPath),
+      overlappingRanges = ix.map(i => overlappingRanges(i.keyTag, i.ranges.values)).getOrElse(0))
   }
 
   /** Reclaim disk on a [[writeIndexed]] layout between mutations: with
@@ -695,6 +837,14 @@ object KeyedStore {
   final case class OpsResult(numDeletes: Long, numPuts: Long, numIncrements: Long) {
     def +(o: OpsResult): OpsResult =
       OpsResult(numDeletes + o.numDeletes, numPuts + o.numPuts, numIncrements + o.numIncrements)
+  }
+
+  /** The result type of SQL `sum` over `dt`. */
+  private def sumType(dt: DataType): DataType = dt match {
+    case d: DecimalType =>
+      DecimalType(math.min(d.precision + 10, DecimalType.MAX_PRECISION), d.scale)
+    case ByteType | ShortType | IntegerType | LongType => LongType
+    case _ => DoubleType
   }
 
   private def isMap(df: DataFrame, c: String): Boolean =
@@ -813,24 +963,27 @@ object KeyedStore {
    */
   def increment(current: DataFrame, deltas: DataFrame, keyCol: String = "key"): DataFrame = {
     val deltaCols = deltas.columns.filter(_ != keyCol)
-    // Pre-aggregate the batch: map-side combine handles hot keys before the shuffle.
     val (mapCols, scalarCols) = deltaCols.partition(c => isMap(deltas, c))
-    var summed: DataFrame =
-      if (scalarCols.nonEmpty)
-        deltas.groupBy(col(keyCol)).agg(
-          sum(col(scalarCols.head)).as(scalarCols.head),
-          scalarCols.tail.map(c => sum(col(c)).as(c)).toIndexedSeq: _*)
-      else deltas.select(col(keyCol)).distinct()
-    mapCols.foreach { mc =>
-      val vt = deltas.schema(mc).dataType.asInstanceOf[MapType].valueType
-      val perKey = deltas
-        .select(col(keyCol), explode_outer(col(mc)).as(Seq("__q", "__v")))
-        .groupBy(col(keyCol), col("__q")).agg(sum(col("__v")).as("__v"))
-        .groupBy(col(keyCol))
-        .agg(map_from_entries(collect_list(when(col("__q").isNotNull,
-          struct(col("__q"), col("__v").cast(vt))))).as(mc))
-      summed = summed.join(perKey, Seq(keyCol), "left_outer")
-    }
+    // Pre-aggregate the batch in ONE groupBy (map-side combine handles hot
+    // keys before the shuffle): scalars sum; each map column collects its
+    // maps, folded per qualifier in SUM's result type — a qualifier sums
+    // its non-null values and is null only when every value is null
+    val aggs = scalarCols.map(c => sum(col(c)).as(c)) ++
+      mapCols.map(c => collect_list(col(c)).as(c))
+    val grouped =
+      if (aggs.isEmpty) deltas.select(col(keyCol)).distinct()
+      else deltas.groupBy(col(keyCol)).agg(aggs.head, aggs.tail.toIndexedSeq: _*)
+    val summed = grouped.select(col(keyCol) +: scalarCols.map(col).toIndexedSeq ++:
+      mapCols.map { mc =>
+        val mt = deltas.schema(mc).dataType.asInstanceOf[MapType]
+        val st = MapType(mt.keyType, sumType(mt.valueType))
+        val empty = map_from_arrays(array().cast(ArrayType(mt.keyType)),
+          array().cast(ArrayType(st.valueType)))
+        aggregate(col(mc), empty, (acc, m) => map_zip_with(acc, m.cast(st),
+          (_, a, b) => when(a.isNull, b).when(b.isNull, a)
+            .otherwise((a + b).cast(st.valueType))))
+          .cast(MapType(mt.keyType, mt.valueType, valueContainsNull = true)).as(mc)
+      }.toIndexedSeq: _*)
     val o = current.alias("o")
     val n = summed.alias("n")
     val joined = o.join(n, col(s"o.$keyCol") === col(s"n.$keyCol"), "full_outer")

@@ -9,14 +9,18 @@ import org.apache.spark.sql.DataFrame
  * reference: src/main/scala/com/gravity/hbase/schema/OpBase.scala:22-114; tests
  * ExampleSchema.scala:383-410, WebCrawlSchemaTest.scala:205-231).
  *
- * Ops accumulate as DataFrames; `execute(current)` applies them in the reference's
- * documented precedence **deletes → puts → increments** (README.markdown:299) and
- * returns the merged table plus an [[KeyedStore.OpsResult]] accounting. `++` merges
- * two batches (the reference's `+` combinator).
+ * Ops accumulate as DataFrames and apply in the reference's documented
+ * precedence **deletes → puts → increments** (README.markdown:299). `execute`
+ * merges them into an in-memory table; `executeIndexed` applies the whole
+ * batch to an indexed store path as ONE mutation — one routed pass over every
+ * op's keys, one merge plan, one write and one index commit — as HBase routes
+ * an op chain once to the regions owning its keys (reference
+ * HbaseTable.scala:373-423). `++` merges two batches (the reference's `+`
+ * combinator).
  *
- * Everything stays distributed: a batch is a set of DataFrames, the merge is a set
- * of key-partitioned joins. Empty puts are skipped, as in the reference
- * (OpBase.scala:69).
+ * Everything stays distributed: a batch is a set of DataFrames, the merge is a
+ * set of key-partitioned joins. An empty put routes nowhere and counts 0, as
+ * the reference skips it (OpBase.scala:69) — without a job to find out.
  */
 final class MutationBatch private (
     private val deletes: mutable.Buffer[DataFrame],
@@ -26,10 +30,7 @@ final class MutationBatch private (
     private val increments: mutable.Buffer[DataFrame],
     val keyCol: String) {
 
-  def put(rows: DataFrame): MutationBatch = {
-    if (!rows.isEmpty) puts += rows // empty put skipped (reference OpBase.scala:69)
-    this
-  }
+  def put(rows: DataFrame): MutationBatch = { puts += rows; this }
 
   def delete(keys: DataFrame): MutationBatch = { deletes += keys; this }
 
@@ -53,52 +54,50 @@ final class MutationBatch private (
     this
   }
 
-  /** Apply the batch: deletes → puts → increments. Returns (merged, accounting). */
-  def execute(current: DataFrame): (DataFrame, KeyedStore.OpsResult) = {
+  private def deleteKeys: Seq[DataFrame] =
+    deletes.toSeq ++ familyDeletes.map(_._1) ++ qualifierDeletes.map(_._1)
+
+  /** The batch's merge: deletes → puts → increments over `current`. */
+  private def plan(current: DataFrame): DataFrame = {
     var df = current
-    var nDel = 0L
-    deletes.foreach { k => nDel += k.count(); df = KeyedStore.deleteRows(df, k, keyCol) }
-    familyDeletes.foreach { case (k, fam) =>
-      nDel += k.count(); df = KeyedStore.deleteFamily(df, k, fam, keyCol)
-    }
+    deletes.foreach(k => df = KeyedStore.deleteRows(df, k, keyCol))
+    familyDeletes.foreach { case (k, fam) => df = KeyedStore.deleteFamily(df, k, fam, keyCol) }
     qualifierDeletes.foreach { case (k, fam, qs) =>
-      nDel += k.count(); df = KeyedStore.deleteQualifiers(df, k, fam, qs, keyCol)
+      df = KeyedStore.deleteQualifiers(df, k, fam, qs, keyCol)
     }
-    var nPut = 0L
-    puts.foreach { p => nPut += p.count(); df = KeyedStore.upsert(df, p, keyCol) }
-    var nInc = 0L
-    increments.foreach { d => nInc += d.count(); df = KeyedStore.increment(df, d, keyCol) }
-    (df, KeyedStore.OpsResult(nDel, nPut, nInc))
+    puts.foreach(p => df = KeyedStore.upsert(df, p, keyCol))
+    increments.foreach(d => df = KeyedStore.increment(df, d, keyCol))
+    df
   }
 
+  /** Apply the batch: deletes → puts → increments. Returns (merged, accounting). */
+  def execute(current: DataFrame): (DataFrame, KeyedStore.OpsResult) =
+    (plan(current), KeyedStore.OpsResult(deleteKeys.map(_.count()).sum,
+      puts.map(_.count()).sum, increments.map(_.count()).sum))
+
   /**
-   * Apply the batch against an INDEXED store path (written by
-   * `KeyedStore.writeIndexed`) with index-pruned rewrites: each op in the
-   * deletes → puts → increments precedence touches only the files whose key
-   * range contains its batch keys — the region-routed form of [[execute]].
-   * The table lives on disk, so only the accounting is returned.
+   * Apply the batch to an INDEXED store path (written by
+   * `KeyedStore.writeIndexed`) as one mutation — the region-routed form of
+   * [[execute]], with the same result. One routed pass over the union of
+   * every op's keys finds the files whose key range holds a batch key, the
+   * gaps that receive inserts, and the per-kind row counts; only those
+   * files are read, merged under [[execute]]'s plan and rewritten, and one
+   * fenced index commit publishes the result (see `KeyedStore.mergeIndexed`
+   * for the output-file rule and the crash contract).
+   *
+   * A crash or a lost commit race leaves the pre-batch snapshot whole, and
+   * the undo window (`KeyedStore.readKeyedPrevious`) holds the pre-batch
+   * snapshot too — never a half-applied batch. The table lives on disk, so
+   * only the accounting is returned.
    */
   def executeIndexed(spark: org.apache.spark.sql.SparkSession,
       path: String): KeyedStore.OpsResult = {
-    var nDel = 0L
-    deletes.foreach { k => nDel += k.count(); KeyedStore.deleteIndexed(spark, path, k, keyCol) }
-    familyDeletes.foreach { case (k, fam) =>
-      nDel += k.count()
-      KeyedStore.mergeIndexed(spark, path, k, keyCol, outsideKeysInsert = false)(
-        KeyedStore.deleteFamily(_, _, fam, keyCol))
-    }
-    qualifierDeletes.foreach { case (k, fam, qs) =>
-      nDel += k.count()
-      KeyedStore.mergeIndexed(spark, path, k, keyCol, outsideKeysInsert = false)(
-        KeyedStore.deleteQualifiers(_, _, fam, qs, keyCol))
-    }
-    var nPut = 0L
-    puts.foreach { p => nPut += p.count(); KeyedStore.upsertIndexed(spark, path, p, keyCol) }
-    var nInc = 0L
-    increments.foreach { d =>
-      nInc += d.count(); KeyedStore.incrementIndexed(spark, path, d, keyCol)
-    }
-    KeyedStore.OpsResult(nDel, nPut, nInc)
+    import KeyedStore.{DeleteKind, IncrementKind, PutKind}
+    val keys = deleteKeys.map(k => k -> DeleteKind) ++
+      puts.map(p => p.select(keyCol) -> PutKind) ++
+      increments.map(d => d.select(keyCol) -> IncrementKind)
+    val n = KeyedStore.mergeIndexed(spark, path, keyCol, keys)(plan)
+    KeyedStore.OpsResult(n(DeleteKind), n(PutKind), n(IncrementKind))
   }
 }
 

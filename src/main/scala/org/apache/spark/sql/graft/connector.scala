@@ -69,8 +69,19 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft"
   override def supportsExternalMetadata(): Boolean = true
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    SparkSession.active.read.parquet(GraftDataSource.pathOf(options)).schema
+  /** The schema from the footer of a file of the as-of (else the live)
+    * index — no Spark job, no directory listing; a dir without an index
+    * falls back to parquet schema inference. An as-of version retired
+    * meanwhile takes the live schema and its scan then fails loudly. */
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val spark = SparkSession.active
+    val path = new Path(GraftDataSource.pathOf(options))
+    val conf = spark.sessionState.newHadoopConf()
+    val version = Option(options.get("graft.asofVersion")).map(_.toLong)
+    version.flatMap(v => GraftIndex.liveSchema(path, conf, Some(v)))
+      .orElse(GraftIndex.liveSchema(path, conf))
+      .getOrElse(spark.read.parquet(path.toString).schema)
+  }
 
   override def getTable(tableSchema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
@@ -985,6 +996,32 @@ object GraftIndex {
       nullKeyed.map(r => nameOf(r) -> r.getLong(3)).toMap)
   }
 
+  /** Spark's row-metadata footer key: the writing schema as JSON. */
+  private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The table schema from the footer of one data file that the live index
+    * (or retained `version`) names: the row-metadata JSON every Spark
+    * parquet writer records — the graft write path included — made
+    * nullable as a file-source read makes it. One footer read on the
+    * driver, no Spark job. None without an index, or when that file has no
+    * such metadata. */
+  def liveSchema(dir: Path, conf: Configuration,
+      version: Option[Long] = None): Option[StructType] = {
+    val ix = version match {
+      case Some(v) => readAllVersioned(dir, conf).find(_._1 == v).map(_._2)
+      case None => read(dir, conf)
+    }
+    ix.flatMap(_.files.toSeq.sorted.headOption).flatMap { name =>
+      scala.util.Try {
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(dir, name), conf))
+        try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey)
+        finally reader.close()
+      }.toOption.flatMap(Option(_))
+        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+        .collect { case st: StructType => st.asNullable }
+    }
+  }
+
   /** The on-disk index version files of a table dir, ascending by version
     * (the legacy un-suffixed file is version 0). */
   def versionFiles(fs: org.apache.hadoop.fs.FileSystem,
@@ -1282,9 +1319,18 @@ object GraftIndex {
     * retained past snapshot by it. */
   def readAllVersioned(dir: Path, conf: Configuration): Seq[(Long, GraftIndex)] = {
     val fs = dir.getFileSystem(conf)
-    versionFiles(fs, dir).reverse.flatMap { case (v, p) =>
-      scala.util.Try(parse(fs, p)).toOption.flatten.map(v -> _)
+    // a listed version that is GONE by the time it is read was pruned by a
+    // concurrent commit: list again rather than report a window one step
+    // shallower than the store holds (a torn version still reads as absent)
+    def attempt(left: Int): Seq[(Long, GraftIndex)] = {
+      val read = versionFiles(fs, dir).reverse.map { case (v, p) =>
+        (v, p, scala.util.Try(parse(fs, p)).toOption.flatten)
+      }
+      if (left > 0 && read.exists { case (_, p, ix) => ix.isEmpty && !fs.exists(p) })
+        attempt(left - 1)
+      else read.collect { case (v, _, Some(ix)) => v -> ix }
     }
+    attempt(3)
   }
 
   // fenced-commit trailer marker: '#' is never produced by URLEncoder, so a

@@ -221,141 +221,106 @@ case class HammingDistance64(left: Expression, right: Expression)
  * writeIndexed layout invariant), so the binary search routes exactly —
  * exactness is load-bearing here: a boundary mis-route would upsert a key
  * into a file that does not hold its current row, leaving a duplicate.
+ *
+ * FLOOR mode also places the keys that fall in no range: such a key in gap
+ * `g` (gap 0 below the first range, gap `i` between ranges `i-1` and `i`,
+ * gap `n` above the last) routes to `-(g + 1)`. Null keys sort first, so
+ * they route to gap 0 (-1) in both modes.
  */
 abstract class RangeBucketSearch extends UnaryExpression {
+  def floor: Boolean
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = false
-}
 
-case class RangeBucketSearchLong(child: Expression,
-    los: Array[Long], his: Array[Long]) extends RangeBucketSearch {
-  override def prettyName: String = "range_bucket_long"
+  protected def size: Int
+  /** `los(i) <= k` and `k <= his(i)` for the interpreted path. */
+  protected def loLe(i: Int, k: Any): Boolean
+  protected def leHi(k: Any, i: Int): Boolean
+  /** Java type of the key and of one bound, and the bound arrays' class. */
+  protected def javaType: String
+  protected def arrayClass: String
+  protected def bounds: (AnyRef, AnyRef)
+  /** Java expression for `a <= b` over two values of [[javaType]]. */
+  protected def leCode(a: String, b: String): String
+
+  private def miss(found: Int): Int = if (floor) -(found + 2) else -1
 
   override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) -1
+    val k = child.eval(input)
+    if (k == null) -1
     else {
-      val k = v.asInstanceOf[Long]
-      var lo = 0; var hi = los.length - 1; var found = -1
+      var lo = 0; var hi = size - 1; var found = -1
       while (lo <= hi) {
         val mid = (lo + hi) >>> 1
-        if (los(mid) <= k) { found = mid; lo = mid + 1 } else hi = mid - 1
+        if (loLe(mid, k)) { found = mid; lo = mid + 1 } else hi = mid - 1
       }
-      if (found >= 0 && k <= his(found)) found else -1
+      if (found >= 0 && leHi(k, found)) found else miss(found)
     }
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val c = child.genCode(ctx)
-    val losRef = ctx.addReferenceObj("los", los, "long[]")
-    val hisRef = ctx.addReferenceObj("his", his, "long[]")
+    val losRef = ctx.addReferenceObj("los", bounds._1, arrayClass)
+    val hisRef = ctx.addReferenceObj("his", bounds._2, arrayClass)
     val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi")
     val mid = ctx.freshName("mid"); val found = ctx.freshName("found")
     val k = ctx.freshName("k")
+    val missed = if (floor) s"-($found + 2)" else "-1"
     ev.copy(code = code"""
       ${c.code}
       int ${ev.value} = -1;
       if (!${c.isNull}) {
-        long $k = ${c.value};
+        $javaType $k = ${c.value};
         int $lo = 0; int $hi = $losRef.length - 1; int $found = -1;
         while ($lo <= $hi) {
           int $mid = ($lo + $hi) >>> 1;
-          if ($losRef[$mid] <= $k) { $found = $mid; $lo = $mid + 1; }
+          if (${leCode(s"$losRef[$mid]", k)}) { $found = $mid; $lo = $mid + 1; }
           else $hi = $mid - 1;
         }
-        if ($found >= 0 && $k <= $hisRef[$found]) ${ev.value} = $found;
+        ${ev.value} = ($found >= 0 && ${leCode(k, s"$hisRef[$found]")}) ? $found : $missed;
       }""", isNull = FalseLiteral)
   }
+}
 
+case class RangeBucketSearchLong(child: Expression,
+    los: Array[Long], his: Array[Long], floor: Boolean = false) extends RangeBucketSearch {
+  override def prettyName: String = "range_bucket_long"
+  protected def size: Int = los.length
+  protected def loLe(i: Int, k: Any): Boolean = los(i) <= k.asInstanceOf[Long]
+  protected def leHi(k: Any, i: Int): Boolean = k.asInstanceOf[Long] <= his(i)
+  protected def javaType: String = "long"
+  protected def arrayClass: String = "long[]"
+  protected def bounds: (AnyRef, AnyRef) = (los, his)
+  protected def leCode(a: String, b: String): String = s"$a <= $b"
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 case class RangeBucketSearchDouble(child: Expression,
-    los: Array[Double], his: Array[Double]) extends RangeBucketSearch {
+    los: Array[Double], his: Array[Double], floor: Boolean = false) extends RangeBucketSearch {
   override def prettyName: String = "range_bucket_double"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) -1
-    else {
-      val k = v.asInstanceOf[Double]
-      var lo = 0; var hi = los.length - 1; var found = -1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        if (los(mid) <= k) { found = mid; lo = mid + 1 } else hi = mid - 1
-      }
-      if (found >= 0 && k <= his(found)) found else -1
-    }
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val losRef = ctx.addReferenceObj("los", los, "double[]")
-    val hisRef = ctx.addReferenceObj("his", his, "double[]")
-    val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi")
-    val mid = ctx.freshName("mid"); val found = ctx.freshName("found")
-    val k = ctx.freshName("k")
-    ev.copy(code = code"""
-      ${c.code}
-      int ${ev.value} = -1;
-      if (!${c.isNull}) {
-        double $k = ${c.value};
-        int $lo = 0; int $hi = $losRef.length - 1; int $found = -1;
-        while ($lo <= $hi) {
-          int $mid = ($lo + $hi) >>> 1;
-          if ($losRef[$mid] <= $k) { $found = $mid; $lo = $mid + 1; }
-          else $hi = $mid - 1;
-        }
-        if ($found >= 0 && $k <= $hisRef[$found]) ${ev.value} = $found;
-      }""", isNull = FalseLiteral)
-  }
-
+  protected def size: Int = los.length
+  protected def loLe(i: Int, k: Any): Boolean = los(i) <= k.asInstanceOf[Double]
+  protected def leHi(k: Any, i: Int): Boolean = k.asInstanceOf[Double] <= his(i)
+  protected def javaType: String = "double"
+  protected def arrayClass: String = "double[]"
+  protected def bounds: (AnyRef, AnyRef) = (los, his)
+  protected def leCode(a: String, b: String): String = s"$a <= $b"
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
 case class RangeBucketSearchString(child: Expression,
-    los: Array[UTF8String], his: Array[UTF8String]) extends RangeBucketSearch {
+    los: Array[UTF8String], his: Array[UTF8String], floor: Boolean = false)
+    extends RangeBucketSearch {
   override def prettyName: String = "range_bucket_string"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) -1
-    else {
-      val k = v.asInstanceOf[UTF8String]
-      var lo = 0; var hi = los.length - 1; var found = -1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        if (los(mid).compareTo(k) <= 0) { found = mid; lo = mid + 1 } else hi = mid - 1
-      }
-      if (found >= 0 && k.compareTo(his(found)) <= 0) found else -1
-    }
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = "org.apache.spark.unsafe.types.UTF8String[]"
-    val losRef = ctx.addReferenceObj("los", los, cls)
-    val hisRef = ctx.addReferenceObj("his", his, cls)
-    val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi")
-    val mid = ctx.freshName("mid"); val found = ctx.freshName("found")
-    val k = ctx.freshName("k")
-    ev.copy(code = code"""
-      ${c.code}
-      int ${ev.value} = -1;
-      if (!${c.isNull}) {
-        org.apache.spark.unsafe.types.UTF8String $k = ${c.value};
-        int $lo = 0; int $hi = $losRef.length - 1; int $found = -1;
-        while ($lo <= $hi) {
-          int $mid = ($lo + $hi) >>> 1;
-          if ($losRef[$mid].compareTo($k) <= 0) { $found = $mid; $lo = $mid + 1; }
-          else $hi = $mid - 1;
-        }
-        if ($found >= 0 && $k.compareTo($hisRef[$found]) <= 0) ${ev.value} = $found;
-      }""", isNull = FalseLiteral)
-  }
-
+  protected def size: Int = los.length
+  protected def loLe(i: Int, k: Any): Boolean = los(i).compareTo(k.asInstanceOf[UTF8String]) <= 0
+  protected def leHi(k: Any, i: Int): Boolean = k.asInstanceOf[UTF8String].compareTo(his(i)) <= 0
+  protected def javaType: String = "org.apache.spark.unsafe.types.UTF8String"
+  protected def arrayClass: String = "org.apache.spark.unsafe.types.UTF8String[]"
+  protected def bounds: (AnyRef, AnyRef) = (los, his)
+  protected def leCode(a: String, b: String): String = s"$a.compareTo($b) <= 0"
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -365,46 +330,16 @@ case class RangeBucketSearchString(child: Expression,
   * values; comparison is `Decimal.compareTo` (BigDecimal-exact across
   * scales), in the key's own value space like every sibling variant. */
 case class RangeBucketSearchDecimal(child: Expression,
-    los: Array[Decimal], his: Array[Decimal]) extends RangeBucketSearch {
+    los: Array[Decimal], his: Array[Decimal], floor: Boolean = false)
+    extends RangeBucketSearch {
   override def prettyName: String = "range_bucket_decimal"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) -1
-    else {
-      val k = v.asInstanceOf[Decimal]
-      var lo = 0; var hi = los.length - 1; var found = -1
-      while (lo <= hi) {
-        val mid = (lo + hi) >>> 1
-        if (los(mid).compareTo(k) <= 0) { found = mid; lo = mid + 1 } else hi = mid - 1
-      }
-      if (found >= 0 && k.compareTo(his(found)) <= 0) found else -1
-    }
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val cls = "org.apache.spark.sql.types.Decimal[]"
-    val losRef = ctx.addReferenceObj("los", los, cls)
-    val hisRef = ctx.addReferenceObj("his", his, cls)
-    val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi")
-    val mid = ctx.freshName("mid"); val found = ctx.freshName("found")
-    val k = ctx.freshName("k")
-    ev.copy(code = code"""
-      ${c.code}
-      int ${ev.value} = -1;
-      if (!${c.isNull}) {
-        org.apache.spark.sql.types.Decimal $k = ${c.value};
-        int $lo = 0; int $hi = $losRef.length - 1; int $found = -1;
-        while ($lo <= $hi) {
-          int $mid = ($lo + $hi) >>> 1;
-          if ($losRef[$mid].compareTo($k) <= 0) { $found = $mid; $lo = $mid + 1; }
-          else $hi = $mid - 1;
-        }
-        if ($found >= 0 && $k.compareTo($hisRef[$found]) <= 0) ${ev.value} = $found;
-      }""", isNull = FalseLiteral)
-  }
-
+  protected def size: Int = los.length
+  protected def loLe(i: Int, k: Any): Boolean = los(i).compareTo(k.asInstanceOf[Decimal]) <= 0
+  protected def leHi(k: Any, i: Int): Boolean = k.asInstanceOf[Decimal].compareTo(his(i)) <= 0
+  protected def javaType: String = "org.apache.spark.sql.types.Decimal"
+  protected def arrayClass: String = "org.apache.spark.sql.types.Decimal[]"
+  protected def bounds: (AnyRef, AnyRef) = (los, his)
+  protected def leCode(a: String, b: String): String = s"$a.compareTo($b) <= 0"
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }

@@ -227,10 +227,10 @@ class ConnectorSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(5L -> (5L % 7 + 100L), 700L -> (700L % 7 + 200L), 95000L -> 1L), got)
     assert(KeyedStore.readKeyed(spark, dir).count() == 791)
-    // the refreshed index still prunes; the gap-spanning rewritten file may
-    // add one overlap (the documented loosening) until a compaction
+    // the refreshed index still prunes to exactly one file: no rewritten
+    // file spans another, and the new key got a file of its own
     val desc = graftScan(KeyedStore.readKeyed(spark, dir).where(col("key") === 400))
-    assert(desc.contains("index=sidecar") && filesOf(desc)._1 <= 2, desc)
+    assert(desc.contains("index=sidecar") && filesOf(desc)._1 == 1, desc)
     // compaction (full writeIndexed) restores tight disjoint ranges
     KeyedStore.writeIndexed(KeyedStore.readKeyed(spark, dir), dir + "_c", numRanges = 8)
     val desc2 = graftScan(KeyedStore.readKeyed(spark, dir + "_c").where(col("key") === 400))
