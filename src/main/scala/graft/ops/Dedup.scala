@@ -2226,7 +2226,11 @@ object Dedup {
    * lacks (capping under-mines by contract).
    *
    * Cost: O(|removed| + |touched components|) cluster work + the pairs
-   * rewrite — never O(corpus) cluster work. With `purgePairs = true`
+   * rewrite — never O(corpus) cluster work. It first runs
+   * [[graft.store.KeyedStore.compact]] on the clusters table, which merges
+   * the small files [[appendToClusters]]' new ids open above the last one
+   * (content-neutral: [[readClustersPrevious]] still shows the post-delete
+   * step). With `purgePairs = true`
    * (default) the pair evidence is purged EAGERLY ([[removeFromPairs]] —
    * a full pairs-layout rewrite); `purgePairs = false` takes the LAZY
    * path instead ([[tombstonePairs]]): O(|ids|) on the pairs side, the
@@ -2246,6 +2250,10 @@ object Dedup {
     // readClusters over the very layouts this verb rewrites
     val rm = broadcast(graft.Eager.materialize(
       ids.select(col(ids.columns.head).as("__rm"))))
+    // fold the small files appends leave above the last one first: the
+    // table's file count stays bounded by the appends between takedowns,
+    // and the undo window after this verb still holds its delete step
+    KeyedStore.compact(spark, clustersPath, "doc_id"): Unit
     val stored = KeyedStore.readKeyed(spark, clustersPath, "doc_id")
       .select(col("doc_id"), col("rep"))
     // components containing a removed doc — everything else is untouchable

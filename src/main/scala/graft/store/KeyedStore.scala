@@ -194,11 +194,12 @@ object KeyedStore {
    * the rows each kind was asked to mutate.
    *
    *  1. ROUTE ONCE: one aggregate over the union of every op's keys, routed
-   *     by a floor-mode binary search over the live ranges, collects
+   *     by a binary search over the live ranges, collects
    *     (file or gap, kind) → rows: the affected files, the gaps that
    *     receive inserts, and the per-kind counts.
-   *  2. MERGE ONCE: the affected files are read once, under the schema
-   *     from a live file's footer (no inference job), and `plan` runs once.
+   *  2. MERGE ONCE: the affected files are read once, under a catalog
+   *     table's declared schema or else their footers' schemas merged (no
+   *     inference job), and `plan` runs once.
    *  3. EXACT SLOTS: the driver numbers the output files — one per
    *     affected file; an insert gap next to an affected file joins it (the
    *     lower neighbour first); any other interior gap gets its own file;
@@ -210,7 +211,9 @@ object KeyedStore {
    *  4. GUARD, WRITE AND COMMIT ONCE: if any staged range overlaps another
    *     staged range or an untouched file the staging is deleted and the
    *     mutation fails having applied nothing; otherwise one rename-in,
-   *     one fenced index commit, one stray sweep.
+   *     one fenced index commit, one stray sweep. A table whose live
+   *     ranges already overlap (damage no slot rule can route around) is
+   *     refused before step 1.
    *
    * Crash + reader-concurrency contract (the HBase-durability analogue —
    * reference HbaseTable.scala:373-423 never loses acked region writes):
@@ -233,7 +236,7 @@ object KeyedStore {
    */
   private[store] def mergeIndexed(spark: SparkSession, path: String, keyCol: String,
       keys: Seq[(DataFrame, Int)])(plan: DataFrame => DataFrame): Array[Long] = {
-    import org.apache.spark.sql.graft.GraftIndex
+    import org.apache.spark.sql.graft.{GraftIndex, GraftTableMeta}
     val counts = new Array[Long](3)
     if (keys.isEmpty) return counts
     val hadoopConf = spark.sessionState.newHadoopConf()
@@ -253,6 +256,14 @@ object KeyedStore {
       i.ranges.toArray.sortWith((a, b) => keyOrder(tag)(a._2._1, b._2._1) < 0)
     }.getOrElse(Array.empty)
     val n = ranges.length
+    // the router needs disjoint ranges: a table an older write already left
+    // overlapping is refused before any job, whatever this batch touches
+    val damaged = overlappingRanges(tag, ranges.map(_._2))
+    if (damaged > 0)
+      throw new IllegalStateException(s"mergeIndexed: $path already holds " +
+        s"$damaged pair(s) of overlapping live key ranges, which no indexed " +
+        "mutation can route exactly — nothing applied; KeyedStore.fsckIndexed " +
+        "reports them, and a KeyedStore.writeIndexed rewrite of the table repairs them")
     // the routed pass: (route code, kind) → rows over every op's keys
     def routedPass(key: DataFrame => Column, route: Column): Array[org.apache.spark.sql.Row] = {
       val routed = keys.map { case (k, kind) =>
@@ -271,14 +282,13 @@ object KeyedStore {
       fullRewrite(spark, path, keyCol)(plan)
       return counts
     }
-    val schema = GraftIndex.liveSchema(dirPath, hadoopConf)
-      .getOrElse(read(spark, path).schema)
-    val keyDt = schema(keyCol).dataType
+    val keyDt = GraftIndex.liveSchema(dirPath, hadoopConf)
+      .getOrElse(read(spark, path).schema)(keyCol).dataType
     // key→file-or-gap routing: a codegen'd binary search in the key's OWN
     // value space (see routerColumn — exactness is load-bearing: a boundary
     // mis-route leaves a duplicate row behind)
     def route(c: String): Column =
-      routerColumn(spark, keyDt, c, ranges, isNum, floor = true)
+      routerColumn(spark, keyDt, c, ranges, isNum)
     val routed = routedPass(k => col(k.columns.head).cast(keyDt), route("__k"))
     val affected = routed.map(_.getInt(0)).filter(_ >= 0).toSet
     val gaps = routed.filter(r => r.getInt(0) < 0 && r.getInt(1) != DeleteKind)
@@ -286,6 +296,14 @@ object KeyedStore {
     if (affected.isEmpty && gaps.isEmpty) return counts // nothing to touch
     val slotOf = slotsOf(n, affected, gaps)
     val numSlots = slotOf.max + 1
+    // the rows' schema: a catalog table's declared one, else the affected
+    // files' footers merged (both sides of an added column), else any live
+    // file's — never one file that may predate a column the others carry
+    val schema = GraftTableMeta.read(dirPath, spark).map(_.schema)
+      .orElse(GraftIndex.footerSchema(dirPath, hadoopConf,
+        affected.toSeq.sorted.map(ranges(_)._1)))
+      .orElse(GraftIndex.liveSchema(dirPath, hadoopConf))
+      .getOrElse(read(spark, path).schema)
     val current =
       if (affected.isEmpty)
         spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
@@ -509,12 +527,12 @@ object KeyedStore {
    * index today, i.e. unreachable from any indexed layout). Float bounds
    * parse back to FLOAT first and widen — parsing the decimal string
    * straight to double would land beside the widened float value and
-   * mis-route boundary keys. With `floor`, keys in no range route to their
-   * gap's code `-(gap + 1)` instead of -1 (see RangeBucketSearch).
+   * mis-route boundary keys. A key in no range routes to its gap's code
+   * `-(gap + 1)` (see RangeBucketSearch).
    */
   private[graft] def routerColumn(spark: SparkSession, keyDt: DataType,
       keyCol: String, ranges: Array[(String, (Any, Any, Long))],
-      isNum: Boolean, floor: Boolean = false): Column = {
+      isNum: Boolean): Column = {
     import org.apache.spark.sql.graft.{Bridge, RangeBucketSearchDouble, RangeBucketSearchLong, RangeBucketSearchString}
     def bd(v: Any): BigDecimal = v.asInstanceOf[BigDecimal]
     keyDt match {
@@ -522,30 +540,30 @@ object KeyedStore {
         Bridge.column(RangeBucketSearchLong(
           Bridge.expression(col(keyCol).cast("long")),
           ranges.map(r => bd(r._2._1).toLong),
-          ranges.map(r => bd(r._2._2).toLong), floor))
+          ranges.map(r => bd(r._2._2).toLong)))
       case DoubleType =>
         Bridge.column(RangeBucketSearchDouble(
           Bridge.expression(col(keyCol)),
           ranges.map(r => bd(r._2._1).toDouble),
-          ranges.map(r => bd(r._2._2).toDouble), floor))
+          ranges.map(r => bd(r._2._2).toDouble)))
       case FloatType =>
         Bridge.column(RangeBucketSearchDouble(
           Bridge.expression(col(keyCol).cast("double")),
           ranges.map(r => bd(r._2._1).toFloat.toDouble),
-          ranges.map(r => bd(r._2._2).toFloat.toDouble), floor))
+          ranges.map(r => bd(r._2._2).toFloat.toDouble)))
       case StringType =>
         Bridge.column(RangeBucketSearchString(
           Bridge.expression(col(keyCol)),
           ranges.map(r => org.apache.spark.unsafe.types.UTF8String
             .fromString(r._2._1.toString)),
           ranges.map(r => org.apache.spark.unsafe.types.UTF8String
-            .fromString(r._2._2.toString)), floor))
+            .fromString(r._2._2.toString))))
       case _: DecimalType =>
         import org.apache.spark.sql.graft.RangeBucketSearchDecimal
         Bridge.column(RangeBucketSearchDecimal(
           Bridge.expression(col(keyCol)),
           ranges.map(r => org.apache.spark.sql.types.Decimal(bd(r._2._1))),
-          ranges.map(r => org.apache.spark.sql.types.Decimal(bd(r._2._2))), floor))
+          ranges.map(r => org.apache.spark.sql.types.Decimal(bd(r._2._2)))))
       case _ =>
         val bcLos = spark.sparkContext.broadcast(ranges.map(_._2._1))
         val bcHis = spark.sparkContext.broadcast(ranges.map(_._2._2))
@@ -562,7 +580,7 @@ object KeyedStore {
               if (le(bcLos.value(mid), k)) { found = mid; lo = mid + 1 } else hi = mid - 1
             }
             if (found >= 0 && le(k, bcHis.value(found))) found
-            else if (floor) -(found + 2) else -1
+            else -(found + 2)
           }
         }
         fileOf(col(keyCol).cast("string"))
@@ -629,7 +647,11 @@ object KeyedStore {
     var newRanges = ix.ranges
     val staged = merged.zipWithIndex.map { case (names, i) =>
       val staging = new org.apache.hadoop.fs.Path(s"${path}__compact_$salt-$i")
-      spark.read.parquet(names.map(n => s"$path/$n"): _*)
+      // the group's footers merged: no inference job, and a column only
+      // some of the files carry survives the merge
+      val files = names.map(n => s"$path/$n")
+      GraftIndex.footerSchema(dirPath, hadoopConf, names)
+        .fold(spark.read)(st => spark.read.schema(st)).parquet(files: _*)
         .coalesce(1).sortWithinPartitions(keyCol)
         .write.format("graft").option("key", keyCol).mode("overwrite")
         .save(staging.toString)
@@ -839,14 +861,6 @@ object KeyedStore {
       OpsResult(numDeletes + o.numDeletes, numPuts + o.numPuts, numIncrements + o.numIncrements)
   }
 
-  /** The result type of SQL `sum` over `dt`. */
-  private def sumType(dt: DataType): DataType = dt match {
-    case d: DecimalType =>
-      DecimalType(math.min(d.precision + 10, DecimalType.MAX_PRECISION), d.scale)
-    case ByteType | ShortType | IntegerType | LongType => LongType
-    case _ => DoubleType
-  }
-
   private def isMap(df: DataFrame, c: String): Boolean =
     df.schema(c).dataType.isInstanceOf[MapType]
 
@@ -962,28 +976,21 @@ object KeyedStore {
    * Map increments union-merge keys via `map_zip_with(o, d, coalesce(v1,0)+coalesce(v2,0))`.
    */
   def increment(current: DataFrame, deltas: DataFrame, keyCol: String = "key"): DataFrame = {
+    import org.apache.spark.sql.graft.{Bridge, MapValueSum}
     val deltaCols = deltas.columns.filter(_ != keyCol)
     val (mapCols, scalarCols) = deltaCols.partition(c => isMap(deltas, c))
-    // Pre-aggregate the batch in ONE groupBy (map-side combine handles hot
-    // keys before the shuffle): scalars sum; each map column collects its
-    // maps, folded per qualifier in SUM's result type — a qualifier sums
-    // its non-null values and is null only when every value is null
-    val aggs = scalarCols.map(c => sum(col(c)).as(c)) ++
-      mapCols.map(c => collect_list(col(c)).as(c))
-    val grouped =
+    // Pre-aggregate the batch in ONE groupBy whose every aggregate combines
+    // map-side, so a hot key costs one partial sum per qualifier before the
+    // shuffle: scalars SUM; each map column sums per qualifier, null only
+    // when all of a qualifier's values are (MapValueSum)
+    val aggs = scalarCols.map(c => sum(col(c)).as(c)) ++ mapCols.map { c =>
+      val mt = deltas.schema(c).dataType.asInstanceOf[MapType]
+      Bridge.column(MapValueSum(Bridge.expression(col(c))).toAggregateExpression())
+        .cast(MapType(mt.keyType, mt.valueType, valueContainsNull = true)).as(c)
+    }
+    val summed =
       if (aggs.isEmpty) deltas.select(col(keyCol)).distinct()
       else deltas.groupBy(col(keyCol)).agg(aggs.head, aggs.tail.toIndexedSeq: _*)
-    val summed = grouped.select(col(keyCol) +: scalarCols.map(col).toIndexedSeq ++:
-      mapCols.map { mc =>
-        val mt = deltas.schema(mc).dataType.asInstanceOf[MapType]
-        val st = MapType(mt.keyType, sumType(mt.valueType))
-        val empty = map_from_arrays(array().cast(ArrayType(mt.keyType)),
-          array().cast(ArrayType(st.valueType)))
-        aggregate(col(mc), empty, (acc, m) => map_zip_with(acc, m.cast(st),
-          (_, a, b) => when(a.isNull, b).when(b.isNull, a)
-            .otherwise((a + b).cast(st.valueType))))
-          .cast(MapType(mt.keyType, mt.valueType, valueContainsNull = true)).as(mc)
-      }.toIndexedSeq: _*)
     val o = current.alias("o")
     val n = summed.alias("n")
     val joined = o.join(n, col(s"o.$keyCol") === col(s"n.$keyCol"), "full_outer")

@@ -1000,18 +1000,27 @@ object GraftIndex {
   private val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** The table schema from the footer of one data file that the live index
-    * (or retained `version`) names: the row-metadata JSON every Spark
-    * parquet writer records — the graft write path included — made
-    * nullable as a file-source read makes it. One footer read on the
-    * driver, no Spark job. None without an index, or when that file has no
-    * such metadata. */
+    * (or retained `version`) names — see [[footerSchema]]. None without an
+    * index, or when that file has no row metadata. */
   def liveSchema(dir: Path, conf: Configuration,
       version: Option[Long] = None): Option[StructType] = {
     val ix = version match {
       case Some(v) => readAllVersioned(dir, conf).find(_._1 == v).map(_._2)
       case None => read(dir, conf)
     }
-    ix.flatMap(_.files.toSeq.sorted.headOption).flatMap { name =>
+    ix.flatMap(i => footerSchema(dir, conf, i.files.toSeq.sorted.take(1)))
+  }
+
+  /** The schema of data files `names` of `dir`: the row-metadata JSON every
+    * Spark parquet writer records in the footer (the graft write path
+    * included), merged across the files — a column any of them carries is
+    * kept, so files written before and after an added column read as one
+    * schema — and made nullable as a file-source read makes it. One footer
+    * read per file on the driver, no Spark job. None when no file has such
+    * metadata. */
+  def footerSchema(dir: Path, conf: Configuration,
+      names: Seq[String]): Option[StructType] =
+    names.flatMap { name =>
       scala.util.Try {
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(dir, name), conf))
         try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey)
@@ -1019,8 +1028,7 @@ object GraftIndex {
       }.toOption.flatMap(Option(_))
         .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
         .collect { case st: StructType => st.asNullable }
-    }
-  }
+    }.reduceOption(_ merge _)
 
   /** The on-disk index version files of a table dir, ascending by version
     * (the legacy un-suffixed file is version 0). */

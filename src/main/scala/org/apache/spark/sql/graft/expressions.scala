@@ -7,12 +7,15 @@
  */
 package org.apache.spark.sql.graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{aggregate, BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -212,8 +215,10 @@ case class HammingDistance64(left: Expression, right: Expression)
 
 /**
  * The key→file router of `graft.store.KeyedStore.mergeIndexed`: index of the
- * unique sorted range `[los(i), his(i)]` containing the child key, or -1
- * (null keys route to -1, never null — callers filter on `>= 0`). Replaces
+ * unique sorted range `[los(i), his(i)]` containing the child key; a key in
+ * no range routes to its gap `g` (gap 0 below the first range, gap `i`
+ * between ranges `i-1` and `i`, gap `n` above the last) as `-(g + 1)`. Null
+ * keys sort first, so they route to gap 0 (-1), never null. Replaces
  * the round-13 Scala UDF (a per-row `BigDecimal(string)` parse with boxed
  * comparisons that blocked whole-stage codegen — the serialization wall on a
  * billion-row mutation batch). Typed variants keep the comparison exact in
@@ -221,14 +226,8 @@ case class HammingDistance64(left: Expression, right: Expression)
  * writeIndexed layout invariant), so the binary search routes exactly —
  * exactness is load-bearing here: a boundary mis-route would upsert a key
  * into a file that does not hold its current row, leaving a duplicate.
- *
- * FLOOR mode also places the keys that fall in no range: such a key in gap
- * `g` (gap 0 below the first range, gap `i` between ranges `i-1` and `i`,
- * gap `n` above the last) routes to `-(g + 1)`. Null keys sort first, so
- * they route to gap 0 (-1) in both modes.
  */
 abstract class RangeBucketSearch extends UnaryExpression {
-  def floor: Boolean
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = false
 
@@ -243,8 +242,6 @@ abstract class RangeBucketSearch extends UnaryExpression {
   /** Java expression for `a <= b` over two values of [[javaType]]. */
   protected def leCode(a: String, b: String): String
 
-  private def miss(found: Int): Int = if (floor) -(found + 2) else -1
-
   override def eval(input: InternalRow): Any = {
     val k = child.eval(input)
     if (k == null) -1
@@ -254,7 +251,7 @@ abstract class RangeBucketSearch extends UnaryExpression {
         val mid = (lo + hi) >>> 1
         if (loLe(mid, k)) { found = mid; lo = mid + 1 } else hi = mid - 1
       }
-      if (found >= 0 && leHi(k, found)) found else miss(found)
+      if (found >= 0 && leHi(k, found)) found else -(found + 2)
     }
   }
 
@@ -265,7 +262,6 @@ abstract class RangeBucketSearch extends UnaryExpression {
     val lo = ctx.freshName("lo"); val hi = ctx.freshName("hi")
     val mid = ctx.freshName("mid"); val found = ctx.freshName("found")
     val k = ctx.freshName("k")
-    val missed = if (floor) s"-($found + 2)" else "-1"
     ev.copy(code = code"""
       ${c.code}
       int ${ev.value} = -1;
@@ -277,13 +273,13 @@ abstract class RangeBucketSearch extends UnaryExpression {
           if (${leCode(s"$losRef[$mid]", k)}) { $found = $mid; $lo = $mid + 1; }
           else $hi = $mid - 1;
         }
-        ${ev.value} = ($found >= 0 && ${leCode(k, s"$hisRef[$found]")}) ? $found : $missed;
+        ${ev.value} = ($found >= 0 && ${leCode(k, s"$hisRef[$found]")}) ? $found : -($found + 2);
       }""", isNull = FalseLiteral)
   }
 }
 
 case class RangeBucketSearchLong(child: Expression,
-    los: Array[Long], his: Array[Long], floor: Boolean = false) extends RangeBucketSearch {
+    los: Array[Long], his: Array[Long]) extends RangeBucketSearch {
   override def prettyName: String = "range_bucket_long"
   protected def size: Int = los.length
   protected def loLe(i: Int, k: Any): Boolean = los(i) <= k.asInstanceOf[Long]
@@ -297,7 +293,7 @@ case class RangeBucketSearchLong(child: Expression,
 }
 
 case class RangeBucketSearchDouble(child: Expression,
-    los: Array[Double], his: Array[Double], floor: Boolean = false) extends RangeBucketSearch {
+    los: Array[Double], his: Array[Double]) extends RangeBucketSearch {
   override def prettyName: String = "range_bucket_double"
   protected def size: Int = los.length
   protected def loLe(i: Int, k: Any): Boolean = los(i) <= k.asInstanceOf[Double]
@@ -311,7 +307,7 @@ case class RangeBucketSearchDouble(child: Expression,
 }
 
 case class RangeBucketSearchString(child: Expression,
-    los: Array[UTF8String], his: Array[UTF8String], floor: Boolean = false)
+    los: Array[UTF8String], his: Array[UTF8String])
     extends RangeBucketSearch {
   override def prettyName: String = "range_bucket_string"
   protected def size: Int = los.length
@@ -330,7 +326,7 @@ case class RangeBucketSearchString(child: Expression,
   * values; comparison is `Decimal.compareTo` (BigDecimal-exact across
   * scales), in the key's own value space like every sibling variant. */
 case class RangeBucketSearchDecimal(child: Expression,
-    los: Array[Decimal], his: Array[Decimal], floor: Boolean = false)
+    los: Array[Decimal], his: Array[Decimal])
     extends RangeBucketSearch {
   override def prettyName: String = "range_bucket_decimal"
   protected def size: Int = los.length
@@ -342,4 +338,106 @@ case class RangeBucketSearchDecimal(child: Expression,
   protected def leCode(a: String, b: String): String = s"$a.compareTo($b) <= 0"
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/**
+ * Per-qualifier SUM over a `map<k, numeric>` column — the map half of
+ * `graft.store.KeyedStore.increment`'s batch pre-sum — as ONE aggregate that
+ * combines map-side: a group's buffer holds one running sum per qualifier,
+ * never the group's raw maps, so a hot key costs work linear in its deltas
+ * and memory in its distinct qualifiers on both sides of the shuffle.
+ *
+ * A qualifier sums like SQL SUM: its non-null values, in SUM's result type
+ * (long for integral values, double for floating ones, decimal(p + 10, s)),
+ * and null only when every value is null. Null maps add nothing, so a group
+ * of only null maps sums to the empty map. An overflow fails the query, as
+ * SUM does under ANSI mode.
+ */
+case class MapValueSum(child: Expression, mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+    extends aggregate.TypedImperativeAggregate[MapValueSum.Buffer]
+    with UnaryLike[Expression] {
+  private def mapType: MapType = child.dataType.asInstanceOf[MapType]
+  private def sumType: DataType = mapType.valueType match {
+    case d: DecimalType => DecimalType.bounded(d.precision + 10, d.scale)
+    case _: IntegralType => LongType
+    case _ => DoubleType
+  }
+  override def dataType: DataType = MapType(mapType.keyType, sumType, valueContainsNull = true)
+  override def nullable: Boolean = false
+  override def prettyName: String = "map_value_sum"
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case MapType(_, _: NumericType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName needs map<k, numeric>, not $t")
+  }
+
+  /** An input value in [[sumType]]. */
+  @transient private lazy val widen: Any => Any = mapType.valueType match {
+    case ByteType => v => v.asInstanceOf[Byte].toLong
+    case ShortType => v => v.asInstanceOf[Short].toLong
+    case IntegerType => v => v.asInstanceOf[Int].toLong
+    case FloatType => v => v.asInstanceOf[Float].toDouble
+    case _ => identity
+  }
+  @transient private lazy val plus: (Any, Any) => Any = sumType match {
+    case LongType => (a, b) => Math.addExact(a.asInstanceOf[Long], b.asInstanceOf[Long])
+    case DoubleType => (a, b) => a.asInstanceOf[Double] + b.asInstanceOf[Double]
+    case DecimalType.Fixed(p, s) => (a, b) => {
+      val d = a.asInstanceOf[Decimal] + b.asInstanceOf[Decimal]
+      if (!d.changePrecision(p, s))
+        throw new ArithmeticException(s"$prettyName: a sum overflows decimal($p, $s)")
+      d
+    }
+  }
+  /** Folds one qualifier's (non-copied) value into the buffer. */
+  private def add(buf: MapValueSum.Buffer, q: Any, v: Any): Unit = {
+    val prev = buf.get(q)
+    if (prev == null) buf.put(q, v)
+    else if (v != null) buf.put(q, plus(prev, v))
+  }
+  private def fold(buf: MapValueSum.Buffer, m: MapData, valueType: DataType,
+      in: Any => Any): MapValueSum.Buffer = {
+    val ks = m.keyArray(); val vs = m.valueArray()
+    var i = 0
+    while (i < m.numElements()) {
+      val v = if (vs.isNullAt(i)) null else in(InternalRow.copyValue(vs.get(i, valueType)))
+      add(buf, InternalRow.copyValue(ks.get(i, mapType.keyType)), v)
+      i += 1
+    }
+    buf
+  }
+
+  override def createAggregationBuffer(): MapValueSum.Buffer = new java.util.HashMap()
+  override def update(buf: MapValueSum.Buffer, input: InternalRow): MapValueSum.Buffer = {
+    val m = child.eval(input)
+    if (m == null) buf else fold(buf, m.asInstanceOf[MapData], mapType.valueType, widen)
+  }
+  override def merge(buf: MapValueSum.Buffer,
+      other: MapValueSum.Buffer): MapValueSum.Buffer = {
+    other.forEach((q, v) => add(buf, q, v))
+    buf
+  }
+  override def eval(buf: MapValueSum.Buffer): Any = {
+    val (ks, vs) = buf.asScala.toArray.unzip
+    new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs))
+  }
+  @transient private lazy val projection = UnsafeProjection.create(Array[DataType](dataType))
+  override def serialize(buf: MapValueSum.Buffer): Array[Byte] =
+    projection(InternalRow(eval(buf))).getBytes
+  override def deserialize(bytes: Array[Byte]): MapValueSum.Buffer = {
+    val row = new UnsafeRow(1)
+    row.pointTo(bytes, bytes.length)
+    fold(createAggregationBuffer(), row.getMap(0), sumType, identity)
+  }
+
+  override def withNewMutableAggBufferOffset(o: Int): MapValueSum = copy(mutableAggBufferOffset = o)
+  override def withNewInputAggBufferOffset(o: Int): MapValueSum = copy(inputAggBufferOffset = o)
+  override protected def withNewChildInternal(newChild: Expression): MapValueSum =
+    copy(child = newChild)
+}
+
+object MapValueSum {
+  /** Qualifier → its running sum, or null while every value seen was null. */
+  type Buffer = java.util.HashMap[Any, Any]
 }

@@ -142,6 +142,22 @@ class CatalogSpec extends SparkSpec {
     intercept[Exception] { spark.sql(s"ALTER TABLE $t DROP COLUMN key") }
   }
 
+  test("upsertIndexed across both sides of ALTER TABLE ADD COLUMN keeps the " +
+      "added column's values in every rewritten file") {
+    import spark.implicits._
+    val t = freshTable("t10")
+    seed(t, n = 20, ranges = 2)
+    spark.sql(s"ALTER TABLE $t ADD COLUMNS (note STRING)")
+    Seq((100L, "name_100", 0, "hello")).toDF("key", "name", "size", "note")
+      .writeTo(t).append()
+    // one batch rewrites an old-generation file (key 5) and the new one (key 100)
+    graft.store.KeyedStore.upsertIndexed(spark, s"$wh/db/t10",
+      Seq((5L, "five"), (100L, "hundred")).toDF("key", "name"))
+    val got = spark.sql(s"SELECT key, name, note FROM $t WHERE key IN (5, 100)")
+      .collect().map(r => r.getLong(0) -> ((r.getString(1), Option(r.getString(2))))).toMap
+    assert(got == Map(5L -> (("five", None)), 100L -> (("hundred", Some("hello")))), got)
+  }
+
   test("SQL UPDATE: copy-on-write rewrite, non-matching rows untouched") {
     val t = freshTable("t6")
     seed(t)

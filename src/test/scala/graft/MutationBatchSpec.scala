@@ -127,6 +127,46 @@ class MutationBatchSpec extends SparkSpec {
     assert(KeyedStore.slotsOf(0, Set.empty, Set(0)).toSeq == Seq(0))
   }
 
+  test("increment pre-sums a hot key's many map deltas per qualifier: equal " +
+      "to a plain fold over three map columns and a scalar, nulls included") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("key", StringType),
+      StructField("byDay", MapType(StringType, LongType)),
+      StructField("w", MapType(IntegerType, DoubleType)),
+      StructField("n", MapType(StringType, IntegerType)),
+      StructField("total", LongType)))
+    // 2,700 of 3,000 deltas hit one key; null maps, null cells and null
+    // scalars throughout; key "nulls" only ever carries null values
+    val in = (0 until 3000).map { i =>
+      Row(if (i % 10 == 0) s"k${i % 7}" else "hot",
+        if (i % 13 == 0) null
+        else Map(s"d${i % 5}" -> (if (i % 11 == 0) null else java.lang.Long.valueOf(i.toLong))),
+        if (i % 3 == 0) Map((i % 4) -> i * 0.5) else null,
+        Map("a" -> i % 3, s"b${i % 2}" -> 1),
+        if (i % 17 == 0) null else java.lang.Long.valueOf(1L))
+    } :+ Row("nulls", Map("d0" -> null), null, Map.empty[String, Int], null)
+    def fold[Q, V](ms: Seq[scala.collection.Map[Q, V]], plus: (V, V) => V): Map[Q, Any] =
+      ms.flatten.groupBy(_._1).map { case (q, cells) =>
+        q -> (cells.map(_._2).filter(_ != null).reduceOption(plus).getOrElse(null): Any)
+      }
+    val want = in.groupBy(_.getString(0)).map { case (k, rs) =>
+      k -> ((fold[String, java.lang.Long](rs.flatMap(r => Option(r.getMap[String, java.lang.Long](1))),
+        (a, b) => a + b),
+        fold[Int, Double](rs.flatMap(r => Option(r.getMap[Int, Double](2))), _ + _),
+        fold[String, Int](rs.flatMap(r => Option(r.getMap[String, Int](3))), _ + _),
+        rs.flatMap(r => Option(r.get(4))).map(_.asInstanceOf[Long]).sum))
+    }
+    val deltas = spark.createDataFrame(java.util.Arrays.asList(in: _*), schema)
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    val got = KeyedStore.increment(empty, deltas).collect().map { r =>
+      r.getString(0) -> ((r.getMap[String, Any](1).toMap, r.getMap[Int, Any](2).toMap,
+        r.getMap[String, Any](3).toMap, r.getLong(4)))
+    }.toMap
+    assert(got == want)
+    assert(got("nulls") == ((Map("d0" -> null), Map.empty, Map.empty, 0L)))
+  }
+
   test("an empty put routes nowhere: no job to test emptiness, no commit, counts 0") {
     val dir = tmp("graft_mb_empty")
     KeyedStore.writeIndexed(table(0L until 100L), dir, numRanges = 2)
@@ -137,21 +177,34 @@ class MutationBatchSpec extends SparkSpec {
   }
 
   test("a table already damaged by overlapping ranges: fsck reports it, and " +
-      "a mutation whose output would overlap an untouched file aborts with nothing applied") {
+      "every indexed mutation, near the damage or far from it, aborts naming it with nothing applied") {
     val dir = tmp("graft_mb_guard")
-    writeBlocks(dir, Seq(Seq(0L, 10L, 20L), Seq(5L, 15L)))
+    writeBlocks(dir, Seq(Seq(0L, 10L, 20L), Seq(5L, 15L), Seq(100L, 110L)))
     val st = KeyedStore.fsckIndexed(spark, dir)
     assert(st.overlappingRanges == 1 && !st.ok, st)
     val snapshot = rows(KeyedStore.readKeyed(spark, dir))
     val v0 = version(dir)
-    val e = intercept[IllegalStateException] {
-      KeyedStore.incrementIndexed(spark, dir, deltas(Seq(0L), 1L))
+    // one increment inside the overlapping pair, one that touches only the
+    // third file, one that inserts above it
+    Seq(Seq(0L), Seq(110L), Seq(500L)).foreach { ks =>
+      val e = intercept[IllegalStateException] {
+        KeyedStore.incrementIndexed(spark, dir, deltas(ks, 1L))
+      }
+      assert(e.getMessage.contains("already holds 1 pair(s) of overlapping live key ranges") &&
+        e.getMessage.contains("fsckIndexed") && e.getMessage.contains("writeIndexed"),
+        e.getMessage)
+      assert(version(dir) == v0 && rows(KeyedStore.readKeyed(spark, dir)) == snapshot)
     }
-    assert(e.getMessage.contains("overlap"), e.getMessage)
-    assert(version(dir) == v0 && rows(KeyedStore.readKeyed(spark, dir)) == snapshot)
     val parent = new java.io.File(dir).getParentFile
     assert(!parent.listFiles().exists(_.getName.contains("__staging")),
-      "the aborted staging must be deleted")
+      "an aborted mutation leaves no staging behind")
+    // the repair the message names: a writeIndexed rewrite leaves disjoint
+    // ranges, and mutations apply again
+    val repaired = tmp("graft_mb_guard_fixed")
+    KeyedStore.writeIndexed(KeyedStore.readKeyed(spark, dir), repaired, numRanges = 2)
+    assert(KeyedStore.fsckIndexed(spark, repaired).ok)
+    KeyedStore.incrementIndexed(spark, repaired, deltas(Seq(110L), 1L))
+    assert(KeyedStore.fsckIndexed(spark, repaired).ok)
   }
 
   test("the connector reads the schema from a live file's footer") {
@@ -160,5 +213,33 @@ class MutationBatchSpec extends SparkSpec {
     val want = spark.read.parquet(dir).schema
     assert(GraftIndex.liveSchema(new org.apache.hadoop.fs.Path(dir), conf).contains(want))
     assert(KeyedStore.readKeyed(spark, dir).schema == want)
+  }
+
+  test("a batch over files of two schema generations merges their footers: " +
+      "a column only the newer file carries survives the rewrite") {
+    val dir = tmp("graft_mb_schema_gen")
+    writeBlocks(dir, Seq(0L until 10L))
+    table(20L until 30L).withColumn("note", concat(lit("n"), $"key".cast("string")))
+      .coalesce(1).write.format("graft").option("key", "key").mode("append").save(dir)
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val files = GraftIndex.read(p, conf).get.files.toSeq
+    assert(files.size == 2)
+    // either file order merges to the schema with the added column
+    Seq(files, files.reverse).foreach { fs =>
+      assert(GraftIndex.footerSchema(p, conf, fs).exists(_.fieldNames.contains("note")))
+    }
+    KeyedStore.upsertIndexed(spark, dir, Seq((5L, 1L), (25L, 2L)).toDF("key", "total"))
+    val got = spark.read.option("mergeSchema", "true")
+      .parquet(GraftIndex.read(p, conf).get.files.toSeq.map(f => s"$dir/$f"): _*)
+    assert(got.where($"key" === 25L).select("note", "total").as[(String, Long)].collect()
+      .toSeq == Seq(("n25", 2L)), "the newer file's column and the put both land")
+    assert(got.where($"key" === 5L).select("note", "total").as[(String, Long)].collect()
+      .toSeq == Seq((null, 1L)))
+    // compaction merges the two generations under the same merged schema
+    assert(KeyedStore.compact(spark, dir) == 1)
+    val compacted = GraftIndex.read(p, conf).get.files.toSeq
+    assert(compacted.size == 1)
+    assert(spark.read.parquet(s"$dir/${compacted.head}").where($"note".isNotNull)
+      .select("key").as[Long].collect().sorted.toSeq == (20L until 30L))
   }
 }

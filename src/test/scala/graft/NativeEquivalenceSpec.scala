@@ -155,10 +155,8 @@ class NativeEquivalenceSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
     // the reference router: the round-13 UDF's exact decimal-string logic,
-    // checked in plain and floor mode (a key in no range routes to
-    // -(gap + 1), gap 0 lowest)
-    def refRoute(isNum: Boolean, los: Array[Any], his: Array[Any], floor: Boolean)(
-        ks: String): Int =
+    // except that a key in no range routes to -(gap + 1), gap 0 lowest
+    def refRoute(isNum: Boolean, los: Array[Any], his: Array[Any])(ks: String): Int =
       if (ks == null) -1
       else {
         val k: Any = if (isNum) BigDecimal(ks) else ks
@@ -170,77 +168,72 @@ class NativeEquivalenceSpec extends SparkSpec {
           val mid = (lo + hi) >>> 1
           if (le(los(mid), k)) { found = mid; lo = mid + 1 } else hi = mid - 1
         }
-        if (found >= 0 && le(k, his(found))) found else if (floor) -(found + 2) else -1
+        if (found >= 0 && le(k, his(found))) found else -(found + 2)
       }
-    Seq(false, true).foreach { floor =>
-      // LONG keys: ranges with gaps; probe every boundary and gap
-      val longRanges: Array[(String, (Any, Any, Long))] = Array(
-        "a" -> ((BigDecimal(0), BigDecimal(9), 1L)),
-        "b" -> ((BigDecimal(20), BigDecimal(20), 1L)),   // point range
-        "c" -> ((BigDecimal(25), BigDecimal(1000), 1L)))
-      val longKeys = Seq(-1L, 0L, 5L, 9L, 10L, 19L, 20L, 21L, 24L, 25L, 1000L, 1001L)
-      val lc = KeyedStore.routerColumn(spark, LongType, "k", longRanges, isNum = true, floor)
-      val lgot = longKeys.toDF("k").select(col("k"), lc.as("f")).collect()
-        .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      longKeys.foreach { k =>
-        val ref = refRoute(isNum = true, longRanges.map(_._2._1),
-          longRanges.map(_._2._2), floor)(k.toString)
-        assert(lgot(k) == ref, s"long key $k: native ${lgot(k)} != udf $ref")
-      }
-      // DOUBLE keys incl. fractional boundaries
-      val dblRanges: Array[(String, (Any, Any, Long))] = Array(
-        "a" -> ((BigDecimal("0.5"), BigDecimal("1.25"), 1L)),
-        "b" -> ((BigDecimal("2.75"), BigDecimal("9.125"), 1L)))
-      val dblKeys = Seq(0.25, 0.5, 1.25, 1.2500001, 2.75, 9.125, 9.2)
-      val dc = KeyedStore.routerColumn(spark, DoubleType, "k", dblRanges, isNum = true, floor)
-      val dgot = dblKeys.toDF("k").select(col("k"), dc.as("f")).collect()
-        .map(r => r.getDouble(0) -> r.getInt(1)).toMap
-      dblKeys.foreach { k =>
-        // the UDF saw the key cast to string — Spark double->string is the
-        // shortest roundtrip form, same value BigDecimal parses back
-        val ref = refRoute(isNum = true, dblRanges.map(_._2._1),
-          dblRanges.map(_._2._2), floor)(k.toString)
-        assert(dgot(k) == ref, s"double key $k: native ${dgot(k)} != udf $ref")
-      }
-      // STRING keys: binary-order boundaries
-      val strRanges: Array[(String, (Any, Any, Long))] = Array(
-        "a" -> (("apple", "cherry", 1L)), "b" -> (("melon", "peach", 1L)))
-      val strKeys = Seq("aardvark", "apple", "banana", "cherry", "cherrz",
-        "melon", "peach", "pear", null)
-      val sc = KeyedStore.routerColumn(spark, StringType, "k", strRanges, isNum = false, floor)
-      val sgot = strKeys.toDF("k").select(col("k"), sc.as("f")).collect()
-        .map(r => Option(r.getString(0)) -> r.getInt(1)).toMap
-      strKeys.foreach { k =>
-        val ref = refRoute(isNum = false, strRanges.map(_._2._1),
-          strRanges.map(_._2._2), floor)(k)
-        assert(sgot(Option(k)) == ref, s"string key $k: native != udf $ref")
-      }
-      // DECIMAL keys (round 15 — the last type off the UDF): exact across
-      // scales, boundary-exact, null routes to -1
-      import org.apache.spark.sql.types.DecimalType
-      val decRanges: Array[(String, (Any, Any, Long))] = Array(
-        "a" -> ((BigDecimal("0.50"), BigDecimal("1.25"), 1L)),
-        "b" -> ((BigDecimal("2.75"), BigDecimal("9.12"), 1L)))
-      val decKeys = Seq("0.49", "0.50", "1.25", "1.26", "2.75", "9.12", "9.13")
-      val cc = KeyedStore.routerColumn(spark, DecimalType(20, 2), "k",
-        decRanges, isNum = true, floor)
-      val cgot = decKeys.toDF("s")
-        .select(col("s").cast(DecimalType(20, 2)).as("k"))
-        .select(col("k").cast("string").as("ks"), cc.as("f")).collect()
-        .map(r => r.getString(0) -> r.getInt(1)).toMap
-      decKeys.foreach { k =>
-        val ref = refRoute(isNum = true,
-          decRanges.map(_._2._1), decRanges.map(_._2._2), floor)(k)
-        assert(cgot(k) == ref, s"decimal key $k: native ${cgot(k)} != udf $ref")
-      }
-      // plan pin: the native router is an expression, never a ScalaUDF —
-      // for EVERY key type (decimal included since round 15)
-      Seq(longKeys.toDF("k").select(lc.as("f")),
-        decKeys.toDF("s").select(col("s").cast(DecimalType(20, 2)).as("k"))
-          .select(cc.as("f"))).foreach { frame =>
-        val plan = frame.queryExecution.executedPlan.toString()
-        assert(!plan.contains("ScalaUDF"), s"router fell back to a UDF:\n$plan")
-      }
+    // LONG keys: ranges with gaps; probe every boundary and gap
+    val longRanges: Array[(String, (Any, Any, Long))] = Array(
+      "a" -> ((BigDecimal(0), BigDecimal(9), 1L)),
+      "b" -> ((BigDecimal(20), BigDecimal(20), 1L)),   // point range
+      "c" -> ((BigDecimal(25), BigDecimal(1000), 1L)))
+    val longKeys = Seq(-1L, 0L, 5L, 9L, 10L, 19L, 20L, 21L, 24L, 25L, 1000L, 1001L)
+    val lc = KeyedStore.routerColumn(spark, LongType, "k", longRanges, isNum = true)
+    val lgot = longKeys.toDF("k").select(col("k"), lc.as("f")).collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    longKeys.foreach { k =>
+      val ref = refRoute(isNum = true, longRanges.map(_._2._1), longRanges.map(_._2._2))(k.toString)
+      assert(lgot(k) == ref, s"long key $k: native ${lgot(k)} != udf $ref")
+    }
+    // DOUBLE keys incl. fractional boundaries
+    val dblRanges: Array[(String, (Any, Any, Long))] = Array(
+      "a" -> ((BigDecimal("0.5"), BigDecimal("1.25"), 1L)),
+      "b" -> ((BigDecimal("2.75"), BigDecimal("9.125"), 1L)))
+    val dblKeys = Seq(0.25, 0.5, 1.25, 1.2500001, 2.75, 9.125, 9.2)
+    val dc = KeyedStore.routerColumn(spark, DoubleType, "k", dblRanges, isNum = true)
+    val dgot = dblKeys.toDF("k").select(col("k"), dc.as("f")).collect()
+      .map(r => r.getDouble(0) -> r.getInt(1)).toMap
+    dblKeys.foreach { k =>
+      // the UDF saw the key cast to string — Spark double->string is the
+      // shortest roundtrip form, same value BigDecimal parses back
+      val ref = refRoute(isNum = true, dblRanges.map(_._2._1), dblRanges.map(_._2._2))(k.toString)
+      assert(dgot(k) == ref, s"double key $k: native ${dgot(k)} != udf $ref")
+    }
+    // STRING keys: binary-order boundaries
+    val strRanges: Array[(String, (Any, Any, Long))] = Array(
+      "a" -> (("apple", "cherry", 1L)), "b" -> (("melon", "peach", 1L)))
+    val strKeys = Seq("aardvark", "apple", "banana", "cherry", "cherrz",
+      "melon", "peach", "pear", null)
+    val sc = KeyedStore.routerColumn(spark, StringType, "k", strRanges, isNum = false)
+    val sgot = strKeys.toDF("k").select(col("k"), sc.as("f")).collect()
+      .map(r => Option(r.getString(0)) -> r.getInt(1)).toMap
+    strKeys.foreach { k =>
+      val ref = refRoute(isNum = false, strRanges.map(_._2._1), strRanges.map(_._2._2))(k)
+      assert(sgot(Option(k)) == ref, s"string key $k: native != udf $ref")
+    }
+    // DECIMAL keys (round 15 — the last type off the UDF): exact across
+    // scales, boundary-exact, null routes to -1
+    import org.apache.spark.sql.types.DecimalType
+    val decRanges: Array[(String, (Any, Any, Long))] = Array(
+      "a" -> ((BigDecimal("0.50"), BigDecimal("1.25"), 1L)),
+      "b" -> ((BigDecimal("2.75"), BigDecimal("9.12"), 1L)))
+    val decKeys = Seq("0.49", "0.50", "1.25", "1.26", "2.75", "9.12", "9.13")
+    val cc = KeyedStore.routerColumn(spark, DecimalType(20, 2), "k",
+      decRanges, isNum = true)
+    val cgot = decKeys.toDF("s")
+      .select(col("s").cast(DecimalType(20, 2)).as("k"))
+      .select(col("k").cast("string").as("ks"), cc.as("f")).collect()
+      .map(r => r.getString(0) -> r.getInt(1)).toMap
+    decKeys.foreach { k =>
+      val ref = refRoute(isNum = true,
+        decRanges.map(_._2._1), decRanges.map(_._2._2))(k)
+      assert(cgot(k) == ref, s"decimal key $k: native ${cgot(k)} != udf $ref")
+    }
+    // plan pin: the native router is an expression, never a ScalaUDF —
+    // for EVERY key type (decimal included since round 15)
+    Seq(longKeys.toDF("k").select(lc.as("f")),
+      decKeys.toDF("s").select(col("s").cast(DecimalType(20, 2)).as("k"))
+        .select(cc.as("f"))).foreach { frame =>
+      val plan = frame.queryExecution.executedPlan.toString()
+      assert(!plan.contains("ScalaUDF"), s"router fell back to a UDF:\n$plan")
     }
   }
 

@@ -1666,6 +1666,31 @@ class OpsSpec extends SparkSpec {
       s"previous view = post-delete, pre-re-election: $prev")
   }
 
+  test("removeFromClusters merges the small files appendToClusters opens " +
+      "above the last one, so the table's file count stays bounded") {
+    import org.apache.spark.sql.graft.GraftIndex
+    val base = java.nio.file.Files.createTempDirectory("graft_ctd_files").toString
+    val pairsPath = base + "/pairs"
+    val clustersPath = base + "/clusters"
+    val docs = Seq((1L, "alpha beta gamma delta epsilon"), (2L, "alpha beta gamma delta epsilon"),
+      (3L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+    Dedup.writePairs(docs, "doc_id", "text", pairsPath)
+    Dedup.writeClusters(spark, pairsPath, clustersPath)
+    def liveFiles(): Int =
+      GraftIndex.read(new org.apache.hadoop.fs.Path(clustersPath),
+        spark.sessionState.newHadoopConf()).get.files.size
+    val before = liveFiles()
+    // two batches of new ids, each above the last file: one new file each
+    Dedup.appendToClusters(spark, clustersPath, Seq((20L, 21L)).toDF("id_a", "id_b"))
+    Dedup.appendToClusters(spark, clustersPath, Seq((30L, 31L)).toDF("id_a", "id_b"))
+    assert(liveFiles() == before + 2)
+    Dedup.removeFromClusters(spark, clustersPath, pairsPath, Seq(1L).toDF("doc_id"))
+    assert(liveFiles() == 1, "the takedown compacts the small files first")
+    assert(Dedup.readClusters(spark, clustersPath).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      Map(2L -> 2L, 3L -> 2L, 20L -> 20L, 21L -> 20L, 30L -> 30L, 31L -> 30L))
+  }
+
   test("tombstonePairs: lazy takedown is read-complete immediately, gates " +
       "the incremental mine, refuses re-ingest of a pending id, and the " +
       "next compactPairs applies it physically and drains the sidecar") {
