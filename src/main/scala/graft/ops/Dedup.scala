@@ -1008,9 +1008,18 @@ object Dedup {
    */
   def tombstonePairs(spark: org.apache.spark.sql.SparkSession, path: String,
       ids: DataFrame): Long = {
-    val rm = graft.Eager.materialize(
-      ids.select(col(ids.columns.head).as("id")).distinct())
-    val n = rm.count()
+    val sel = ids.select(col(ids.columns.head).as("id"))
+    // a driver-local id list dedups on the driver: no materialize and
+    // count jobs for what is already in memory
+    val (rm, n) =
+      if (ids.isLocal) {
+        val rows = sel.collect().distinct
+        (spark.createDataFrame(java.util.Arrays.asList(rows: _*), sel.schema),
+          rows.length.toLong)
+      } else {
+        val m = graft.Eager.materialize(sel.distinct())
+        (m, m.count())
+      }
     if (n > 0) graft.store.ManifestTable.append(rm, tombstonesDir(path))
     n
   }
@@ -1613,6 +1622,89 @@ object Dedup {
     spliceOutPositions(df, idCol, textCol, cov)
   }
 
+  /** The driver-side Ordering matching what the distributed loop's
+    * `least()`/`min()` compare for an id type — UTF8String byte order for
+    * strings (NOT Java's UTF-16 code-unit order, which diverges on
+    * supplementary characters), numeric order for the integral types. None
+    * for types the small-graph fast paths do not handle. */
+  private def idOrdering(dt: org.apache.spark.sql.types.DataType)
+      : Option[Ordering[Any]] = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case ByteType => Some(Ordering.by((a: Any) => a.asInstanceOf[Byte].toLong))
+      case ShortType => Some(Ordering.by((a: Any) => a.asInstanceOf[Short].toLong))
+      case IntegerType => Some(Ordering.by((a: Any) => a.asInstanceOf[Int].toLong))
+      case LongType => Some(Ordering.by((a: Any) => a.asInstanceOf[Long]))
+      case StringType => Some[Ordering[Any]]((x, y) => // what least() compares
+        org.apache.spark.sql.graft.KeyBounds.utf8Cmp(x.asInstanceOf[String], y.asInstanceOf[String]))
+      case _ => None // exotic id types keep the type-agnostic loop
+    }
+  }
+
+  /** `df`'s rows when they fit the driver budget every small-graph path
+    * shares, else None — a BOUNDED collect: `graft.cc.smallGraphEdges`
+    * rows (default 200k) AND `graft.cc.smallGraphBytes` estimated bytes
+    * (default 64 MB). A row is estimated at 96 B (Row, boxed ids,
+    * union-find map entries) plus 4 B per string char, so wide URL-keyed
+    * inputs fall through to the distributed paths well before the driver
+    * heap is at risk. Without string columns the estimate is a function of
+    * the row count, so ONE limit-collect decides the gate and already
+    * holds every row; string rows byte-gate with one count/width aggregate
+    * first, over a persisted copy (the caller's, if `df` is cached). */
+  private def boundedCollect(df: DataFrame)
+      : Option[Array[org.apache.spark.sql.Row]] = {
+    import org.apache.spark.sql.types.StringType
+    def conf(k: String, d: Long): Long = df.sparkSession.conf.getOption(k)
+      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(d)
+    val gate = conf("graft.cc.smallGraphEdges", 200000L)
+    val byteBudget = conf("graft.cc.smallGraphBytes", 64L << 20)
+    val strCols = df.schema.fields.filter(_.dataType == StringType)
+      .map(f => length(col(f.name)))
+    if (strCols.isEmpty) {
+      val cap = math.min(gate, byteBudget / 96L)
+        .min(Int.MaxValue - 2L).max(0L).toInt
+      val rows = df.limit(cap + 1).collect()
+      if (rows.length <= cap) Some(rows) else None
+    } else {
+      val owned = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+      val p = if (owned) df.persist() else df
+      try {
+        val r = p.agg(count(lit(1)), avg(strCols.reduce(_ + _))).head()
+        val n = r.getLong(0)
+        val w = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
+        if (n <= gate && n * 96L + (n * 4L * w).toLong <= byteBudget)
+          Some(p.collect())
+        else None
+      } finally if (owned) p.unpersist(blocking = false)
+    }
+  }
+
+  /** Min-id connected components on the driver — the one union-find behind
+    * every small-graph path: each vertex of `edges` maps to its component's
+    * minimum under `ord`, the representative the distributed loop's
+    * `least()`/`min()` elect. Union by minimum keeps every root its
+    * component's minimum; path halving keeps the finds short. */
+  private def minIdComponents(edges: Iterator[(Any, Any)])(
+      implicit ord: Ordering[Any]): Map[Any, Any] = {
+    import scala.jdk.CollectionConverters._
+    val parent = new java.util.HashMap[Any, Any]()
+    def find(x: Any): Any = {
+      var r = x
+      var p = parent.get(r)
+      while (p != r) {
+        val g = parent.get(p)
+        parent.put(r, g); r = g; p = parent.get(r)
+      }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ord.lt(ra, rb)) parent.put(rb, ra) else parent.put(ra, rb) }
+    }
+    parent.keySet().asScala.iterator.map(v => v -> find(v)).toMap
+  }
+
   /**
    * Transitive duplicate clustering: connected components over the candidate
    * pair graph. `removeDuplicates` (keep-first) answers "which rows survive";
@@ -1642,33 +1734,6 @@ object Dedup {
    * Returns (id, rep, cluster_size) for every vertex that appears in a pair —
    * rep is the cluster's minimum id, the member `removeDuplicates` keeps.
    */
-  /** The driver-side Ordering matching what the distributed loop's
-    * `least()`/`min()` compare for an id type — UTF8String byte order for
-    * strings (NOT Java's UTF-16 code-unit order, which diverges on
-    * supplementary characters), numeric order for the integral types. None
-    * for types the small-graph fast paths do not handle. */
-  private def idOrdering(dt: org.apache.spark.sql.types.DataType)
-      : Option[Ordering[Any]] = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ByteType => Some(Ordering.by((a: Any) => a.asInstanceOf[Byte].toLong))
-      case ShortType => Some(Ordering.by((a: Any) => a.asInstanceOf[Short].toLong))
-      case IntegerType => Some(Ordering.by((a: Any) => a.asInstanceOf[Int].toLong))
-      case LongType => Some(Ordering.by((a: Any) => a.asInstanceOf[Long]))
-      case StringType => Some(new Ordering[Any] {
-        // UTF-8 byte order — EXACTLY what the loop's least() compares
-        // (UTF8String), not Java's UTF-16 code-unit order, which diverges
-        // on supplementary characters
-        def compare(x: Any, y: Any): Int =
-          org.apache.spark.unsafe.types.UTF8String
-            .fromString(x.asInstanceOf[String])
-            .compareTo(org.apache.spark.unsafe.types.UTF8String
-              .fromString(y.asInstanceOf[String]))
-      })
-      case _ => None // exotic id types keep the type-agnostic loop
-    }
-  }
-
   def clusterDuplicates(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 25): DataFrame = {
     import org.apache.spark.sql.types._
@@ -1688,88 +1753,24 @@ object Dedup {
     // plans no second exchange: shuffle count is unchanged, only the width.
     val spark = edgesRaw.sparkSession
     val sessionParts = spark.sessionState.conf.numShufflePartitions
-    val isStringId = edgesRaw.schema("src").dataType == StringType
     // Small-graph fast path (round 15): the pointer-jumping loop pays
     // per-round JOB overhead (join + checkpoint + convergence aggregate —
     // ~0.5 s/round on a busy local session) that dwarfs the data work on
-    // the graphs this operator usually sees — near-dup pair graphs are
-    // orders of magnitude smaller than their corpus, and
-    // [[appendToClusters]]'s rep-contracted delta graphs are smaller
-    // still. Up to `graft.cc.smallGraphEdges` directed edges (default
-    // 200k) AND `graft.cc.smallGraphBytes` estimated driver bytes
-    // (default 64 MB — a BOUNDED collect, same budget class as the
-    // k-round-trip ANN loops) the components are solved exactly on the
-    // driver with union-find + a min-member pass: identical output
-    // (min-id representatives, sizes) with ZERO loop jobs. Larger graphs
-    // take the distributed loop unchanged; `DedupClusterSpec`'s
-    // equivalence case pins the two paths to each other by forcing the
-    // gate to 0.
-    val smallGate = spark.conf.getOption("graft.cc.smallGraphEdges")
-      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(200000L)
-    // Byte ceiling (round 16): conservative driver-heap estimate per
-    // collected edge — Row + two boxed ids + union-find map entries ≈ 96 B
-    // fixed, plus 4 B per id char for strings (UTF-16 storage × the map's
-    // key duplication). Default budget 64 MB (`graft.cc.smallGraphBytes`):
-    // long/int-id graphs stay under it at the full 200k-edge gate, while
-    // wide URL-keyed graphs fall through to the distributed loop well
-    // before the driver heap is at risk — concurrent calls multiply.
-    val byteBudget = spark.conf.getOption("graft.cc.smallGraphBytes")
-      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(64L << 20)
-    val smallOrd: Option[Ordering[Any]] =
-      idOrdering(edgesRaw.schema("src").dataType)
-    // One aggregate pass serves both gates: the edge COUNT and — for
-    // string ids only — the average combined id width. Doc ids in web-crawl
-    // dedup are often URLs: 200k edges × 2 ids × ~300 chars is tens of MB
-    // of driver heap, not the "few MB" an edge-count gate alone assumes
-    // (round-15 verdict), so the fast path gates on estimated BYTES too.
-    // FIXED-WIDTH ids fuse the gate with the fast path's collect (round 19,
-    // guide §1.2): their byte estimate is a pure function of the edge count,
-    // so the row cap can fold BOTH gates up front and ONE bounded
-    // limit-collect both decides the gate and — when it passes — already
-    // holds every edge the fast path needs (previously: a count() job, then
-    // a collect() job). An over-cap graph falls back to count() for loop
-    // sizing; the probe's partitions land in the persisted cache either way.
-    val (edgeCount, avgIdChars, probed) =
-      if (isStringId) {
-        val r = edgesRaw.agg(count(lit(1)),
-          avg(length(col("src")) + length(col("dst")))).head()
-        (r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1), None)
-      } else if (smallOrd.isDefined) {
-        val cap = math.min(smallGate, byteBudget / 96L)
-          .min(Int.MaxValue - 2L).max(0L).toInt
-        val rows = edgesRaw.limit(cap + 1).collect()
-        if (rows.length <= cap) (rows.length.toLong, 0.0, Some(rows))
-        else (edgesRaw.count(), 0.0, None)
-      } else (edgesRaw.count(), 0.0, None)
-    val estBytes = edgeCount * 96L + (edgeCount * 4L * avgIdChars).toLong
-    if (probed.isDefined ||
-        (edgeCount <= smallGate && estBytes <= byteBudget && smallOrd.isDefined)) {
+    // the near-dup pair graphs this operator usually sees. A graph within
+    // the [[boundedCollect]] budget is solved exactly on the driver by
+    // [[minIdComponents]]: identical output (min-id representatives,
+    // sizes) with ZERO loop jobs. `DedupClusterSpec` pins the two paths to
+    // each other by forcing the gate to 0.
+    val smallOrd = idOrdering(edgesRaw.schema("src").dataType)
+    val probed = smallOrd.flatMap(_ => boundedCollect(edgesRaw))
+    if (probed.isDefined) {
       smallGraphFastPathRuns.incrementAndGet(): Unit
-      implicit val ord: Ordering[Any] = smallOrd.get
-      val local = probed.getOrElse(edgesRaw.collect()) // bounded by the gates
       edgesRaw.unpersist(blocking = false)
-      val parent = new java.util.HashMap[Any, Any]()
-      def find(x: Any): Any = {
-        var r = x
-        while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-        var c = x // path compression
-        while (parent.getOrDefault(c, c) != c) {
-          val n = parent.get(c); parent.put(c, r); c = n
-        }
-        r
-      }
-      local.foreach { row =>
-        val (a, b) = (row.get(0), row.get(1))
-        parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent.put(ra, rb)
-      }
-      import scala.jdk.CollectionConverters._
-      val members = parent.keySet().asScala.toSeq.groupBy(find)
-      val out = members.valuesIterator.flatMap { ms =>
-        val rep = ms.min
-        val size = ms.size.toLong
-        ms.iterator.map(m => org.apache.spark.sql.Row(m, rep, size))
+      val repOf = minIdComponents(probed.get.iterator.map(r => (r.get(0), r.get(1))))(
+        smallOrd.get)
+      val sizes = repOf.values.groupMapReduce(identity)(_ => 1L)(_ + _)
+      val out = repOf.iterator.map { case (m, rep) =>
+        org.apache.spark.sql.Row(m, rep, sizes(rep))
       }.toSeq
       val dt = pairs.schema(idA).dataType
       return spark.createDataFrame(
@@ -1777,6 +1778,7 @@ object Dedup {
         StructType(Seq(StructField("id", dt), StructField("rep", dt),
           StructField("cluster_size", LongType))))
     }
+    val edgeCount = edgesRaw.count()
     val loopParts = math.max(1L, math.min(sessionParts.toLong,
       edgeCount / 2000000L + 1L)).toInt
     def part(df: DataFrame, c: String): DataFrame = df.repartition(loopParts, col(c))
@@ -1945,26 +1947,19 @@ object Dedup {
    * empty), so a blind crash-retry is safe without tags. Returns the
    * number of rows upserted.
    *
-   * Execution shape (round 19, guide §1.2/§2.4/§3.2): a delta within the
-   * `graft.cc.smallGraphEdges`/`smallGraphBytes` driver budget (the same
-   * gate class as [[clusterDuplicates]]' small-graph fast path) folds in
-   * THREE actions instead of the previous ~6 — one bounded collect of the
-   * delta edges, one FILE-PRUNED collect of the stored reps for just those
-   * endpoints (`In(doc_id, …)` rides the keyed store's key-range split
-   * pruning: O(touched files), never the full-assignment scan the old
-   * double-join paid per epoch), and one job building the member updates
-   * (a broadcast map join — only when some component's representative
-   * actually changes). The rep contraction and min-id union-find run on
-   * the driver under the SAME UTF8String/numeric ordering the distributed
-   * loop compares, so results are identical bit for bit
-   * (DedupClusterSpec pins the two paths to each other). Over-budget
-   * deltas take the distributed path unchanged.
+   * Execution shape: a delta within the [[boundedCollect]] budget folds
+   * on the driver in three actions — the delta edges, a FILE-PRUNED
+   * lookup of the stored reps of just those endpoints (`In(doc_id, …)`
+   * rides the key-range split pruning), and one broadcast map join for
+   * the member updates when some representative changes — with the
+   * [[minIdComponents]] election under the distributed loop's ordering,
+   * so results are identical bit for bit (DedupClusterSpec pins the two
+   * paths to each other). Over-budget deltas take the distributed path.
    */
   def appendToClusters(spark: org.apache.spark.sql.SparkSession,
       clustersPath: String, deltaPairs: DataFrame,
       idA: String = "id_a", idB: String = "id_b",
       maxIter: Int = 25): Long = {
-    import org.apache.spark.sql.types._
     import graft.store.KeyedStore
     val stored = KeyedStore.readKeyed(spark, clustersPath, "doc_id")
       .select(col("doc_id"), col("rep"))
@@ -1979,37 +1974,8 @@ object Dedup {
           stored.schema("doc_id").dataType == dt &&
           stored.schema("rep").dataType == dt) idOrdering(dt)
       else None
-    val smallGate = spark.conf.getOption("graft.cc.smallGraphEdges")
-      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(200000L)
-    val byteBudget = spark.conf.getOption("graft.cc.smallGraphBytes")
-      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(64L << 20)
-    // Bounded collect of the RAW delta edges. Fixed-width ids: the byte
-    // estimate is a pure function of the row count, so ONE limit-collect
-    // folds both gates and already holds every edge the fold needs. String
-    // ids byte-gate with one aggregate first (the round-15/16 driver-heap
-    // discipline — URL ids can be hundreds of bytes each), over a persisted
-    // projection so the delta computes once.
-    val collected: Option[Array[org.apache.spark.sql.Row]] =
-      if (smallOrd.isEmpty) None
-      else if (dt != StringType) {
-        val cap = math.min(smallGate, byteBudget / 96L)
-          .min(Int.MaxValue - 2L).max(0L).toInt
-        val rows = edgesRaw.limit(cap + 1).collect()
-        if (rows.length <= cap) Some(rows) else None
-      } else {
-        val p = edgesRaw.persist()
-        try {
-          val r = p.agg(count(lit(1)),
-            avg(length(col("a")) + length(col("b")))).head()
-          val nEdges = r.getLong(0)
-          val w = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
-          if (nEdges <= smallGate &&
-              nEdges * 96L + (nEdges * 4L * w).toLong <= byteBudget)
-            Some(p.collect())
-          else None
-        } finally p.unpersist(blocking = false)
-      }
-    collected match {
+    // one bounded collect of the RAW delta edges
+    smallOrd.flatMap(_ => boundedCollect(edgesRaw)) match {
       case Some(rows) =>
         foldClustersLocal(spark, clustersPath, stored, rows)(smallOrd.get)
       case None =>
@@ -2018,8 +1984,9 @@ object Dedup {
     }
   }
 
-  /** Observable run counter for the fused driver fold — lets specs assert
-    * which path served a call without parsing plans. */
+  /** Observable run counter for the driver folds of [[appendToClusters]]
+    * and [[removeFromClusters]] — lets specs assert which path served a
+    * call without parsing plans. */
   private[graft] val clusterFoldFastPathRuns =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -2036,89 +2003,48 @@ object Dedup {
       implicit ord: Ordering[Any]): Long = {
     import org.apache.spark.sql.types._
     import scala.jdk.CollectionConverters._
-    import graft.store.KeyedStore
     clusterFoldFastPathRuns.incrementAndGet(): Unit
-    // distinct non-null endpoints (a null side nulls the distributed
-    // path's =!= predicate — the edge is dropped there too)
-    val endpoints = new java.util.LinkedHashSet[Any]()
-    edges.foreach { r =>
-      val a = r.get(0); val b = r.get(1)
-      if (a != null && b != null) { endpoints.add(a): Unit; endpoints.add(b): Unit }
-    }
-    if (endpoints.isEmpty) return 0L
+    // a null side nulls the distributed path's =!= predicate — the edge is
+    // dropped there too
+    val live = edges.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    if (live.isEmpty) return 0L
     // file-pruned rep lookup: In(doc_id, endpoints) pushes into the graft
     // connector's key-range split pruning — the fold reads O(touched
     // files) of the assignment table, not all of it
-    val repOf = new java.util.HashMap[Any, Any]()
-    stored.where(col("doc_id").isInCollection(endpoints.asScala))
-      .collect()
-      .foreach(r => repOf.put(r.get(0), r.get(1)): Unit)
-    // contract each edge onto the rep graph; edges that collapse inside
-    // one component vanish, exactly like the distributed =!= filter
-    val parent = new java.util.HashMap[Any, Any]()
-    val isNew = new java.util.HashSet[Any]()
-    def find(x: Any): Any = {
-      var r = x
-      while (parent.getOrDefault(r, r) != r) r = parent.get(r)
-      var c = x // path compression
-      while (parent.getOrDefault(c, c) != c) {
-        val n = parent.get(c); parent.put(c, r); c = n
-      }
-      r
+    val repOf = stored
+      .where(col("doc_id").isInCollection(live.flatMap(r => Seq(r.get(0), r.get(1))).distinct))
+      .collect().map(r => r.get(0) -> r.get(1)).toMap
+    // contract each edge onto the rep graph; edges that collapse inside one
+    // component vanish, exactly like the distributed =!= filter. A
+    // contracted vertex is a stored rep (a stored rep is always also a
+    // stored doc_id, its own row) or a genuinely new id, never found in
+    // stored: the anti-join the distributed path pays is a set lookup here
+    val isNew = scala.collection.mutable.Set.empty[Any]
+    val contracted = live.toSeq.flatMap { r =>
+      val (a0, b0) = (r.get(0), r.get(1))
+      val (a, b) = (repOf.getOrElse(a0, a0), repOf.getOrElse(b0, b0))
+      if (a == b) None
+      else { isNew ++= Seq(a0, b0).filterNot(repOf.contains); Some((a, b)) }
     }
-    edges.foreach { r =>
-      val a0 = r.get(0); val b0 = r.get(1)
-      if (a0 != null && b0 != null) {
-        val a = if (repOf.containsKey(a0)) repOf.get(a0) else a0
-        val b = if (repOf.containsKey(b0)) repOf.get(b0) else b0
-        if (a != b) {
-          if (!repOf.containsKey(a0)) isNew.add(a0): Unit
-          if (!repOf.containsKey(b0)) isNew.add(b0): Unit
-          parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) parent.put(ra, rb)
-        }
-      }
-    }
-    if (parent.isEmpty) return 0L // delta lands inside existing components
-    // min-id representative per touched component, under the same ordering
-    // the distributed least()/min() compare
-    val members = parent.keySet().asScala.toSeq.groupBy(find)
-    val remap: Seq[(Any, Any)] = members.valuesIterator.flatMap { ms =>
-      val rep = ms.min
-      ms.iterator.map(m => m -> rep)
-    }.toSeq
-    // a contracted vertex is either a stored rep (mapped through repOf — and
-    // a stored rep is always also a stored doc_id, its own row) or a
-    // genuinely new id (never found in stored): the anti-join the
-    // distributed path pays is a set lookup here
-    val newDocs = remap.filter { case (v, _) => isNew.contains(v) }
-    val changed = remap.filter { case (v, nr) => !isNew.contains(v) && v != nr }
+    if (contracted.isEmpty) return 0L // delta lands inside existing components
+    val (newDocs, touched) = minIdComponents(contracted.iterator).toSeq
+      .partition { case (v, _) => isNew(v) }
+    val changed = touched.filter { case (v, nr) => v != nr }
     val dt = stored.schema("doc_id").dataType
-    val pairSchema = StructType(Seq(
-      StructField("doc_id", dt), StructField("rep", dt)))
-    def local(rows: Seq[(Any, Any)], s: StructType): DataFrame =
-      spark.createDataFrame(
-        rows.map { case (x, y) => org.apache.spark.sql.Row(x, y) }.asJava, s)
-    val newDocsDf = local(newDocs, pairSchema)
-    var n = newDocs.size.toLong
-    val upserts =
-      if (changed.isEmpty) newDocsDf
-      else {
-        // members of touched components whose representative changes — ONE
-        // stored scan with a broadcast map join (never a shuffle of the
-        // assignment table), materialized so the upsert's router and merge
-        // jobs don't recompute it
-        val remapDf = broadcast(local(changed, StructType(Seq(
-          StructField("touched", dt), StructField("new_rep", dt)))))
-        val mu = graft.Eager.materialize(
-          stored.join(remapDf, stored("rep") === remapDf("touched"))
-            .select(col("doc_id"), col("new_rep").as("rep")))
-        n += mu.count()
-        mu.unionByName(newDocsDf)
-      }
-    if (n > 0) KeyedStore.upsertIndexed(spark, clustersPath, upserts,
-      keyCol = "doc_id")
+    def local(rows: Seq[(Any, Any)], a: String, b: String): DataFrame =
+      spark.createDataFrame(rows.map { case (x, y) => org.apache.spark.sql.Row(x, y) }.asJava,
+        StructType(Seq(StructField(a, dt), StructField(b, dt))))
+    val newDocsDf = local(newDocs, "doc_id", "rep")
+    // members of touched components whose representative changes — ONE
+    // stored scan with a broadcast map join (never a shuffle of the
+    // assignment table), materialized so the upsert's router and merge
+    // jobs don't recompute it
+    val memberUpdates = if (changed.isEmpty) None else Some(graft.Eager.materialize(
+      stored.join(broadcast(local(changed, "touched", "new_rep")), col("rep") === col("touched"))
+        .select(col("doc_id"), col("new_rep").as("rep"))))
+    val n = newDocs.size + memberUpdates.fold(0L)(_.count())
+    if (n > 0) graft.store.KeyedStore.upsertIndexed(spark, clustersPath,
+      memberUpdates.fold(newDocsDf)(_.unionByName(newDocsDf)), keyCol = "doc_id")
     n
   }
 
@@ -2175,28 +2101,24 @@ object Dedup {
     * groupBy over the (small) assignment table. */
   def readClusters(spark: org.apache.spark.sql.SparkSession,
       clustersPath: String): DataFrame =
-    graft.store.KeyedStore.readKeyed(spark, clustersPath, "doc_id")
-      .select(col("doc_id"), col("rep"))
-      .withColumn("cluster_size", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("rep"))))
+    withClusterSizes(graft.store.KeyedStore.readKeyed(spark, clustersPath, "doc_id"))
+
+  private def withClusterSizes(t: DataFrame): DataFrame =
+    t.select(col("doc_id"), col("rep")).withColumn("cluster_size",
+      count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(col("rep"))))
 
   /** [[readClusters]] against the UNDO WINDOW — the assignment as of just
     * before the last mutation, funded by the keyed store's keep-one-back
     * index version: the maintenance audit view ("what did the last fold
     * merge?"), available until the NEXT mutation retires it. None before
-    * any mutation ([[graft.store.KeyedStore.readKeyedPrevious]]). NOTE:
-    * [[removeFromClusters]] applies TWO mutations (delete, then the
-    * re-election upsert), so after a takedown this view is the
-    * post-delete intermediate; the full pre-takedown snapshot needs
-    * `graft.keepVersions >= 3` and
-    * `KeyedStore.readKeyedPrevious(back = 2)`. */
+    * any mutation ([[graft.store.KeyedStore.readKeyedPrevious]]). Every
+    * maintenance verb commits its change as ONE mutation, so after a
+    * [[removeFromClusters]] this view is the full pre-takedown assignment
+    * (its compaction commits first, content-neutral). */
   def readClustersPrevious(spark: org.apache.spark.sql.SparkSession,
       clustersPath: String): Option[DataFrame] =
-    graft.store.KeyedStore.readKeyedPrevious(spark, clustersPath,
-        keyCol = "doc_id")
-      .map(_.select(col("doc_id"), col("rep"))
-        .withColumn("cluster_size", count(lit(1)).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("rep")))))
+    graft.store.KeyedStore.readKeyedPrevious(spark, clustersPath, keyCol = "doc_id")
+      .map(withClusterSizes)
 
   /**
    * TAKEDOWN on a persisted cluster layout — the delete verb every other
@@ -2226,36 +2148,126 @@ object Dedup {
    * lacks (capping under-mines by contract).
    *
    * Cost: O(|removed| + |touched components|) cluster work + the pairs
-   * rewrite — never O(corpus) cluster work. It first runs
-   * [[graft.store.KeyedStore.compact]] on the clusters table, which merges
-   * the small files [[appendToClusters]]' new ids open above the last one
-   * (content-neutral: [[readClustersPrevious]] still shows the post-delete
-   * step). With `purgePairs = true`
-   * (default) the pair evidence is purged EAGERLY ([[removeFromPairs]] —
-   * a full pairs-layout rewrite); `purgePairs = false` takes the LAZY
-   * path instead ([[tombstonePairs]]): O(|ids|) on the pairs side, the
-   * physical rewrite deferred to the next [[compactPairs]] — the shape a
-   * 100 TB pairs table needs. Either way the surviving pair set this verb
-   * re-clusters from is identical ([[readPairs]] is tombstone-exact), so
-   * the clusters-table outcome does not depend on the choice.
-   * Single-maintainer like every write verb. Returns (rows deleted, rows
-   * upserted) on the clusters table.
+   * rewrite. It first runs [[graft.store.KeyedStore.compact]] on the
+   * clusters table, merging the small files [[appendToClusters]]' new ids
+   * open above the last one. `purgePairs = true` (default) purges the
+   * pair evidence EAGERLY ([[removeFromPairs]], a full pairs-layout
+   * rewrite); `false` tombstones it LAZILY ([[tombstonePairs]]: O(|ids|),
+   * the rewrite deferred to the next [[compactPairs]] — the shape a 100 TB
+   * pairs table needs). [[readPairs]] is tombstone-exact, so the
+   * clusters-table outcome does not depend on the choice.
+   *
+   * Within the [[boundedCollect]] budget the takedown is a driver fold:
+   * one collect of the ids, key-pruned lookups of the removed rows and of
+   * their components' members, one collect of the surviving pairs among
+   * the touched survivors, and a [[minIdComponents]] re-election; over it,
+   * the same sets come from joins and [[clusterDuplicates]]. Either way
+   * the deletes (removed rows, orphaned survivors) and the re-election
+   * upserts commit as ONE [[graft.store.MutationBatch]], so no reader or
+   * crash sees a removed rep still referenced, and [[readClustersPrevious]]
+   * afterwards is the pre-takedown assignment. Single-maintainer like every
+   * write verb. Returns (rows deleted, rows upserted) on the clusters table.
    */
   def removeFromClusters(spark: org.apache.spark.sql.SparkSession,
       clustersPath: String, pairsPath: String, ids: DataFrame,
       threshold: Double = 0.8, maxIter: Int = 25,
       targetFiles: Int = 8, purgePairs: Boolean = true): (Long, Long) = {
+    import scala.jdk.CollectionConverters._
     import graft.store.KeyedStore
-    // snapshot the id list once — it may itself derive from readPairs/
-    // readClusters over the very layouts this verb rewrites
-    val rm = broadcast(graft.Eager.materialize(
-      ids.select(col(ids.columns.head).as("__rm"))))
     // fold the small files appends leave above the last one first: the
-    // table's file count stays bounded by the appends between takedowns,
-    // and the undo window after this verb still holds its delete step
+    // table's file count stays bounded by the appends between takedowns
     KeyedStore.compact(spark, clustersPath, "doc_id"): Unit
     val stored = KeyedStore.readKeyed(spark, clustersPath, "doc_id")
       .select(col("doc_id"), col("rep"))
+    val dt = stored.schema("doc_id").dataType
+    val rmIds = ids.select(col(ids.columns.head).as("__rm"))
+    // the driver fold mixes removal ids and stored ids in one structure —
+    // only sound when they share one type, as in appendToClusters
+    val ord = if (rmIds.schema("__rm").dataType == dt &&
+      stored.schema("rep").dataType == dt) idOrdering(dt) else None
+    // snapshot the id list once, before the purge — it may itself derive
+    // from readPairs/readClusters over the very layouts this verb rewrites
+    val rmRows = ord.flatMap(_ => boundedCollect(rmIds))
+    val rm = rmRows.map(rs => spark.createDataFrame(rs.toSeq.asJava, rmIds.schema))
+      .getOrElse(graft.Eager.materialize(rmIds))
+    // the removed rows (In(doc_id, ..) rides the key-range file pruning),
+    // then every member of their components, bounded like the ids
+    val touched = rmRows.flatMap { rows =>
+      val keys = rows.iterator.map(_.get(0)).filter(_ != null).toSet
+      val removed =
+        if (keys.isEmpty) Array.empty[org.apache.spark.sql.Row]
+        else stored.where(col("doc_id").isInCollection(keys)).collect()
+      val reps = removed.iterator.map(_.get(1)).toSet
+      if (reps.isEmpty) Some(removed -> Array.empty[org.apache.spark.sql.Row])
+      else boundedCollect(stored.where(col("rep").isInCollection(reps)))
+        .map(removed -> _)
+    }
+    // purge the pair evidence FIRST: readPairs then serves exactly the
+    // surviving corpus's pairs (eagerly rewritten or tombstone-masked —
+    // readPairs is exact either way)
+    if (purgePairs) removeFromPairs(spark, pairsPath, rm, targetFiles)
+    else tombstonePairs(spark, pairsPath, rm): Unit
+    lazy val sp = readPairs(spark, pairsPath, threshold)
+    val (deletes, nDel, upserts, nUp) = touched match {
+      case Some((removed, members)) =>
+        takedownLocal(spark, sp, dt, removed, members, maxIter)(ord.get)
+      case None => takedownDistributed(stored, broadcast(rm), sp, maxIter)
+    }
+    val batch = graft.store.MutationBatch("doc_id")
+    if (nDel > 0) batch.delete(deletes)
+    if (nUp > 0) batch.put(upserts)
+    if (nDel + nUp > 0) batch.executeIndexed(spark, clustersPath): Unit
+    (nDel, nUp)
+  }
+
+  /** [[removeFromClusters]]' driver fold, after the purge: the touched
+    * survivors are `members` minus `removed`, re-elected over their
+    * surviving pairs (an over-budget pair set clusters through
+    * [[clusterDuplicates]], whose output is at most one row per survivor).
+    * Returns (deletes, count, upserts, count) — the row sets
+    * [[takedownDistributed]] derives with joins. */
+  private def takedownLocal(spark: org.apache.spark.sql.SparkSession,
+      sp: => DataFrame, dt: org.apache.spark.sql.types.DataType,
+      removed: Array[org.apache.spark.sql.Row],
+      members: Array[org.apache.spark.sql.Row], maxIter: Int)(
+      implicit ord: Ordering[Any]): (DataFrame, Long, DataFrame, Long) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    clusterFoldFastPathRuns.incrementAndGet(): Unit
+    val removedIds = removed.iterator.map(_.get(0)).toSet
+    val oldRep = members.iterator.map(r => r.get(0) -> r.get(1))
+      .filterNot { case (m, _) => removedIds(m) }.toMap
+    // BOTH endpoints among the touched survivors, so an out-of-sync pair
+    // (appended to pairs but never folded into clusters) cannot smuggle an
+    // untouched doc into the re-election
+    val newRep: Map[Any, Any] = if (oldRep.isEmpty) Map.empty else {
+      val ts = oldRep.keys
+      val sub = sp.where(col("id_a").isInCollection(ts) && col("id_b").isInCollection(ts))
+        .select(col("id_a").cast(dt).as("id_a"), col("id_b").cast(dt).as("id_b"))
+      boundedCollect(sub) match {
+        case Some(edges) => minIdComponents(edges.iterator.map(r => (r.get(0), r.get(1))))
+        case None => clusterDuplicates(sub, maxIter = maxIter).collect()
+          .map(r => r.get(0) -> r.get(1)).toMap
+      }
+    }
+    // touched survivors with no surviving pair are no longer near-duplicates
+    // of anything — deleted, as a scratch clustering would drop them
+    val deletes = (removedIds.toSeq ++ oldRep.keys.filterNot(newRep.contains)).map(Row(_))
+    val upserts = newRep.toSeq.collect {
+      case (m, r) if oldRep.get(m).exists(_ != r) => Row(m, r)
+    }
+    def field(n: String) = StructField(n, dt)
+    (spark.createDataFrame(deletes.asJava, StructType(Seq(field("doc_id")))),
+      deletes.size.toLong,
+      spark.createDataFrame(upserts.asJava, StructType(Seq(field("doc_id"), field("rep")))),
+      upserts.size.toLong)
+  }
+
+  /** [[removeFromClusters]]' fallback over the driver budget: the same
+    * row sets from joins and [[clusterDuplicates]], materialized. */
+  private def takedownDistributed(stored: DataFrame, rm: DataFrame,
+      sp: DataFrame, maxIter: Int): (DataFrame, Long, DataFrame, Long) = {
     // components containing a removed doc — everything else is untouchable
     val touchedReps = stored
       .join(rm, col("doc_id") === col("__rm"), "left_semi")
@@ -2265,23 +2277,12 @@ object Dedup {
       .join(touchedReps.withColumnRenamed("rep", "__tr"),
         col("rep") === col("__tr"), "left_semi")
       .select(col("doc_id"))
-    // rows to DELETE, part 1: removed ids present in the table (count them
-    // before any mutation — the plans read the pre-rewrite snapshots)
+    // rows to DELETE, part 1: removed ids present in the table
     val removedRows = stored
       .join(rm, col("doc_id") === col("__rm"), "left_semi")
       .select(col("doc_id"))
-    // purge the pair evidence FIRST: readPairs below then serves exactly
-    // the surviving corpus's pairs (eagerly rewritten or tombstone-masked
-    // — readPairs is exact either way)
-    if (purgePairs)
-      removeFromPairs(spark, pairsPath, rm.select(col("__rm")), targetFiles)
-    else
-      tombstonePairs(spark, pairsPath, rm.select(col("__rm"))): Unit
-    // surviving subgraph of the touched components only; endpoints of any
-    // pair share a component, but filter BOTH sides so an out-of-sync pair
-    // (appended to pairs but never folded into clusters) cannot smuggle an
-    // untouched doc into the re-cluster
-    val sp = readPairs(spark, pairsPath, threshold)
+    // surviving subgraph of the touched components only (both endpoints
+    // filtered, as in takedownLocal)
     val ts = touchedSurvivors.withColumnRenamed("doc_id", "__ts")
     val subPairs = sp
       .join(ts, col("id_a") === col("__ts"), "left_semi")
@@ -2289,9 +2290,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"))
     val newAssign = clusterDuplicates(subPairs, maxIter = maxIter)
       .select(col("id").as("doc_id"), col("rep").as("new_rep"))
-    // rows to DELETE, part 2: touched survivors with no surviving pair —
-    // no longer near-duplicates of anything, exactly as a scratch
-    // clustering of the surviving corpus would drop them
+    // rows to DELETE, part 2: touched survivors with no surviving pair
     val orphaned = touchedSurvivors
       .join(newAssign.select(col("doc_id")), Seq("doc_id"), "left_anti")
     val deletes = graft.Eager.materialize(
@@ -2301,12 +2300,7 @@ object Dedup {
       newAssign.join(stored, Seq("doc_id"))
         .where(col("rep") =!= col("new_rep"))
         .select(col("doc_id"), col("new_rep").as("rep")))
-    val (nDel, nUp) = (deletes.count(), upserts.count())
-    if (nDel > 0) KeyedStore.deleteIndexed(spark, clustersPath, deletes,
-      keyCol = "doc_id")
-    if (nUp > 0) KeyedStore.upsertIndexed(spark, clustersPath, upserts,
-      keyCol = "doc_id")
-    (nDel, nUp)
+    (deletes, deletes.count(), upserts, upserts.count())
   }
 
   /** [[repairClusters]]' outcome: `danglingReps` = rep values with no row
@@ -2322,10 +2316,11 @@ object Dedup {
    * Content-fsck for a [[writeClusters]] table — verify and heal REP
    * CLOSURE, the invariant every reader of the layout leans on: each
    * row's `rep` must itself be a stored row, a fixpoint (`rep(rep) =
-   * rep`), and the minimum id of its component. A crash between
-   * [[removeFromClusters]]' two mutations, or a raw
-   * `KeyedStore.deleteIndexed` takedown that skipped re-election, leaves
-   * dangling representatives and broken chains this verb repairs — the
+   * rep`), and the minimum id of its component. A raw
+   * `KeyedStore.deleteIndexed` takedown that skipped re-election (rather
+   * than [[removeFromClusters]], whose deletes and re-election upserts
+   * commit together) leaves dangling representatives and broken chains
+   * this verb repairs — the
    * layout-content twin of [[graft.store.ManifestTable.fsck]]'s
    * structural sweep (siblings: [[repairNearDupIndex]], the BM25 fsck).
    *

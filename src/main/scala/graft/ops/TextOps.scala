@@ -1032,14 +1032,15 @@ object TextOps {
     new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Sum of the parquet footer row counts of `paths` — driver-side
-    * metadata reads only (one footer per file, no Spark job). −1 when any
-    * footer is unreadable, so a caller auditing an expected count treats
-    * I/O trouble as a mismatch, never as agreement. */
+    * metadata reads only (one footer per file, no Spark job), on the
+    * bounded leaf pool. −1 when any footer is unreadable, so a caller
+    * auditing an expected count treats I/O trouble as a mismatch, never as
+    * agreement. */
   private[graft] def parquetFooterRows(
       spark: org.apache.spark.sql.SparkSession, paths: Seq[String]): Long =
     try {
       val conf = spark.sessionState.newHadoopConf()
-      paths.map { p =>
+      graft.store.Compaction.pooledMap(paths) { p =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(p), conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)

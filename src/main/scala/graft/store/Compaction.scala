@@ -101,16 +101,6 @@ object Compaction {
     df.write.option("mapreduce.fileoutputcommitter.algorithm.version",
       committerFor(df.sparkSession, target))
 
-  /** Size-adaptive per-leaf writer fan-out for the born-at-compaction-target
-    * partitioned writers (BM25 postings, SRP buckets, IVF cells). Guide
-    * §2/§6 discipline: the per-leaf file count derives from the INPUT SIZE
-    * ESTIMATE (~512 MB per output file, the columnar-file sweet spot), not
-    * from a constant tuned for one scale — a 600 KB bench corpus gets one
-    * writer per leaf (64 files, not 256 tiny ones), a 100 TB corpus gets
-    * ~leafBytes/512 MB writers (the old constant 4 would emit multi-GB
-    * files there). Plans with no usable size estimate (Catalyst's unknown
-    * sentinel) keep the legacy fan-out of 4. `graft.filesPerLeaf` overrides
-    * for operators that know their layout better. */
   /** Writers per leaf targeting ~512 MB output files, derived from the
     * INPUT plan's Catalyst size estimate. The estimate is a PRE-TRANSFORM
     * proxy: Catalyst cannot see row multiplication through explode/agg, so
@@ -144,7 +134,7 @@ object Compaction {
     * (listings, resolves); a caller whose `f` mutates state must drain all
     * outcomes before reacting to one failure (the appendPartitions pool
     * does exactly that, inline). */
-  private def pooledMap[A, B](items: Seq[A])(f: A => B): Seq[B] =
+  private[graft] def pooledMap[A, B](items: Seq[A])(f: A => B): Seq[B] =
     if (items.length <= 8) items.map(f)
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(16)

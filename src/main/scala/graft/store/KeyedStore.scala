@@ -196,7 +196,8 @@ object KeyedStore {
    *  1. ROUTE ONCE: one aggregate over the union of every op's keys, routed
    *     by a binary search over the live ranges, collects
    *     (file or gap, kind) → rows: the affected files, the gaps that
-   *     receive inserts, and the per-kind counts.
+   *     receive inserts, and the per-kind counts. Key sets already in
+   *     driver memory route on the driver, with no job.
    *  2. MERGE ONCE: the affected files are read once, under a catalog
    *     table's declared schema or else their footers' schemas merged (no
    *     inference job), and `plan` runs once.
@@ -264,13 +265,23 @@ object KeyedStore {
         s"$damaged pair(s) of overlapping live key ranges, which no indexed " +
         "mutation can route exactly — nothing applied; KeyedStore.fsckIndexed " +
         "reports them, and a KeyedStore.writeIndexed rewrite of the table repairs them")
-    // the routed pass: (route code, kind) → rows over every op's keys
-    def routedPass(key: DataFrame => Column, route: Column): Array[org.apache.spark.sql.Row] = {
-      val routed = keys.map { case (k, kind) =>
+    // the routed pass: (route code, kind) → rows over every op's keys. Key
+    // sets already in driver memory (the optimizer folds them to a
+    // LocalRelation) route on the driver without a job; the rest in one
+    // aggregate. A (route, kind) may appear once from each side.
+    def routedPass(key: DataFrame => Column, route: Column): Seq[(Int, Int, Long)] = {
+      val (local, distributed) = keys.map { case (k, kind) =>
         k.select(key(k).as("__k"), lit(kind).as("__kind"))
-      }.reduce(_ union _)
-        .groupBy(route.as("__r"), col("__kind")).count().collect()
-      routed.foreach(r => counts(r.getInt(1)) += r.getLong(2))
+      }.partition(_.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      val onDriver = local.flatMap(_.select(route, col("__kind")).collect())
+        .groupMapReduce(r => (r.getInt(0), r.getInt(1)))(_ => 1L)(_ + _)
+        .map { case ((r, kind), n) => (r, kind, n) }
+      val routed = onDriver.toSeq ++ (if (distributed.isEmpty) Nil
+        else distributed.reduce(_ union _)
+          .groupBy(route.as("__r"), col("__kind")).count().collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq)
+      routed.foreach { case (_, kind, n) => counts(kind) += n }
       routed
     }
     if (ix.isEmpty) { // no usable index: count, then full merge + fresh indexed layout
@@ -290,9 +301,9 @@ object KeyedStore {
     def route(c: String): Column =
       routerColumn(spark, keyDt, c, ranges, isNum)
     val routed = routedPass(k => col(k.columns.head).cast(keyDt), route("__k"))
-    val affected = routed.map(_.getInt(0)).filter(_ >= 0).toSet
-    val gaps = routed.filter(r => r.getInt(0) < 0 && r.getInt(1) != DeleteKind)
-      .map(r => -r.getInt(0) - 1).toSet
+    val affected = routed.map(_._1).filter(_ >= 0).toSet
+    val gaps = routed.collect { case (r, kind, _) if r < 0 && kind != DeleteKind => -r - 1 }
+      .toSet
     if (affected.isEmpty && gaps.isEmpty) return counts // nothing to touch
     val slotOf = slotsOf(n, affected, gaps)
     val numSlots = slotOf.max + 1
@@ -411,8 +422,7 @@ object KeyedStore {
     * follow too). */
   private def keyOrder(tag: String)(a: Any, b: Any): Int =
     if (tag == "num") a.asInstanceOf[BigDecimal].compare(b.asInstanceOf[BigDecimal])
-    else org.apache.spark.unsafe.types.UTF8String.fromString(a.toString)
-      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b.toString))
+    else org.apache.spark.sql.graft.KeyBounds.utf8Cmp(a.toString, b.toString)
 
   /** Pairs of key ranges (index-dialect bounds of key tag `tag`) that
     * overlap in [[keyOrder]] — 0 on any layout the key→file router can
@@ -622,9 +632,7 @@ object KeyedStore {
         s"compact requires a _graft_index (run writeIndexed first): $path"))
     val sizes = fs.listStatus(dirPath).filter(_.isFile)
       .map(st => st.getPath.getName -> st.getLen).toMap
-    val ordered =
-      if (ix.keyTag == "num") ix.ranges.toSeq.sortBy(_._2._1.asInstanceOf[BigDecimal])
-      else ix.ranges.toSeq.sortBy(_._2._1.toString)
+    val ordered = ix.ranges.toSeq.sortWith((a, b) => keyOrder(ix.keyTag)(a._2._1, b._2._1) < 0)
     // runs of consecutive small files -> merge groups of >= 2
     val groups = Seq.newBuilder[Seq[String]]
     var run = List.empty[String]

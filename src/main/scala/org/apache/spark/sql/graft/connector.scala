@@ -28,6 +28,7 @@ import org.apache.spark.sql.functions.{coalesce, col, count, input_file_name, li
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 /**
@@ -779,8 +780,9 @@ object GraftStreamOffset {
 /**
  * Conjunctive key constraints extracted from pushed filters: an interval
  * (lo/hi with inclusivity) plus an optional IN-set, compared in the key's own
- * ordering (numeric via BigDecimal, strings lexicographic — matching both
- * Spark's and parquet's ordering for these types).
+ * ordering (numeric via BigDecimal, strings in UTF-8 byte order — matching
+ * Spark's and parquet's ordering and the recorded file bounds; Java's
+ * UTF-16 order differs on supplementary characters).
  */
 final case class KeyBounds(
     lo: Option[(BigDecimal, Boolean)], hi: Option[(BigDecimal, Boolean)],
@@ -789,6 +791,10 @@ final case class KeyBounds(
 
   def unconstrained: Boolean =
     lo.isEmpty && hi.isEmpty && sLo.isEmpty && sHi.isEmpty && inSet.isEmpty
+
+  // the IN-set as UTF-8 strings, encoded once for every file's check
+  @transient private lazy val inUtf8: Option[Seq[UTF8String]] =
+    inSet.map(_.map(v => UTF8String.fromString(v.toString)))
 
   /** Can any key in [fileLo, fileHi] satisfy the constraints? `fileLo`/`fileHi`
     * are normalized values (BigDecimal or String) from the index/footer. */
@@ -801,9 +807,12 @@ final case class KeyBounds(
       })
       loOk && hiOk && inOk
     case (fl: String, fh: String) =>
-      val loOk = sLo.forall { case (v, incl) => if (incl) fh >= v else fh > v }
-      val hiOk = sHi.forall { case (v, incl) => if (incl) fl <= v else fl < v }
-      val inOk = inSet.forall(_.exists { v => v.toString >= fl && v.toString <= fh })
+      val (l, h) = (UTF8String.fromString(fl), UTF8String.fromString(fh))
+      val loOk = sLo.forall { case (v, incl) =>
+        val c = h.compareTo(UTF8String.fromString(v)); if (incl) c >= 0 else c > 0 }
+      val hiOk = sHi.forall { case (v, incl) =>
+        val c = l.compareTo(UTF8String.fromString(v)); if (incl) c <= 0 else c < 0 }
+      val inOk = inUtf8.forall(_.exists(u => u.compareTo(l) >= 0 && u.compareTo(h) <= 0))
       loOk && hiOk && inOk
     case _ => true // unknown stats type — keep the file
   }
@@ -817,12 +826,17 @@ object KeyBounds {
     case _ => None
   }
 
+  /** Spark's string order (UTF-8 bytes), which the sorted files, the
+    * recorded key bounds and the key→file router all follow. */
+  def utf8Cmp(a: String, b: String): Int =
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
+
   def fromFilters(filters: Array[Filter], keyCol: String): KeyBounds =
     filters.foldLeft(none)((acc, f) => and(acc, fromFilter(f, keyCol)))
 
   private def and(a: KeyBounds, b: KeyBounds): KeyBounds = KeyBounds(
     tight(a.lo, b.lo)(_ > _), tight(a.hi, b.hi)(_ < _),
-    tight(a.sLo, b.sLo)(_ > _), tight(a.sHi, b.sHi)(_ < _),
+    tight(a.sLo, b.sLo)(utf8Cmp(_, _) > 0), tight(a.sHi, b.sHi)(utf8Cmp(_, _) < 0),
     (a.inSet, b.inSet) match {
       case (Some(x), Some(y)) => Some(x.intersect(y))
       case (x, y) => x.orElse(y)
@@ -1689,8 +1703,10 @@ class GraftDataWriter(conf: Configuration, dir: String, fileName: String,
   private var rows = 0L
   private var loNum: BigDecimal = _
   private var hiNum: BigDecimal = _
-  private var loStr: String = _
-  private var hiStr: String = _
+  // string bounds in UTF-8 byte order, the order the router, Spark's sort
+  // and the overlap guard compare in (copied: the row's bytes are reused)
+  private var loStr: UTF8String = _
+  private var hiStr: UTF8String = _
   private var statsOk = keyTag.isDefined && keyIdx >= 0
 
   private def ensureWriter(): Unit = if (writer == null) {
@@ -1726,9 +1742,9 @@ class GraftDataWriter(conf: Configuration, dir: String, fileName: String,
           if (loNum == null || v < loNum) loNum = v
           if (hiNum == null || v > hiNum) hiNum = v
         case _ =>
-          val v = row.get(keyIdx, keyDt).toString
-          if (loStr == null || v < loStr) loStr = v
-          if (hiStr == null || v > hiStr) hiStr = v
+          val v = row.getUTF8String(keyIdx)
+          if (loStr == null || v.compareTo(loStr) < 0) loStr = v.clone()
+          if (hiStr == null || v.compareTo(hiStr) > 0) hiStr = v.clone()
       }
     }
     rows += 1
@@ -1739,7 +1755,7 @@ class GraftDataWriter(conf: Configuration, dir: String, fileName: String,
     if (writer != null) writer.close()
     val (lo, hi) = keyTag match {
       case Some("num") if statsOk && loNum != null => (loNum.toString, hiNum.toString)
-      case Some(_) if statsOk && loStr != null => (loStr, hiStr)
+      case Some(_) if statsOk && loStr != null => (loStr.toString, hiStr.toString)
       case _ => ("", "")
     }
     GraftTaskCommit(fileName, lo, hi, rows, statsOk && rows > 0)

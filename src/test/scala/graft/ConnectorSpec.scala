@@ -115,6 +115,44 @@ class ConnectorSpec extends SparkSpec {
       spark.read.parquet(dir).where(col("key") >= "doc_00000010" && col("key") < "doc_00000020").count())
   }
 
+  test("string key bounds are recorded, pruned and compacted in UTF-8 byte order " +
+      "(U+FFFD sorts below U+1F600 in bytes, above it in UTF-16)") {
+    import spark.implicits._
+    import org.apache.spark.sql.graft.GraftIndex
+    val dir = java.nio.file.Files.createTempDirectory("graft_conn").resolve("utf8").toString
+    val (fffd, smiley) = ("\uFFFD", new String(Character.toChars(0x1F600)))
+    KeyedStore.writeIndexed(Seq((fffd, 1L), (smiley, 2L)).toDF("key", "v"), dir, numRanges = 1)
+    def ranges(d: String) = GraftIndex.read(new org.apache.hadoop.fs.Path(d),
+      spark.sessionState.newHadoopConf()).get.ranges.values.toSeq
+    assert(ranges(dir).map(r => (r._1, r._2)) == Seq((fffd, smiley)),
+      s"one file's bounds, lowest byte string first: ${ranges(dir)}")
+    assert(KeyedStore.fsckIndexed(spark, dir).overlappingRanges == 0)
+    // point gets prune by the recorded bounds and still find each key
+    val t = KeyedStore.readKeyed(spark, dir)
+    assert(t.where(col("key") === fffd).collect().map(_.getLong(1)).toSeq == Seq(1L))
+    assert(t.where(col("key") === smiley).collect().map(_.getLong(1)).toSeq == Seq(2L))
+    assert(t.where(col("key") > fffd).collect().map(_.getLong(1)).toSeq == Seq(2L))
+    // a put routes into the file holding its key: updated, not duplicated
+    KeyedStore.upsertIndexed(spark, dir, Seq((fffd, 10L)).toDF("key", "v"))
+    assert(KeyedStore.readKeyed(spark, dir).collect().map(r => r.getString(0) -> r.getLong(1))
+      .toMap == Map(fffd -> 10L, smiley -> 2L))
+    assert(KeyedStore.readKeyed(spark, dir).count() == 2L)
+    // compaction merges only files adjacent in byte order: a large file of
+    // U+FFFE keys between a small U+FFFD file and a small U+1F601 file
+    // keeps the two small ones apart
+    val dir2 = java.nio.file.Files.createTempDirectory("graft_conn").resolve("utf8c").toString
+    KeyedStore.writeIndexed(Seq((fffd, 1L)).toDF("key", "v"), dir2, numRanges = 1)
+    KeyedStore.upsertIndexed(spark, dir2, (0 until 3000)
+      .map(i => (f"\uFFFE$i%05d", i.toLong)).toDF("key", "v"))
+    KeyedStore.upsertIndexed(spark, dir2,
+      Seq((new String(Character.toChars(0x1F601)), 3L)).toDF("key", "v"))
+    assert(ranges(dir2).size == 3)
+    assert(KeyedStore.compact(spark, dir2, smallFileBytes = 4096L) == 0,
+      "no two small files are adjacent in byte order")
+    assert(KeyedStore.fsckIndexed(spark, dir2).overlappingRanges == 0)
+    assert(KeyedStore.readKeyed(spark, dir2).count() == 3002L)
+  }
+
   test("reported statistics shrink after pruning (broadcast-decision input)") {
     val full = keyed
     val pruned = keyed.where(col("c_custkey") === 42)

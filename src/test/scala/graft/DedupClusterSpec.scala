@@ -7,7 +7,9 @@ import graft.ops.Dedup
   * (driver union-find) to the distributed pointer-jumping loop it
   * shortcuts: identical components, identical MIN-id representatives,
   * identical sizes — including the UTF-8-vs-UTF-16 ordering trap on
-  * string ids with supplementary characters. */
+  * string ids with supplementary characters. The driver folds of
+  * [[Dedup.appendToClusters]] and [[Dedup.removeFromClusters]] are pinned
+  * to their join fallbacks the same way. */
 class DedupClusterSpec extends SparkSpec {
   _quiet
   import spark.implicits._
@@ -157,6 +159,106 @@ class DedupClusterSpec extends SparkSpec {
     assert(state.contains((smiley, "�")) && state.contains(("c", "a")),
       s"UTF-8 min must stay the representative: $state")
   }
+
+  // ---- removeFromClusters: the driver takedown fold vs its join fallback ----
+
+  /** Write the pairs layout (`writePairs`) and its clusters table twice
+    * and take `rm` down on each — once through the driver fold (edge gate
+    * `foldGate`, default when None; asserts the fold ran), once through the
+    * join path (gate forced to 0; asserts it did not). Each takedown must
+    * add exactly one index version after its compaction, with the
+    * pre-takedown assignment in the undo window; the two paths must return
+    * equal counts and leave equal tables. */
+  private def takedownBothPaths(writePairs: String => Unit,
+      rm: org.apache.spark.sql.DataFrame, threshold: Double,
+      purgePairs: Boolean, foldGate: Option[Long] = None)
+      : ((Long, Long), Set[(Any, Any)]) = {
+    import graft.store.KeyedStore
+    def run(forceJoins: Boolean): ((Long, Long), Set[(Any, Any)]) = {
+      val base = java.nio.file.Files.createTempDirectory("graft_takedown").toString
+      val (pairs, clusters) = (base + "/pairs", base + "/clusters")
+      writePairs(pairs)
+      Dedup.writeClusters(spark, pairs, clusters, threshold)
+      KeyedStore.compact(spark, clusters, "doc_id"): Unit
+      val before = clusterState(clusters)
+      def version(): Long = KeyedStore.retainedVersions(spark, clusters, "doc_id").head._1
+      val v0 = version()
+      val folds = Dedup.clusterFoldFastPathRuns.get()
+      (if (forceJoins) Some(0L) else foldGate)
+        .foreach(g => spark.conf.set("graft.cc.smallGraphEdges", g.toString))
+      val counts = try Dedup.removeFromClusters(spark, clusters, pairs, rm,
+        threshold, purgePairs = purgePairs)
+      finally spark.conf.unset("graft.cc.smallGraphEdges")
+      assert((Dedup.clusterFoldFastPathRuns.get() - folds) == (if (forceJoins) 0L else 1L),
+        s"forceJoins=$forceJoins must pick its path")
+      assert(version() == v0 + 1, "deletes and re-election commit as one index version")
+      val prev = Dedup.readClustersPrevious(spark, clusters).get.collect()
+        .map(r => (r.get(0), r.get(1))).toSet
+      assert(prev == before, s"the undo window holds the pre-takedown assignment: $prev")
+      (counts, clusterState(clusters))
+    }
+    val fused = run(forceJoins = false)
+    val joins = run(forceJoins = true)
+    assert(fused == joins, s"paths diverged:\nfused=$fused\njoins=$joins")
+    fused
+  }
+
+  private val chainDocs = {
+    // exact-dup groups {1,2,3} and {10,11}; a sliding-window chain
+    // 40~41~42~43 that removing 41 splits (threshold 0.5)
+    val w = (1 to 16).map(i => s"w$i")
+    def win(from: Int) = w.slice(from, from + 10).mkString(" ")
+    Seq((1L, "alpha beta gamma delta epsilon"), (2L, "alpha beta gamma delta epsilon"),
+      (3L, "alpha beta gamma delta epsilon"), (10L, "zeta eta theta iota kappa"),
+      (11L, "zeta eta theta iota kappa"),
+      (40L, win(0)), (41L, win(2)), (42L, win(4)), (43L, win(6)))
+  }
+
+  for (purge <- Seq(true, false))
+    test(s"takedown fold == join path (purgePairs = $purge): rep removal, " +
+        "orphaned survivor, split chain, absent id") {
+      val (counts, state) = takedownBothPaths(
+        Dedup.writePairs(chainDocs.toDF("doc_id", "text"), "doc_id", "text", _),
+        Seq(1L, 10L, 41L, 999L).toDF("doc_id"), 0.5, purge)
+      assert(counts == ((5L, 4L)), s"deletes {1,10,41} + orphans {11,40}; " +
+        s"upserts {2,3} re-elected, {42,43} split off: $counts")
+      assert(state == Set[(Any, Any)]((2L, 2L), (3L, 2L), (42L, 42L), (43L, 42L)))
+    }
+
+  test("takedown fold == join path when the surviving pairs exceed the " +
+      "budget the ids and members fit: the fold re-elects through clusterDuplicates") {
+    // 6 exact duplicates; removing the rep leaves 5 survivors with 10 pairs:
+    // the id (1) and the members (6) fit an 8-row gate, the pairs do not
+    val docs = (1L to 6L).map(i => (i, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+    val (counts, state) = takedownBothPaths(
+      Dedup.writePairs(docs, "doc_id", "text", _), Seq(1L).toDF("doc_id"), 0.8,
+      purgePairs = false, foldGate = Some(8L))
+    assert(counts == ((1L, 5L)), s"delete 1; re-elect 2..6: $counts")
+    assert(state == (2L to 6L).map(i => (i: Any, 2L: Any)).toSet)
+  }
+
+  for (purge <- Seq(true, false))
+    test(s"takedown fold == join path on string ids (purgePairs = $purge): " +
+        "the UTF-8-vs-UTF-16 re-election trap") {
+      // {zz, U+FFFD, U+1F600} has rep "zz"; taking "zz" down re-elects
+      // between U+FFFD and U+1F600, and only UTF-8 byte order picks U+FFFD.
+      // writePairs mines long ids only, so the layout is written directly:
+      // exact-duplicate groups, every pair at jaccard 1
+      val smiley = new String(Character.toChars(0x1F600))
+      val groups = Seq(Seq("a", "c"), Seq("zz", "\uFFFD", smiley), Seq("m", "n"))
+      def layout(pairs: String): Unit = {
+        graft.store.ManifestTable.write(groups.flatMap(_.combinations(2))
+          .map { case Seq(x, y) => (x, 5, y, 5, 5L) }
+          .toDF("id_a", "n_a", "id_b", "n_b", "inter"), pairs + "/pairs")
+        graft.store.ManifestTable.write(groups.zipWithIndex
+          .flatMap { case (g, i) => g.map(id => (id, 5, i.toLong)) }
+          .toDF("id", "n", "s"), pairs + "/postings")
+      }
+      val (counts, state) = takedownBothPaths(layout, Seq("zz", "a").toDF("doc_id"), 0.8, purge)
+      assert(counts == ((3L, 2L)), s"deletes {zz, a} + orphan c; upserts U+FFFD, U+1F600: $counts")
+      assert(state == Set[(Any, Any)](("\uFFFD", "\uFFFD"), (smiley, "\uFFFD"),
+        ("m", "m"), ("n", "m")), s"the UTF-8 minimum is the new rep: $state")
+    }
 
   test("the gate reads the session conf and large graphs still converge " +
       "through the loop (smoke: 3k-edge ring)") {

@@ -12,7 +12,8 @@ class EntrySpec extends SparkSpec {
   }
 
   test("every query runs at sf0.001 and every oracle key exists in queries") {
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
+      "every query has an oracle row and every oracle row a query")
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, sf()).count()
       assert(n >= 0, name)

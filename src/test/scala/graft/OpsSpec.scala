@@ -1655,15 +1655,15 @@ class OpsSpec extends SparkSpec {
     // an exact takedown leaves rep closure intact: repair finds nothing
     assert(Dedup.repairClusters(spark, clustersPath) ==
       Dedup.ClusterRepairStat(0L, 0L, 0L))
-    // the undo window after a takedown is the POST-DELETE intermediate
-    // (removeFromClusters = delete, then the re-election upsert; the full
-    // pre-takedown snapshot needs keepVersions >= 3 — scaladoc'd): the
-    // survivors still carry their OLD representatives here
+    // the undo window after a takedown is the FULL pre-takedown assignment:
+    // its deletes and re-election upserts commit as one mutation
     val prev = Dedup.readClustersPrevious(spark, clustersPath).get
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(prev == Map(2L -> ((1L, 2L)), 3L -> ((1L, 2L)),
-      42L -> ((40L, 2L)), 43L -> ((40L, 2L))),
-      s"previous view = post-delete, pre-re-election: $prev")
+    assert(prev == Map(1L -> ((1L, 3L)), 2L -> ((1L, 3L)), 3L -> ((1L, 3L)),
+      10L -> ((10L, 2L)), 11L -> ((10L, 2L)),
+      40L -> ((40L, 4L)), 41L -> ((40L, 4L)), 42L -> ((40L, 4L)),
+      43L -> ((40L, 4L))),
+      s"previous view = the pre-takedown assignment: $prev")
   }
 
   test("removeFromClusters merges the small files appendToClusters opens " +
