@@ -22,11 +22,11 @@ import org.apache.spark.sql.types._
  *    concurrent jobs are last-committer-wins. This is the documented semantic
  *    difference of a batch engine (SURVEY §7).
  *
- * Scale notes (100 TB): every merge here is a key-partitioned shuffle join — no
- * driver-side collection anywhere. Mutation batches are themselves DataFrames, so
- * a billion-row put batch is just another shuffle input. Increment aggregation is
- * a partial-agg-then-merge (`groupBy(key).agg(sum)`) so hot keys combine map-side
- * before the shuffle.
+ * Scale notes (100 TB): every merge here is one per-key fold over the union of
+ * the current rows and the batch's rows ([[org.apache.spark.sql.graft.MergeFold]]):
+ * one shuffle, no join, no driver-side collection. Mutation batches are
+ * themselves DataFrames, so a billion-row put batch is just another shuffle
+ * input; a key's increment deltas are summed in the fold as they stream by.
  */
 object KeyedStore {
 
@@ -189,9 +189,10 @@ object KeyedStore {
    * The one indexed write path every keyed mutation shares
    * ([[MutationBatch.executeIndexed]]; the single-op verbs above are
    * one-op batches). `keys` holds each op's key column (first column) with
-   * its kind; `plan` maps the current rows of the affected files to their
-   * merged rows (the batch's deletes → puts → increments algebra). Returns
-   * the rows each kind was asked to mutate.
+   * its kind; `plan` folds the batch into the current rows of the affected
+   * files, shuffled on the output slot it is given (the batch's deletes →
+   * puts → increments fold, [[MutationBatch]]). Returns the rows each kind
+   * was asked to mutate.
    *
    *  1. ROUTE ONCE: one aggregate over the union of every op's keys, routed
    *     by a binary search over the live ranges, collects
@@ -200,15 +201,16 @@ object KeyedStore {
    *     driver memory route on the driver, with no job.
    *  2. MERGE ONCE: the affected files are read once, under a catalog
    *     table's declared schema or else their footers' schemas merged (no
-   *     inference job), and `plan` runs once.
+   *     inference job), and `plan` folds them with the batch in one shuffle.
    *  3. EXACT SLOTS: the driver numbers the output files — one per
    *     affected file; an insert gap next to an affected file joins it (the
    *     lower neighbour first); any other interior gap gets its own file;
    *     the gaps below the first and above the last file always do (so an
    *     append-keyed table grows small tail files that [[compact]] merges,
-   *     instead of rewriting its last file on every batch). Merged rows are
-   *     hash-partitioned on a literal preimage of their slot, so slot `s`
-   *     is exactly task `s` and no output range can span an untouched file.
+   *     instead of rewriting its last file on every batch). The fold's rows
+   *     are hash-partitioned on a literal preimage of their slot, so slot `s`
+   *     is exactly task `s` and no output range can span an untouched file;
+   *     that one exchange is the only shuffle the current rows cross.
    *  4. GUARD, WRITE AND COMMIT ONCE: if any staged range overlaps another
    *     staged range or an untouched file the staging is deleted and the
    *     mutation fails having applied nothing; otherwise one rename-in,
@@ -236,10 +238,10 @@ object KeyedStore {
    * usable index takes the full-rewrite fallback.
    */
   private[store] def mergeIndexed(spark: SparkSession, path: String, keyCol: String,
-      keys: Seq[(DataFrame, Int)])(plan: DataFrame => DataFrame): Array[Long] = {
+      keys: Seq[(DataFrame, Int)])(
+      plan: (DataFrame, Option[(Int, Column)]) => DataFrame): Array[Long] = {
     import org.apache.spark.sql.graft.{GraftIndex, GraftTableMeta}
-    val counts = new Array[Long](3)
-    if (keys.isEmpty) return counts
+    if (keys.isEmpty) return new Array[Long](3)
     val hadoopConf = spark.sessionState.newHadoopConf()
     val dirPath = new org.apache.hadoop.fs.Path(path)
     val fs = dirPath.getFileSystem(hadoopConf)
@@ -254,43 +256,24 @@ object KeyedStore {
     val isNum = tag == "num"
     // (name, lo, hi) sorted by lo — the router's binary-search table
     val ranges: Array[(String, (Any, Any, Long))] = ix.map { i =>
-      i.ranges.toArray.sortWith((a, b) => keyOrder(tag)(a._2._1, b._2._1) < 0)
+      i.ranges.toArray.sortWith((a, b) => GraftIndex.keyOrder(tag)(a._2._1, b._2._1) < 0)
     }.getOrElse(Array.empty)
     val n = ranges.length
     // the router needs disjoint ranges: a table an older write already left
     // overlapping is refused before any job, whatever this batch touches
-    val damaged = overlappingRanges(tag, ranges.map(_._2))
+    val damaged = GraftIndex.overlappingRanges(tag, ranges.map(_._2))
     if (damaged > 0)
       throw new IllegalStateException(s"mergeIndexed: $path already holds " +
         s"$damaged pair(s) of overlapping live key ranges, which no indexed " +
         "mutation can route exactly — nothing applied; KeyedStore.fsckIndexed " +
         "reports them, and a KeyedStore.writeIndexed rewrite of the table repairs them")
-    // the routed pass: (route code, kind) → rows over every op's keys. Key
-    // sets already in driver memory (the optimizer folds them to a
-    // LocalRelation) route on the driver without a job; the rest in one
-    // aggregate. A (route, kind) may appear once from each side.
-    def routedPass(key: DataFrame => Column, route: Column): Seq[(Int, Int, Long)] = {
-      val (local, distributed) = keys.map { case (k, kind) =>
-        k.select(key(k).as("__k"), lit(kind).as("__kind"))
-      }.partition(_.queryExecution.optimizedPlan
-        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-      val onDriver = local.flatMap(_.select(route, col("__kind")).collect())
-        .groupMapReduce(r => (r.getInt(0), r.getInt(1)))(_ => 1L)(_ + _)
-        .map { case ((r, kind), n) => (r, kind, n) }
-      val routed = onDriver.toSeq ++ (if (distributed.isEmpty) Nil
-        else distributed.reduce(_ union _)
-          .groupBy(route.as("__r"), col("__kind")).count().collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq)
-      routed.foreach { case (_, kind, n) => counts(kind) += n }
-      routed
-    }
     if (ix.isEmpty) { // no usable index: count, then full merge + fresh indexed layout
       require(!fs.exists(dirPath) || GraftIndex.versionFiles(fs, dirPath).isEmpty,
         s"mergeIndexed: $path carries a graft index, but none usable for " +
           s"key '$keyCol' — wrong key column, or a damaged index (run " +
           "KeyedStore.fsckIndexed / rebuild via writeIndexed)")
-      routedPass(_ => lit(null), lit(-1))
-      fullRewrite(spark, path, keyCol)(plan)
+      val counts = countKinds(keys)
+      fullRewrite(spark, path, keyCol)(plan(_, None))
       return counts
     }
     val keyDt = GraftIndex.liveSchema(dirPath, hadoopConf)
@@ -300,7 +283,8 @@ object KeyedStore {
     // mis-route leaves a duplicate row behind)
     def route(c: String): Column =
       routerColumn(spark, keyDt, c, ranges, isNum)
-    val routed = routedPass(k => col(k.columns.head).cast(keyDt), route("__k"))
+    val routed = routedPass(keys, k => col(k.columns.head).cast(keyDt), route("__k"))
+    val counts = kindCounts(routed)
     val affected = routed.map(_._1).filter(_ >= 0).toSet
     val gaps = routed.collect { case (r, kind, _) if r < 0 && kind != DeleteKind => -r - 1 }
       .toSet
@@ -323,12 +307,11 @@ object KeyedStore {
     // slot → a literal whose Murmur3 hash lands in partition `slot` of a
     // numSlots-way hash repartition: the shuffle places every row by the
     // driver's slot table, never by sampled range bounds
-    val preimage = hashPreimages(numSlots)
+    val preimage = GraftIndex.hashPreimages(numSlots)
     val partKey = slotOf.map(s => if (s < 0) null else Integer.valueOf(preimage(s)))
     val code = route(keyCol)
-    val slotKey = coalesce(
-      element_at(typedLit(partKey.toSeq), when(code >= 0, code + 1).otherwise(lit(n) - code)),
-      raise_error(lit(s"mergeIndexed: a merged row of $path routes to no output slot")))
+    val slotKey =
+      element_at(typedLit(partKey.toSeq), when(code >= 0, code + 1).otherwise(lit(n) - code))
     // per-attempt staging name AND per-attempt salt in the renamed-in data
     // file names: racing maintainers must collide only at the index commit
     // (where the fence arbitrates loudly), never on staging dirs or final
@@ -337,9 +320,9 @@ object KeyedStore {
     val staging = path + "__staging-" + salt
     val stagingPath = new org.apache.hadoop.fs.Path(staging)
     // stage through the graft write: each task records its file's key stats,
-    // so the staging dir arrives with its own sidecar — no re-scan needed
-    val merged = plan(current)
-    merged.repartition(numSlots, slotKey.as("__slot")).sortWithinPartitions(keyCol)
+    // so the staging dir arrives with its own sidecar — no re-scan needed.
+    // The fold emits each slot's rows in key order, so no sort follows it.
+    plan(current, Some(numSlots -> slotKey))
       .write.format("graft").option("key", keyCol).mode("overwrite").save(staging)
     val (stagedRanged, stagedUnranged) =
       GraftIndex.read(stagingPath, hadoopConf).filter(_.keyCol == keyCol)
@@ -347,14 +330,8 @@ object KeyedStore {
         .getOrElse(GraftIndex.computeEntries(spark,
           fs.listStatus(stagingPath).filter(_.getPath.getName.endsWith(".parquet"))
             .map(_.getPath.toString).toSeq, keyCol, tag))
-    val affectedNames = affected.map(i => ranges(i)._1)
-    val untouched = ix.get.ranges -- affectedNames
-    val overlaps = overlappingRanges(tag, untouched.values ++ stagedRanged.values)
-    if (overlaps > 0) {
-      fs.delete(stagingPath, true)
-      throw new IllegalStateException(s"mergeIndexed: $overlaps staged key range(s) of " +
-        s"$path overlap another live range — staging deleted, nothing applied")
-    }
+    val untouched = ix.get.ranges -- affected.map(i => ranges(i)._1)
+    GraftIndex.guardStaged(fs, stagingPath, tag, untouched, stagedRanged, s"mergeIndexed: $path")
     // crash-safe swap (see scaladoc): staged parts rename IN first under
     // fresh m<stamp> names — invisible to manifest-dialect readers until the
     // index commit below — then the new index version publishes ATOMICALLY;
@@ -381,6 +358,37 @@ object KeyedStore {
   }
 
   /**
+   * The routed pass over every op's keys: (route code, kind) → rows. Key
+   * sets already in driver memory (the optimizer folds them to a
+   * LocalRelation) route on the driver without a job; the rest in one
+   * aggregate. A (route, kind) may appear once from each side.
+   */
+  private def routedPass(keys: Seq[(DataFrame, Int)], key: DataFrame => Column,
+      route: Column): Seq[(Int, Int, Long)] = {
+    val (local, distributed) = keys.map { case (k, kind) =>
+      k.select(key(k).as("__k"), lit(kind).as("__kind"))
+    }.partition(_.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val onDriver = local.flatMap(_.select(route, col("__kind")).collect())
+      .groupMapReduce(r => (r.getInt(0), r.getInt(1)))(_ => 1L)(_ + _)
+      .map { case ((r, kind), n) => (r, kind, n) }
+    onDriver.toSeq ++ (if (distributed.isEmpty) Nil
+      else distributed.reduce(_ union _)
+        .groupBy(route.as("__r"), col("__kind")).count().collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getLong(2))).toSeq)
+  }
+
+  private def kindCounts(routed: Seq[(Int, Int, Long)]): Array[Long] = {
+    val counts = new Array[Long](3)
+    routed.foreach { case (_, kind, n) => counts(kind) += n }
+    counts
+  }
+
+  /** Rows per op kind of `keys` ([[OpsResult]]'s buckets), in one pass. */
+  private[store] def countKinds(keys: Seq[(DataFrame, Int)]): Array[Long] =
+    kindCounts(routedPass(keys, _ => lit(null), lit(-1)))
+
+  /**
    * The output slot of every route code, for a table of `n` sorted files:
    * index `f < n` is file `f`, index `n + g` is gap `g` (gap 0 below file
    * 0, gap `n` above file `n - 1`); -1 marks codes no merged row can carry.
@@ -400,44 +408,6 @@ object KeyedStore {
         else { next += 1; next - 1 }
     }
     slotOf
-  }
-
-  /** For each of `n` partitions, an int whose Spark hash (Murmur3, seed 42
-    * — `HashPartitioning`'s) lands in that partition of an `n`-way
-    * `repartition`. */
-  private def hashPreimages(n: Int): Array[Int] = {
-    val out = Array.fill(n)(-1)
-    var left = n
-    var v = 0
-    while (left > 0) {
-      val p = Math.floorMod(org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(v, 42), n)
-      if (out(p) < 0) { out(p) = v; left -= 1 }
-      v += 1
-    }
-    out
-  }
-
-  /** The order the key→file router compares index bounds in: numeric, or
-    * UTF-8 bytes for strings (Spark's string order, which the sorted files
-    * follow too). */
-  private def keyOrder(tag: String)(a: Any, b: Any): Int =
-    if (tag == "num") a.asInstanceOf[BigDecimal].compare(b.asInstanceOf[BigDecimal])
-    else org.apache.spark.sql.graft.KeyBounds.utf8Cmp(a.toString, b.toString)
-
-  /** Pairs of key ranges (index-dialect bounds of key tag `tag`) that
-    * overlap in [[keyOrder]] — 0 on any layout the key→file router can
-    * serve exactly. */
-  private[graft] def overlappingRanges(tag: String,
-      ranges: Iterable[(Any, Any, Long)]): Int = {
-    val cmp = keyOrder(tag) _
-    val sorted = ranges.toArray.sortWith((a, b) => cmp(a._1, b._1) < 0)
-    // each range against every later one it reaches: sorted by lo, so the
-    // scan stops at the first later range starting past this one's hi
-    sorted.indices.map { i =>
-      var j = i + 1
-      while (j < sorted.length && cmp(sorted(j)._1, sorted(i)._2) <= 0) j += 1
-      j - i - 1
-    }.sum
   }
 
   /**
@@ -632,7 +602,8 @@ object KeyedStore {
         s"compact requires a _graft_index (run writeIndexed first): $path"))
     val sizes = fs.listStatus(dirPath).filter(_.isFile)
       .map(st => st.getPath.getName -> st.getLen).toMap
-    val ordered = ix.ranges.toSeq.sortWith((a, b) => keyOrder(ix.keyTag)(a._2._1, b._2._1) < 0)
+    val ordered = ix.ranges.toSeq.sortWith((a, b) =>
+      GraftIndex.keyOrder(ix.keyTag)(a._2._1, b._2._1) < 0)
     // runs of consecutive small files -> merge groups of >= 2
     val groups = Seq.newBuilder[Seq[String]]
     var run = List.empty[String]
@@ -793,7 +764,8 @@ object KeyedStore {
     IndexedFsckStat(path, healed, strays, deadDirs.length, tmps.length + torn,
       missing, advisory = ix.exists(!_.manifest),
       tableExists = fs.exists(dirPath),
-      overlappingRanges = ix.map(i => overlappingRanges(i.keyTag, i.ranges.values)).getOrElse(0))
+      overlappingRanges = ix.map(i => GraftIndex.overlappingRanges(i.keyTag, i.ranges.values))
+        .getOrElse(0))
   }
 
   /** Reclaim disk on a [[writeIndexed]] layout between mutations: with
@@ -869,16 +841,6 @@ object KeyedStore {
       OpsResult(numDeletes + o.numDeletes, numPuts + o.numPuts, numIncrements + o.numIncrements)
   }
 
-  private def isMap(df: DataFrame, c: String): Boolean =
-    df.schema(c).dataType.isInstanceOf[MapType]
-
-  private def isStruct(df: DataFrame, c: String): Boolean =
-    df.schema(c).dataType.isInstanceOf[StructType]
-
-  /** Spark's map_concat needs LAST_WIN to express "new cell value wins". */
-  private[graft] def ensureConf(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-
   /**
    * Last-write-wins upsert (PutOp analogue). `puts` must share `current`'s schema
    * (missing columns are treated as untouched). Per column:
@@ -888,37 +850,14 @@ object KeyedStore {
    *    nulls them (nulling is DeleteOp's job, as in HBase);
    *  - scalar column: `coalesce(new, old)`.
    *
-   * `puts` must hold at most one row per key (like one `PutOp` per key in a
-   * reference batch) — duplicate keys would fan out the full-outer join.
-   * Order-dependent multi-put sequences belong in [[MutationBatch]], which
-   * applies its puts sequentially (last put wins, as in the reference).
+   * `puts` should hold at most one row per key (like one `PutOp` per key in a
+   * reference batch): the fold applies a key's rows of one put in no set
+   * order. Order-dependent multi-put sequences belong in [[MutationBatch]],
+   * which applies its puts in batch order (last put wins, as in the
+   * reference). A one-op batch, like the four verbs below.
    */
-  def upsert(current: DataFrame, puts: DataFrame, keyCol: String = "key"): DataFrame = {
-    ensureConf(current.sparkSession)
-    val o = current.alias("o")
-    val n = puts.alias("n")
-    val putCols = puts.columns.toSet
-    val joined = o.join(n, col(s"o.$keyCol") === col(s"n.$keyCol"), "full_outer")
-    val merged = current.columns.map {
-      case `keyCol` =>
-        coalesce(col(s"o.$keyCol"), col(s"n.$keyCol")).as(keyCol)
-      case c if !putCols.contains(c) => col(s"o.$c").as(c)
-      case c if isMap(current, c) =>
-        (when(col(s"o.$c").isNull, col(s"n.$c"))
-          .when(col(s"n.$c").isNull, col(s"o.$c"))
-          .otherwise(map_concat(col(s"o.$c"), col(s"n.$c")))).as(c)
-      case c if isStruct(current, c) =>
-        val st = current.schema(c).dataType.asInstanceOf[StructType]
-        val fields = st.fields.map { f =>
-          coalesce(col(s"n.$c").getField(f.name), col(s"o.$c").getField(f.name)).as(f.name)
-        }
-        when(col(s"o.$c").isNull && col(s"n.$c").isNull, lit(null).cast(st))
-          .otherwise(struct(fields.toIndexedSeq: _*)).as(c)
-      case c =>
-        coalesce(col(s"n.$c"), col(s"o.$c")).as(c)
-    }
-    joined.select(merged.toIndexedSeq: _*)
-  }
+  def upsert(current: DataFrame, puts: DataFrame, keyCol: String = "key"): DataFrame =
+    MutationBatch(keyCol).put(puts).plan(current)
 
   /**
    * Timestamp-versioned upsert — HBase cell semantics (reference: every cell
@@ -950,71 +889,29 @@ object KeyedStore {
 
   /** Whole-row delete (reference DeleteOp `delete(key)`, DeleteOp.scala:21-39). */
   def deleteRows(current: DataFrame, keys: DataFrame, keyCol: String = "key"): DataFrame =
-    current.join(keys.select(col(keys.columns.head).as(keyCol)), Seq(keyCol), "left_anti")
+    MutationBatch(keyCol).delete(keys).plan(current)
 
   /** Family delete: null the family column for the given keys
     * (reference `.family(_)`). */
   def deleteFamily(current: DataFrame, keys: DataFrame, famCol: String,
-      keyCol: String = "key"): DataFrame = {
-    val k = keys.select(col(keys.columns.head).as(keyCol)).withColumn("__del", lit(true))
-    current.join(k, Seq(keyCol), "left_outer")
-      .withColumn(famCol,
-        when(col("__del"), lit(null).cast(current.schema(famCol).dataType))
-          .otherwise(col(famCol)))
-      .drop("__del")
-  }
+      keyCol: String = "key"): DataFrame =
+    MutationBatch(keyCol).deleteFamily(keys, famCol).plan(current)
 
   /** Qualifier delete on a dynamic family: drop the given map keys
     * (reference `.values(_, Set(q))`). */
   def deleteQualifiers(current: DataFrame, keys: DataFrame, famCol: String,
-      qualifiers: Seq[Any], keyCol: String = "key"): DataFrame = {
-    val k = keys.select(col(keys.columns.head).as(keyCol)).withColumn("__del", lit(true))
-    val quals = array(qualifiers.map(lit): _*)
-    current.join(k, Seq(keyCol), "left_outer")
-      .withColumn(famCol,
-        when(col("__del"), map_filter(col(famCol), (q, _) => !array_contains(quals, q)))
-          .otherwise(col(famCol)))
-      .drop("__del")
-  }
+      qualifiers: Seq[Any], keyCol: String = "key"): DataFrame =
+    MutationBatch(keyCol).deleteQualifiers(keys, famCol, qualifiers).plan(current)
 
   /**
    * Increment merge (IncrementOp analogue). `deltas` columns: the key plus numeric
-   * scalar columns and/or `map<K, long/double>` columns to add. Multiple delta rows
-   * for one key are pre-summed (the "increments within one batch are summed" rule).
-   * Map increments union-merge keys via `map_zip_with(o, d, coalesce(v1,0)+coalesce(v2,0))`.
+   * scalar columns and/or `map<K, long/double>` columns to add. A key's delta rows
+   * are summed (the "increments within one batch are summed" rule: SUM per scalar,
+   * per map qualifier a sum that is null only when all its values are), then added
+   * as `coalesce(old, 0) + delta`; map increments union-merge qualifiers via
+   * `map_zip_with(old, delta, coalesce(v1, 0) + coalesce(v2, 0))`. A row with
+   * no delta keeps its maps, and its null scalar delta columns read 0.
    */
-  def increment(current: DataFrame, deltas: DataFrame, keyCol: String = "key"): DataFrame = {
-    import org.apache.spark.sql.graft.{Bridge, MapValueSum}
-    val deltaCols = deltas.columns.filter(_ != keyCol)
-    val (mapCols, scalarCols) = deltaCols.partition(c => isMap(deltas, c))
-    // Pre-aggregate the batch in ONE groupBy whose every aggregate combines
-    // map-side, so a hot key costs one partial sum per qualifier before the
-    // shuffle: scalars SUM; each map column sums per qualifier, null only
-    // when all of a qualifier's values are (MapValueSum)
-    val aggs = scalarCols.map(c => sum(col(c)).as(c)) ++ mapCols.map { c =>
-      val mt = deltas.schema(c).dataType.asInstanceOf[MapType]
-      Bridge.column(MapValueSum(Bridge.expression(col(c))).toAggregateExpression())
-        .cast(MapType(mt.keyType, mt.valueType, valueContainsNull = true)).as(c)
-    }
-    val summed =
-      if (aggs.isEmpty) deltas.select(col(keyCol)).distinct()
-      else deltas.groupBy(col(keyCol)).agg(aggs.head, aggs.tail.toIndexedSeq: _*)
-    val o = current.alias("o")
-    val n = summed.alias("n")
-    val joined = o.join(n, col(s"o.$keyCol") === col(s"n.$keyCol"), "full_outer")
-    val merged = current.columns.map {
-      case `keyCol` => coalesce(col(s"o.$keyCol"), col(s"n.$keyCol")).as(keyCol)
-      case c if mapCols.contains(c) =>
-        val mt = current.schema(c).dataType.asInstanceOf[MapType]
-        (when(col(s"o.$c").isNull, col(s"n.$c").cast(mt))
-          .when(col(s"n.$c").isNull, col(s"o.$c"))
-          .otherwise(map_zip_with(col(s"o.$c"), col(s"n.$c").cast(mt),
-            (_, v1, v2) => coalesce(v1, lit(0)) + coalesce(v2, lit(0))))).as(c)
-      case c if scalarCols.contains(c) =>
-        (coalesce(col(s"o.$c"), lit(0)) +
-          coalesce(col(s"n.$c"), lit(0))).cast(current.schema(c).dataType).as(c)
-      case c => col(s"o.$c").as(c)
-    }
-    joined.select(merged.toIndexedSeq: _*)
-  }
+  def increment(current: DataFrame, deltas: DataFrame, keyCol: String = "key"): DataFrame =
+    MutationBatch(keyCol).increment(deltas).plan(current)
 }

@@ -1,7 +1,8 @@
 package graft.store
 
 import scala.collection.mutable
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.graft.MergeFold
 
 /**
  * Fluent, chainable mutation batch — analogue of the reference's `OpBase` chain
@@ -18,62 +19,52 @@ import org.apache.spark.sql.DataFrame
  * HbaseTable.scala:373-423). `++` merges two batches (the reference's `+`
  * combinator).
  *
- * Everything stays distributed: a batch is a set of DataFrames, the merge is a
- * set of key-partitioned joins. An empty put routes nowhere and counts 0, as
- * the reference skips it (OpBase.scala:69) — without a job to find out.
+ * Everything stays distributed: a batch is a set of DataFrames, and the merge
+ * is one per-key fold over the union of the current rows and every op's rows
+ * ([[org.apache.spark.sql.graft.MergeFold]]) — one shuffle, no join. An
+ * empty put routes nowhere and counts 0, as the reference skips it
+ * (OpBase.scala:69) — without a job to find out.
  */
-final class MutationBatch private (
-    private val deletes: mutable.Buffer[DataFrame],
-    private val familyDeletes: mutable.Buffer[(DataFrame, String)],
-    private val qualifierDeletes: mutable.Buffer[(DataFrame, String, Seq[Any])],
-    private val puts: mutable.Buffer[DataFrame],
-    private val increments: mutable.Buffer[DataFrame],
+final class MutationBatch private (private val ops: mutable.Buffer[MergeFold.Op],
     val keyCol: String) {
 
-  def put(rows: DataFrame): MutationBatch = { puts += rows; this }
+  def put(rows: DataFrame): MutationBatch = { ops += MergeFold.Put(rows); this }
 
-  def delete(keys: DataFrame): MutationBatch = { deletes += keys; this }
+  def delete(keys: DataFrame): MutationBatch = { ops += MergeFold.Delete(keys); this }
 
   def deleteFamily(keys: DataFrame, famCol: String): MutationBatch = {
-    familyDeletes += ((keys, famCol)); this
+    ops += MergeFold.DeleteFamily(keys, famCol); this
   }
 
   def deleteQualifiers(keys: DataFrame, famCol: String, quals: Seq[Any]): MutationBatch = {
-    qualifierDeletes += ((keys, famCol, quals)); this
+    ops += MergeFold.DeleteQualifiers(keys, famCol, quals); this
   }
 
-  def increment(deltas: DataFrame): MutationBatch = { increments += deltas; this }
+  def increment(deltas: DataFrame): MutationBatch = { ops += MergeFold.Increment(deltas); this }
 
   /** Combine two batches — the reference's `+` op-chain combinator (OpBase.scala:85-96). */
-  def ++(other: MutationBatch): MutationBatch = {
-    deletes ++= other.deletes
-    familyDeletes ++= other.familyDeletes
-    qualifierDeletes ++= other.qualifierDeletes
-    puts ++= other.puts
-    increments ++= other.increments
-    this
+  def ++(other: MutationBatch): MutationBatch = { ops ++= other.ops; this }
+
+  /** The batch's merge over `current`: deletes → puts → increments, shuffled
+    * on the key, or on the output slot `slots` gives (see [[MergeFold]]). */
+  private[store] def plan(current: DataFrame, slots: Option[(Int, Column)] = None): DataFrame =
+    MergeFold(current, keyCol, ops.toSeq, slots)
+
+  /** Each op's key column with its [[KeyedStore.OpsResult]] kind. */
+  private def keys: Seq[(DataFrame, Int)] = ops.toSeq.map {
+    case MergeFold.Put(rows) => rows.select(keyCol) -> KeyedStore.PutKind
+    case MergeFold.Increment(rows) => rows.select(keyCol) -> KeyedStore.IncrementKind
+    case op => op.rows -> KeyedStore.DeleteKind
   }
 
-  private def deleteKeys: Seq[DataFrame] =
-    deletes.toSeq ++ familyDeletes.map(_._1) ++ qualifierDeletes.map(_._1)
+  private def result(n: Array[Long]): KeyedStore.OpsResult = KeyedStore.OpsResult(
+    n(KeyedStore.DeleteKind), n(KeyedStore.PutKind), n(KeyedStore.IncrementKind))
 
-  /** The batch's merge: deletes → puts → increments over `current`. */
-  private def plan(current: DataFrame): DataFrame = {
-    var df = current
-    deletes.foreach(k => df = KeyedStore.deleteRows(df, k, keyCol))
-    familyDeletes.foreach { case (k, fam) => df = KeyedStore.deleteFamily(df, k, fam, keyCol) }
-    qualifierDeletes.foreach { case (k, fam, qs) =>
-      df = KeyedStore.deleteQualifiers(df, k, fam, qs, keyCol)
-    }
-    puts.foreach(p => df = KeyedStore.upsert(df, p, keyCol))
-    increments.foreach(d => df = KeyedStore.increment(df, d, keyCol))
-    df
-  }
-
-  /** Apply the batch: deletes → puts → increments. Returns (merged, accounting). */
+  /** Apply the batch: deletes → puts → increments. Returns (merged, accounting);
+    * the accounting counts in one pass over every op (none for inputs
+    * already in driver memory). */
   def execute(current: DataFrame): (DataFrame, KeyedStore.OpsResult) =
-    (plan(current), KeyedStore.OpsResult(deleteKeys.map(_.count()).sum,
-      puts.map(_.count()).sum, increments.map(_.count()).sum))
+    (plan(current), result(KeyedStore.countKinds(keys)))
 
   /**
    * Apply the batch to an INDEXED store path (written by
@@ -81,9 +72,10 @@ final class MutationBatch private (
    * [[execute]], with the same result. One routed pass over the union of
    * every op's keys finds the files whose key range holds a batch key, the
    * gaps that receive inserts, and the per-kind row counts; only those
-   * files are read, merged under [[execute]]'s plan and rewritten, and one
-   * fenced index commit publishes the result (see `KeyedStore.mergeIndexed`
-   * for the output-file rule and the crash contract).
+   * files are read, folded with the batch on the output-slot shuffle and
+   * rewritten, and one fenced index commit publishes the result (see
+   * `KeyedStore.mergeIndexed` for the output-file rule and the crash
+   * contract).
    *
    * A crash or a lost commit race leaves the pre-batch snapshot whole, and
    * the undo window (`KeyedStore.readKeyedPrevious`) holds the pre-batch
@@ -91,18 +83,11 @@ final class MutationBatch private (
    * only the accounting is returned.
    */
   def executeIndexed(spark: org.apache.spark.sql.SparkSession,
-      path: String): KeyedStore.OpsResult = {
-    import KeyedStore.{DeleteKind, IncrementKind, PutKind}
-    val keys = deleteKeys.map(k => k -> DeleteKind) ++
-      puts.map(p => p.select(keyCol) -> PutKind) ++
-      increments.map(d => d.select(keyCol) -> IncrementKind)
-    val n = KeyedStore.mergeIndexed(spark, path, keyCol, keys)(plan)
-    KeyedStore.OpsResult(n(DeleteKind), n(PutKind), n(IncrementKind))
-  }
+      path: String): KeyedStore.OpsResult =
+    result(KeyedStore.mergeIndexed(spark, path, keyCol, keys)(plan))
 }
 
 object MutationBatch {
   def apply(keyCol: String = "key"): MutationBatch =
-    new MutationBatch(mutable.Buffer.empty, mutable.Buffer.empty, mutable.Buffer.empty,
-      mutable.Buffer.empty, mutable.Buffer.empty, keyCol)
+    new MutationBatch(mutable.Buffer.empty, keyCol)
 }

@@ -7,7 +7,7 @@ import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -24,7 +24,7 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFil
 import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.functions.{coalesce, col, count, input_file_name, lit, max, min}
+import org.apache.spark.sql.functions.{coalesce, col, count, element_at, input_file_name, lit, max, min, typedLit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -158,8 +158,12 @@ class GraftTable(tableSchema: StructType, options: CaseInsensitiveStringMap)
    * distributed (one filter job, no driver materialization). The sidecar
    * index entries of rewritten files refresh from the staged write's own
    * task-commit stats; untouched files and their entries survive byte-
-   * identical. `TRUNCATE TABLE` arrives here as AlwaysTrue via the
-   * SupportsDelete default bridge.
+   * identical. Each affected file's survivors are written as one file of
+   * their own (an exact hash slot per source file), so a rewritten range
+   * never spans an untouched file, and the staged ranges pass the same
+   * overlap guard as `KeyedStore.mergeIndexed` before the commit.
+   * `TRUNCATE TABLE` arrives here as AlwaysTrue via the SupportsDelete
+   * default bridge.
    */
   override def deleteWhere(filters: Array[Filter]): Unit = {
     val spark = SparkSession.active
@@ -213,7 +217,11 @@ class GraftTable(tableSchema: StructType, options: CaseInsensitiveStringMap)
     // only ever collide at the fenced index commit, never on shared names
     val salt = java.util.UUID.randomUUID().toString.take(8)
     val staging = path + "__delete_staging-" + salt
-    kept.repartitionByRange(math.max(1, affectedNames.size), col(keyCol))
+    // one output file per affected file: a file's survivors go to its own
+    // slot (a literal whose hash lands in that partition), so no rewritten
+    // range can span an untouched file between two affected ones
+    val slotOf = typedLit(affectedNames.zip(GraftIndex.hashPreimages(affectedNames.size)).toMap)
+    kept.repartition(affectedNames.size, element_at(slotOf, col("_metadata.file_name")))
       .sortWithinPartitions(keyCol)
       .write.format("graft").option("key", keyCol).mode("overwrite").save(staging)
     val stagingPath = new Path(staging)
@@ -240,6 +248,8 @@ class GraftTable(tableSchema: StructType, options: CaseInsensitiveStringMap)
           stagedRanged.contains(st.getPath.getName) ||
             stagedUnranged.contains(st.getPath.getName)),
           s"deleteWhere: staged write left files out of its index at $staging")
+        GraftIndex.guardStaged(fs, stagingPath, ix.keyTag, ix.ranges -- affectedNames,
+          stagedRanged, s"deleteWhere: $path")
         val moved = renameIn()
         GraftIndex.writeRanges(spark, path, keyCol, ix.keyTag,
           ix.ranges -- affectedNames ++
@@ -972,6 +982,57 @@ object GraftIndex {
   def keepVersionsOf(spark: SparkSession): Int =
     math.max(2, spark.conf.getOption(KeepVersionsConf)
       .map(_.toInt).getOrElse(KeepVersions))
+
+  /** The order the key→file router compares index bounds in: numeric, or
+    * UTF-8 bytes for strings (Spark's string order, which the sorted files
+    * follow too). */
+  def keyOrder(tag: String)(a: Any, b: Any): Int =
+    if (tag == "num") a.asInstanceOf[BigDecimal].compare(b.asInstanceOf[BigDecimal])
+    else KeyBounds.utf8Cmp(a.toString, b.toString)
+
+  /** Pairs of key ranges (index-dialect bounds of key tag `tag`) that
+    * overlap in [[keyOrder]] — 0 on any layout the key→file router can
+    * serve exactly. */
+  def overlappingRanges(tag: String, ranges: Iterable[(Any, Any, Long)]): Int = {
+    val cmp = keyOrder(tag) _
+    val sorted = ranges.toArray.sortWith((a, b) => cmp(a._1, b._1) < 0)
+    // each range against every later one it reaches: sorted by lo, so the
+    // scan stops at the first later range starting past this one's hi
+    sorted.indices.map { i =>
+      var j = i + 1
+      while (j < sorted.length && cmp(sorted(j)._1, sorted(i)._2) <= 0) j += 1
+      j - i - 1
+    }.sum
+  }
+
+  /** The guard before a rewrite's commit: if any `staged` range overlaps
+    * another staged range or an `untouched` live one, the staging dir is
+    * deleted and the rewrite (`what`) fails having applied nothing. */
+  def guardStaged(fs: FileSystem, staging: Path, tag: String,
+      untouched: Map[String, (Any, Any, Long)], staged: Map[String, (Any, Any, Long)],
+      what: String): Unit = {
+    val overlaps = overlappingRanges(tag, untouched.values ++ staged.values)
+    if (overlaps > 0) {
+      fs.delete(staging, true)
+      throw new IllegalStateException(s"$what: $overlaps staged key range(s) " +
+        "overlap another live range — staging deleted, nothing applied")
+    }
+  }
+
+  /** For each of `n` partitions, an int whose Spark hash (Murmur3, seed 42
+    * — `HashPartitioning`'s) lands in that partition of an `n`-way
+    * `repartition`: a rewrite places its rows in exact output slots. */
+  def hashPreimages(n: Int): Array[Int] = {
+    val out = Array.fill(n)(-1)
+    var left = n
+    var v = 0
+    while (left > 0) {
+      val p = Math.floorMod(org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(v, 42), n)
+      if (out(p) < 0) { out(p) = v; left -= 1 }
+      v += 1
+    }
+    out
+  }
 
   def tagOf(dt: DataType): Option[String] = dt match {
     case LongType | IntegerType | ShortType | ByteType => Some("num")

@@ -358,12 +358,9 @@ case class MapValueSum(child: Expression, mutableAggBufferOffset: Int = 0,
     extends aggregate.TypedImperativeAggregate[MapValueSum.Buffer]
     with UnaryLike[Expression] {
   private def mapType: MapType = child.dataType.asInstanceOf[MapType]
-  private def sumType: DataType = mapType.valueType match {
-    case d: DecimalType => DecimalType.bounded(d.precision + 10, d.scale)
-    case _: IntegralType => LongType
-    case _ => DoubleType
-  }
-  override def dataType: DataType = MapType(mapType.keyType, sumType, valueContainsNull = true)
+  @transient private lazy val num = NumericSum(mapType.valueType)
+  override def dataType: DataType =
+    MapType(mapType.keyType, NumericSum(mapType.valueType).sumType, valueContainsNull = true)
   override def nullable: Boolean = false
   override def prettyName: String = "map_value_sum"
 
@@ -372,29 +369,11 @@ case class MapValueSum(child: Expression, mutableAggBufferOffset: Int = 0,
     case t => TypeCheckResult.TypeCheckFailure(s"$prettyName needs map<k, numeric>, not $t")
   }
 
-  /** An input value in [[sumType]]. */
-  @transient private lazy val widen: Any => Any = mapType.valueType match {
-    case ByteType => v => v.asInstanceOf[Byte].toLong
-    case ShortType => v => v.asInstanceOf[Short].toLong
-    case IntegerType => v => v.asInstanceOf[Int].toLong
-    case FloatType => v => v.asInstanceOf[Float].toDouble
-    case _ => identity
-  }
-  @transient private lazy val plus: (Any, Any) => Any = sumType match {
-    case LongType => (a, b) => Math.addExact(a.asInstanceOf[Long], b.asInstanceOf[Long])
-    case DoubleType => (a, b) => a.asInstanceOf[Double] + b.asInstanceOf[Double]
-    case DecimalType.Fixed(p, s) => (a, b) => {
-      val d = a.asInstanceOf[Decimal] + b.asInstanceOf[Decimal]
-      if (!d.changePrecision(p, s))
-        throw new ArithmeticException(s"$prettyName: a sum overflows decimal($p, $s)")
-      d
-    }
-  }
   /** Folds one qualifier's (non-copied) value into the buffer. */
   private def add(buf: MapValueSum.Buffer, q: Any, v: Any): Unit = {
     val prev = buf.get(q)
     if (prev == null) buf.put(q, v)
-    else if (v != null) buf.put(q, plus(prev, v))
+    else if (v != null) buf.put(q, num.plus(prev, v))
   }
   private def fold(buf: MapValueSum.Buffer, m: MapData, valueType: DataType,
       in: Any => Any): MapValueSum.Buffer = {
@@ -411,7 +390,7 @@ case class MapValueSum(child: Expression, mutableAggBufferOffset: Int = 0,
   override def createAggregationBuffer(): MapValueSum.Buffer = new java.util.HashMap()
   override def update(buf: MapValueSum.Buffer, input: InternalRow): MapValueSum.Buffer = {
     val m = child.eval(input)
-    if (m == null) buf else fold(buf, m.asInstanceOf[MapData], mapType.valueType, widen)
+    if (m == null) buf else fold(buf, m.asInstanceOf[MapData], mapType.valueType, num.widen)
   }
   override def merge(buf: MapValueSum.Buffer,
       other: MapValueSum.Buffer): MapValueSum.Buffer = {
@@ -428,7 +407,7 @@ case class MapValueSum(child: Expression, mutableAggBufferOffset: Int = 0,
   override def deserialize(bytes: Array[Byte]): MapValueSum.Buffer = {
     val row = new UnsafeRow(1)
     row.pointTo(bytes, bytes.length)
-    fold(createAggregationBuffer(), row.getMap(0), sumType, identity)
+    fold(createAggregationBuffer(), row.getMap(0), num.sumType, identity)
   }
 
   override def withNewMutableAggBufferOffset(o: Int): MapValueSum = copy(mutableAggBufferOffset = o)
@@ -440,4 +419,38 @@ case class MapValueSum(child: Expression, mutableAggBufferOffset: Int = 0,
 object MapValueSum {
   /** Qualifier → its running sum, or null while every value seen was null. */
   type Buffer = java.util.HashMap[Any, Any]
+}
+
+/**
+ * SQL SUM's arithmetic over values of one numeric type: the result type
+ * (long for integral values, double for floating ones, decimal(p + 10, s)),
+ * an input value widened to it, and an addition that fails on overflow, as
+ * SUM does under ANSI mode. Shared by [[MapValueSum]] and the merge fold's
+ * increment pre-sum ([[MergeFold]]).
+ */
+final case class NumericSum(valueType: DataType) {
+  def sumType: DataType = valueType match {
+    case d: DecimalType => DecimalType.bounded(d.precision + 10, d.scale)
+    case _: IntegralType => LongType
+    case _: NumericType => DoubleType
+    case t => throw new IllegalArgumentException(s"a sum needs a numeric type, not $t")
+  }
+  /** An input value in [[sumType]]. */
+  val widen: Any => Any = valueType match {
+    case ByteType => v => v.asInstanceOf[Byte].toLong
+    case ShortType => v => v.asInstanceOf[Short].toLong
+    case IntegerType => v => v.asInstanceOf[Int].toLong
+    case FloatType => v => v.asInstanceOf[Float].toDouble
+    case _ => identity
+  }
+  val plus: (Any, Any) => Any = sumType match {
+    case LongType => (a, b) => Math.addExact(a.asInstanceOf[Long], b.asInstanceOf[Long])
+    case DoubleType => (a, b) => a.asInstanceOf[Double] + b.asInstanceOf[Double]
+    case DecimalType.Fixed(p, s) => (a, b) => {
+      val d = a.asInstanceOf[Decimal] + b.asInstanceOf[Decimal]
+      if (!d.changePrecision(p, s))
+        throw new ArithmeticException(s"a sum overflows decimal($p, $s)")
+      d
+    }
+  }
 }
