@@ -723,11 +723,21 @@ object Dedup {
    * inline twin at ANY threshold ≥ `minJaccard` (the higher-threshold
    * subset of a low-threshold mine equals the direct high-threshold mine —
    * same postings, same cap, same filter).
+   *
+   * Doc ids must be bigint; any other id type is refused with an
+   * IllegalArgumentException before anything is written.
    */
   def writePairs(df: DataFrame, idCol: String, textCol: String, path: String,
       shingleSize: Int = 3, minJaccard: Double = 0.2,
       maxDf: Option[Int] = Some(1000)): Unit = {
     val spark = df.sparkSession
+    // the native pair stream (`ordered_pairs`) mines bigint ids only: refuse
+    // any other id type here, before anything is written
+    val idType = df.select(col(idCol)).schema.head.dataType
+    if (idType != org.apache.spark.sql.types.LongType)
+      throw new IllegalArgumentException(
+        s"writePairs($path): id column `$idCol` is ${idType.catalogString}; " +
+          "supported id types: bigint. Cast the id column to bigint.")
     // ONE text scan: persist the postings first, then mine the pairs from
     // the PERSISTED copy — the shingle pass (the dominant cost) runs once,
     // and the postings sidecar [[appendPairs]] needs falls out of it.
@@ -819,10 +829,23 @@ object Dedup {
    * within-batch pairs and its cross pairs against the stored corpus
    * POSTINGS (8-byte shingle hashes — the old text is never re-read or
    * re-shingled), appends the evidence to `path/pairs`, and appends its
-   * own postings for the next batch. Work is Σ over shingles TOUCHED BY
-   * THE BATCH of df_new·df_all — shingles the batch never mentions cost
-   * nothing, and the old×old pair work never repeats. After the append,
-   * [[readPairs]] serves the union corpus.
+   * own postings for the next batch. Only the stored postings of shingles
+   * TOUCHED BY THE BATCH are read into the mine, and the pair work is
+   * Σ over those shingles of df_new·df_all — shingles the batch never
+   * mentions cost nothing, and the old×old pair work never repeats. After
+   * the append, [[readPairs]] serves the union corpus.
+   *
+   * Execution shape: within the [[smallGraphGate]] budget
+   * (`graft.cc.smallGraphEdges` / `graft.cc.smallGraphBytes`) the mine
+   * runs on the driver ([[minePairsLocal]]): one bounded collect of the
+   * batch postings, one of the stored postings of the touched shingles
+   * (one pruned scan), a plain-Scala intersection count, and both appends
+   * from local relations — no shuffle. The budget covers both collects
+   * and the pair work itself; over it, or for an id type without an
+   * [[idOrdering]], the same mine runs distributed: the stored postings
+   * are semi-joined on the batch's shingles before one `groupBy(s)` and
+   * one self-join. Both paths emit the same pair rows (DedupPairsSpec
+   * pins them to each other).
    *
    * Cap semantics under `maxDf`: the cap is evaluated on the COMBINED
    * document frequency, so the appended (new×new, new×old) pairs match a
@@ -864,8 +887,11 @@ object Dedup {
         s"appendPairs($path, batch $batchId): postings committed without " +
           "pairs — not a state this writer produces (pairs commit first). " +
           "Rebuild via writePairs or removeFromPairs the batch ids.")
-    // both writes consume the batch postings; persist so the batch text is
-    // read and shingled once (writes are actions — no Eager wrapper needed)
+    def append(rows: DataFrame, sub: String): Unit = batchId match {
+      case Some(t) =>
+        graft.store.ManifestTable.appendTagged(rows, path + sub, t): Unit
+      case None => graft.store.ManifestTable.append(rows, path + sub)
+    }
     // pending lazy-takedown tombstones gate the STORED side of the mine:
     // removed docs' postings must not pair against the batch (the same
     // ghost-mining hole removeFromPairs' postings rewrite closes eagerly).
@@ -884,64 +910,143 @@ object Dedup {
     }
     val np = hashedShingles(df, idCol, textCol, shingleSize)
       .select(col("id"), size(col("th")).as("n"), explode(col("th")).as("s"))
-      .persist()
-    try {
-      if (!pairsDone) {
-        val storedPosts = graft.store.ManifestTable.read(spark, path + "/postings")
-        val all = tomb.fold(storedPosts)(t =>
-            storedPosts.join(broadcast(t),
-              col("id") === col("__ts_id"), "left_anti"))
-          .withColumn("is_new", lit(false))
-          .unionByName(np.withColumn("is_new", lit(true)))
-        // only shingles the batch touches do any pair work; the combined-df
-        // cap drops stop-shingles exactly as the scratch mine of the union
-        val live = all.groupBy(col("s"))
-          .agg(count(lit(1)).as("df"),
-            sum(when(col("is_new"), 1L).otherwise(0L)).as("dfn"))
-          .where(col("dfn") >= 1 && col("df") >= 2 &&
-            maxDf.map(cap => col("df") <= cap).getOrElse(lit(true)))
-          .select(col("s"))
-        val cand = all.join(live, Seq("s"))
-        val l = cand.where(col("is_new"))
-          .select(col("s"), col("id").as("id_l"), col("n").as("n_l"))
-        val r = cand.select(col("s"), col("id").as("id_r"), col("n").as("n_r"),
-          col("is_new").as("new_r"))
-        // (new, old) pairs once; (new, new) once via the id order; old×old
-        // never — that evidence is already on disk
-        val mined = l.join(r, Seq("s"))
-          .where(col("id_l") =!= col("id_r") &&
-            (!col("new_r") || col("id_l") < col("id_r")))
-          .select(
-            least(col("id_l"), col("id_r")).as("id_a"),
-            when(col("id_l") < col("id_r"), col("n_l")).otherwise(col("n_r"))
-              .as("n_a"),
-            greatest(col("id_l"), col("id_r")).as("id_b"),
-            when(col("id_l") < col("id_r"), col("n_r")).otherwise(col("n_l"))
-              .as("n_b"))
-          .groupBy(col("id_a"), col("n_a"), col("id_b"), col("n_b"))
-          .agg(count(lit(1)).as("inter"))
-          .withColumn("jaccard", col("inter").cast("double") /
-            (col("n_a") + col("n_b") - col("inter")))
-          .where(col("jaccard") >= minJaccard)
-          .select(col("id_a"), col("n_a"), col("id_b"), col("n_b"),
-            col("inter"))
-        batchId match {
-          case Some(t) =>
-            graft.store.ManifestTable.appendTagged(mined,
-              path + "/pairs", t): Unit
-          case None =>
-            graft.store.ManifestTable.append(mined, path + "/pairs")
+    // a retry past the pair commit lands only the postings: no mine
+    if (pairsDone) { append(np, "/postings"); return }
+    val storedPosts = graft.store.ManifestTable.read(spark, path + "/postings")
+    val stored = tomb.fold(storedPosts)(t =>
+        storedPosts.join(broadcast(t), col("id") === col("__ts_id"), "left_anti"))
+      .select(col("id"), col("n"), col("s"))
+    minePairsLocal(np, stored, minJaccard, maxDf) match {
+      case Some((pairs, posts)) =>
+        append(pairs, "/pairs")
+        append(posts, "/postings")
+      case None =>
+        // both writes consume the batch postings; persist so the batch text
+        // is read and shingled once (writes are actions — no Eager wrapper)
+        val p = np.persist()
+        try {
+          append(minePairsDistributed(p, stored, minJaccard, maxDf), "/pairs")
+          append(p, "/postings")
+        } finally p.unpersist(blocking = false)
+    }
+  }
+
+  /** Test-visible count of [[appendPairs]] calls whose mine ran on the
+    * driver ([[minePairsLocal]]) — lets specs assert which path a gate
+    * configuration selected. */
+  private[graft] val pairMineFastPathRuns =
+    new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** [[appendPairs]]' driver mine: the (pairs, postings) rows to append,
+    * as local relations, or None when the batch is over the
+    * [[smallGraphGate]] budget — its postings, the stored postings of the
+    * shingles it touches, or the pair work Σ df_new·df over the shingles
+    * that survive the cap — or when the id type has no [[idOrdering]] or
+    * differs from the stored one. Row-identical to
+    * [[minePairsDistributed]]: the same combined-df filter (`df ≥ 2`,
+    * `df ≤ maxDf`, null-id postings counted), the same drops (a null id
+    * or two equal ids never pair, `id_l =!= id_r`), new×new pairs once by
+    * the id order `least()` compares, and the same double quotient
+    * against `minJaccard`. */
+  private def minePairsLocal(np: DataFrame, stored: DataFrame,
+      minJaccard: Double, maxDf: Option[Int])
+      : Option[(DataFrame, DataFrame)] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val spark = np.sparkSession
+    val dt = np.schema("id").dataType
+    type Posting = (Any, Int)
+    def byShingle(rows: Array[Row]): Map[Long, Array[Posting]] =
+      rows.groupMap(_.getLong(2))(r => (r.get(0), r.getInt(1)))
+    for {
+      ord <- idOrdering(dt) if stored.schema("id").dataType == dt
+      fresh <- boundedCollect(np)
+      touched = fresh.map(_.getLong(2)).distinct
+      old <- if (touched.isEmpty) Some(Array.empty[Row])
+        else boundedCollect(stored.where(col("s").isInCollection(touched.toSeq)))
+      newBy = byShingle(fresh)
+      oldBy = byShingle(old)
+      live = newBy.iterator.map { case (s, nw) =>
+          (nw, oldBy.getOrElse(s, Array.empty[Posting])) }
+        .filter { case (nw, od) =>
+          val df = nw.length + od.length
+          df >= 2 && maxDf.forall(df <= _) }
+        .toSeq
+      if live.iterator.map { case (nw, od) =>
+        nw.length.toLong * (nw.length + od.length) }.sum <= smallGraphGate(spark)._1
+    } yield {
+      pairMineFastPathRuns.incrementAndGet(): Unit
+      val inter = scala.collection.mutable.HashMap.empty[(Any, Int, Any, Int), Long]
+      def tally(l: Posting, r: Posting): Unit =
+        if (l._1 != null && r._1 != null && l._1 != r._1) {
+          val (a, b) = if (ord.lt(l._1, r._1)) (l, r) else (r, l)
+          val k = (a._1, a._2, b._1, b._2)
+          inter(k) = inter.getOrElse(k, 0L) + 1L
+        }
+      live.foreach { case (nw, od) =>
+        var i = 0
+        while (i < nw.length) {
+          od.foreach(tally(nw(i), _))
+          var j = i + 1
+          while (j < nw.length) { tally(nw(i), nw(j)); j += 1 }
+          i += 1
         }
       }
-      val posts = np.select(col("id"), col("n"), col("s"))
-      batchId match {
-        case Some(t) =>
-          graft.store.ManifestTable.appendTagged(posts,
-            path + "/postings", t): Unit
-        case None =>
-          graft.store.ManifestTable.append(posts, path + "/postings")
-      }
-    } finally np.unpersist(blocking = false)
+      val pairs = inter.iterator.collect {
+        case ((a, na, b, nb), c)
+            if c.toDouble / ((na + nb).toLong - c).toDouble >= minJaccard =>
+          Row(a, na, b, nb, c)
+      }.toSeq
+      val pairSchema = StructType(Seq(StructField("id_a", dt),
+        StructField("n_a", IntegerType), StructField("id_b", dt),
+        StructField("n_b", IntegerType), StructField("inter", LongType)))
+      // one output file each, as one task writes them
+      (spark.createDataFrame(pairs.asJava, pairSchema).coalesce(1),
+        spark.createDataFrame(fresh.toSeq.asJava, np.schema).coalesce(1))
+    }
+  }
+
+  /** [[appendPairs]]' distributed mine, for batches over the driver
+    * budget: the stored postings semi-joined on the batch's shingles, one
+    * `groupBy(s)` for the combined df, and one self-join of the surviving
+    * shingles' postings. */
+  private def minePairsDistributed(np: DataFrame, stored: DataFrame,
+      minJaccard: Double, maxDf: Option[Int]): DataFrame = {
+    val all = stored.join(np.select(col("s")), Seq("s"), "left_semi")
+      .withColumn("is_new", lit(false))
+      .unionByName(np.withColumn("is_new", lit(true)))
+    // the combined-df cap drops stop-shingles exactly as the scratch mine
+    // of the union
+    val live = all.groupBy(col("s"))
+      .agg(count(lit(1)).as("df"),
+        sum(when(col("is_new"), 1L).otherwise(0L)).as("dfn"))
+      .where(col("dfn") >= 1 && col("df") >= 2 &&
+        maxDf.map(cap => col("df") <= cap).getOrElse(lit(true)))
+      .select(col("s"))
+    val cand = all.join(live, Seq("s"))
+    val l = cand.where(col("is_new"))
+      .select(col("s"), col("id").as("id_l"), col("n").as("n_l"))
+    val r = cand.select(col("s"), col("id").as("id_r"), col("n").as("n_r"),
+      col("is_new").as("new_r"))
+    // (new, old) pairs once; (new, new) once via the id order; old×old
+    // never — that evidence is already on disk
+    l.join(r, Seq("s"))
+      .where(col("id_l") =!= col("id_r") &&
+        (!col("new_r") || col("id_l") < col("id_r")))
+      .select(
+        least(col("id_l"), col("id_r")).as("id_a"),
+        when(col("id_l") < col("id_r"), col("n_l")).otherwise(col("n_r"))
+          .as("n_a"),
+        greatest(col("id_l"), col("id_r")).as("id_b"),
+        when(col("id_l") < col("id_r"), col("n_r")).otherwise(col("n_l"))
+          .as("n_b"))
+      .groupBy(col("id_a"), col("n_a"), col("id_b"), col("n_b"))
+      .agg(count(lit(1)).as("inter"))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (col("n_a") + col("n_b") - col("inter")))
+      .where(col("jaccard") >= minJaccard)
+      .select(col("id_a"), col("n_a"), col("id_b"), col("n_b"), col("inter"))
   }
 
   /**
@@ -1641,42 +1746,59 @@ object Dedup {
     }
   }
 
-  /** `df`'s rows when they fit the driver budget every small-graph path
-    * shares, else None — a BOUNDED collect: `graft.cc.smallGraphEdges`
-    * rows (default 200k) AND `graft.cc.smallGraphBytes` estimated bytes
-    * (default 64 MB). A row is estimated at 96 B (Row, boxed ids,
-    * union-find map entries) plus 4 B per string char, so wide URL-keyed
-    * inputs fall through to the distributed paths well before the driver
-    * heap is at risk. Without string columns the estimate is a function of
-    * the row count, so ONE limit-collect decides the gate and already
-    * holds every row; string rows byte-gate with one count/width aggregate
-    * first, over a persisted copy (the caller's, if `df` is cached). */
+  /** The driver budget every small-graph path shares:
+    * `graft.cc.smallGraphEdges` rows (default 200k) and
+    * `graft.cc.smallGraphBytes` estimated bytes (default 64 MB). */
+  private def smallGraphGate(spark: org.apache.spark.sql.SparkSession)
+      : (Long, Long) = {
+    def conf(k: String, d: Long): Long = spark.conf.getOption(k)
+      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(d)
+    (conf("graft.cc.smallGraphEdges", 200000L),
+      conf("graft.cc.smallGraphBytes", 64L << 20))
+  }
+
+  /** A row's share of the byte budget: 96 B (Row, boxed ids, union-find
+    * map entries) plus 4 B per char of its string columns `strIdx`. */
+  private def rowBytes(r: org.apache.spark.sql.Row, strIdx: Array[Int]): Long = {
+    var b = 96L
+    strIdx.foreach(i => if (!r.isNullAt(i)) b += 4L * r.getString(i).length)
+    b
+  }
+
+  /** `df`'s rows when they fit the [[smallGraphGate]] budget, else None —
+    * a BOUNDED collect in ONE Spark job over every partition at once. The
+    * per-row estimate ([[rowBytes]]) makes wide URL-keyed inputs fall
+    * through to the distributed paths well before the driver heap is at
+    * risk. Each task stops reading once its own partition is over budget,
+    * and the driver keeps a partition's rows only while the running totals
+    * fit, so it holds the budget plus the results in flight — the exposure
+    * of Spark's own limit-collect, whose scale-up rounds also fetch many
+    * partitions at the full limit each, without those rounds' extra jobs
+    * (one, then 4×, then 16× the partitions). */
   private def boundedCollect(df: DataFrame)
       : Option[Array[org.apache.spark.sql.Row]] = {
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.StringType
-    def conf(k: String, d: Long): Long = df.sparkSession.conf.getOption(k)
-      .flatMap(v => scala.util.Try(v.toLong).toOption).getOrElse(d)
-    val gate = conf("graft.cc.smallGraphEdges", 200000L)
-    val byteBudget = conf("graft.cc.smallGraphBytes", 64L << 20)
-    val strCols = df.schema.fields.filter(_.dataType == StringType)
-      .map(f => length(col(f.name)))
-    if (strCols.isEmpty) {
-      val cap = math.min(gate, byteBudget / 96L)
-        .min(Int.MaxValue - 2L).max(0L).toInt
-      val rows = df.limit(cap + 1).collect()
-      if (rows.length <= cap) Some(rows) else None
-    } else {
-      val owned = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-      val p = if (owned) df.persist() else df
-      try {
-        val r = p.agg(count(lit(1)), avg(strCols.reduce(_ + _))).head()
-        val n = r.getLong(0)
-        val w = if (r.isNullAt(1)) 0.0 else r.getDouble(1)
-        if (n <= gate && n * 96L + (n * 4L * w).toLong <= byteBudget)
-          Some(p.collect())
-        else None
-      } finally if (owned) p.unpersist(blocking = false)
-    }
+    val (gate, byteBudget) = smallGraphGate(df.sparkSession)
+    val strIdx = df.schema.fields.indices
+      .filter(i => df.schema(i).dataType == StringType).toArray
+    val rdd = df.rdd
+    val parts = new Array[Array[Row]](rdd.getNumPartitions)
+    var (rows, bytes) = (0L, 0L)
+    def fits: Boolean = rows <= gate && bytes <= byteBudget
+    df.sparkSession.sparkContext.runJob(rdd, (it: Iterator[Row]) => {
+      val buf = Array.newBuilder[Row]
+      var (n, b) = (0L, 0L)
+      while (it.hasNext && n <= gate && b <= byteBudget) {
+        val r = it.next()
+        n += 1; b += rowBytes(r, strIdx); buf += r
+      }
+      (buf.result(), b)
+    }, (i: Int, res: (Array[Row], Long)) => {
+      rows += res._1.length; bytes += res._2
+      if (fits) parts(i) = res._1 else parts.mapInPlace(_ => null)
+    })
+    if (fits) Some(parts.flatten) else None
   }
 
   /** Min-id connected components on the driver — the one union-find behind

@@ -457,13 +457,38 @@ object ManifestTable {
     * the live generation's schema is unreadable (no files yet). */
   private[store] def assertAppendSchema(df: DataFrame, liveDir: String,
       what: String): Unit =
-    scala.util.Try(df.sparkSession.read.parquet(liveDir).schema).toOption
+    inferredSchema(df.sparkSession, liveDir)
       .flatMap(live => schemaDrift(df.schema, live))
       .foreach(drift => throw new IllegalArgumentException(
         s"schema drift on append to $what: $drift. Appends must match the " +
           "live generation's columns (order/case/nullability-insensitive); " +
           "evolve the schema through a rewrite (write, or compact with a " +
           "transform), not an append."))
+
+  /** The schema `spark.read.parquet(dir)` infers, read on the driver with
+    * no Spark job: Spark's rule without `mergeSchema` takes the footer of
+    * the first data file in path order (names starting with `_` or `.`
+    * are hidden, as in its file listing), and this reads the writer's
+    * row-metadata schema from that one footer
+    * ([[org.apache.spark.sql.graft.GraftIndex.footerSchema]]). A footer
+    * without row metadata (a foreign writer) falls back to Spark's own
+    * inference. None when `dir` holds no data file. */
+  private def inferredSchema(spark: SparkSession, dir: String)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val (fs, root) = fsOf(spark, dir)
+    def hidden(n: String): Boolean =
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")
+    def leaves(p: Path): Seq[Path] = fs.listStatus(p).toSeq
+      .filterNot(s => hidden(s.getPath.getName))
+      .flatMap(s => if (s.isDirectory) leaves(s.getPath) else Seq(s.getPath))
+    scala.util.Try(leaves(root)).toOption.flatMap(_.minByOption(_.toString))
+      .flatMap { first =>
+        org.apache.spark.sql.graft.GraftIndex.footerSchema(first.getParent,
+            cachedConf(spark), Seq(first.getName))
+          .orElse(scala.util.Try(spark.read.parquet(dir).schema).toOption)
+      }
+  }
 
   // one hadoop conf per session: `sessionState.newHadoopConf()` CLONES the
   // full configuration on every call (~ms) — at thousands of per-leaf
