@@ -844,8 +844,9 @@ object Dedup {
    * and the pair work itself; over it, or for an id type without an
    * [[idOrdering]], the same mine runs distributed: the stored postings
    * are semi-joined on the batch's shingles before one `groupBy(s)` and
-   * one self-join. Both paths emit the same pair rows (DedupPairsSpec
-   * pins them to each other).
+   * one self-join, reading the collected batch postings when they fit.
+   * Both paths emit the same pair rows (DedupPairsSpec pins them to each
+   * other).
    *
    * Cap semantics under `maxDf`: the cap is evaluated on the COMBINED
    * document frequency, so the appended (new×new, new×old) pairs match a
@@ -916,18 +917,28 @@ object Dedup {
     val stored = tomb.fold(storedPosts)(t =>
         storedPosts.join(broadcast(t), col("id") === col("__ts_id"), "left_anti"))
       .select(col("id"), col("n"), col("s"))
-    minePairsLocal(np, stored, minJaccard, maxDf) match {
-      case Some((pairs, posts)) =>
+    import scala.jdk.CollectionConverters._
+    // the batch postings, collected once when the mine can run on the
+    // driver; both appends and either mine then read the collected rows
+    val dt = np.schema("id").dataType
+    val ord = idOrdering(dt).filter(_ => stored.schema("id").dataType == dt)
+    val fresh = ord.flatMap(_ => boundedCollect(np))
+    val batch = fresh.map(rows =>
+      spark.createDataFrame(rows.toSeq.asJava, np.schema).coalesce(1))
+    ord.zip(fresh).flatMap { case (o, rows) =>
+      minePairsLocal(rows, stored, minJaccard, maxDf)(o) } match {
+      case Some(pairs) =>
         append(pairs, "/pairs")
-        append(posts, "/postings")
+        append(batch.get, "/postings")
       case None =>
-        // both writes consume the batch postings; persist so the batch text
-        // is read and shingled once (writes are actions — no Eager wrapper)
-        val p = np.persist()
+        // both writes consume the batch postings; unless they were
+        // collected, persist so the batch text is read and shingled once
+        // (writes are actions — no Eager wrapper)
+        val p = batch.getOrElse(np.persist())
         try {
           append(minePairsDistributed(p, stored, minJaccard, maxDf), "/pairs")
           append(p, "/postings")
-        } finally p.unpersist(blocking = false)
+        } finally if (batch.isEmpty) p.unpersist(blocking = false)
     }
   }
 
@@ -937,32 +948,29 @@ object Dedup {
   private[graft] val pairMineFastPathRuns =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** [[appendPairs]]' driver mine: the (pairs, postings) rows to append,
-    * as local relations, or None when the batch is over the
-    * [[smallGraphGate]] budget — its postings, the stored postings of the
-    * shingles it touches, or the pair work Σ df_new·df over the shingles
-    * that survive the cap — or when the id type has no [[idOrdering]] or
-    * differs from the stored one. Row-identical to
-    * [[minePairsDistributed]]: the same combined-df filter (`df ≥ 2`,
-    * `df ≤ maxDf`, null-id postings counted), the same drops (a null id
-    * or two equal ids never pair, `id_l =!= id_r`), new×new pairs once by
-    * the id order `least()` compares, and the same double quotient
-    * against `minJaccard`. */
-  private def minePairsLocal(np: DataFrame, stored: DataFrame,
-      minJaccard: Double, maxDf: Option[Int])
-      : Option[(DataFrame, DataFrame)] = {
+  /** [[appendPairs]]' driver mine over the collected batch postings
+    * `fresh`: the pair rows to append, as a local relation, or None when
+    * the stored postings of the shingles the batch touches or the pair
+    * work Σ df_new·df over the shingles that survive the cap are over the
+    * [[smallGraphGate]] budget, or when a pair's Jaccard denominator is 0
+    * (a doc whose postings were stored twice), which the distributed
+    * quotient decides. Row-identical to [[minePairsDistributed]]: the same
+    * combined-df filter (`df ≥ 2`, `df ≤ maxDf`, null-id postings
+    * counted), the same drops (a null id or two equal ids never pair,
+    * `id_l =!= id_r`), new×new pairs once by the id order `least()`
+    * compares, and the same double quotient against `minJaccard`. */
+  private def minePairsLocal(fresh: Array[org.apache.spark.sql.Row],
+      stored: DataFrame, minJaccard: Double, maxDf: Option[Int])(
+      implicit ord: Ordering[Any]): Option[DataFrame] = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     import scala.jdk.CollectionConverters._
-    val spark = np.sparkSession
-    val dt = np.schema("id").dataType
+    val spark = stored.sparkSession
     type Posting = (Any, Int)
     def byShingle(rows: Array[Row]): Map[Long, Array[Posting]] =
       rows.groupMap(_.getLong(2))(r => (r.get(0), r.getInt(1)))
+    val touched = fresh.map(_.getLong(2)).distinct
     for {
-      ord <- idOrdering(dt) if stored.schema("id").dataType == dt
-      fresh <- boundedCollect(np)
-      touched = fresh.map(_.getLong(2)).distinct
       old <- if (touched.isEmpty) Some(Array.empty[Row])
         else boundedCollect(stored.where(col("s").isInCollection(touched.toSeq)))
       newBy = byShingle(fresh)
@@ -975,35 +983,39 @@ object Dedup {
         .toSeq
       if live.iterator.map { case (nw, od) =>
         nw.length.toLong * (nw.length + od.length) }.sum <= smallGraphGate(spark)._1
+      inter = {
+        val m = scala.collection.mutable.HashMap.empty[(Any, Int, Any, Int), Long]
+        def tally(l: Posting, r: Posting): Unit =
+          if (l._1 != null && r._1 != null && l._1 != r._1) {
+            val (a, b) = if (ord.lt(l._1, r._1)) (l, r) else (r, l)
+            val k = (a._1, a._2, b._1, b._2)
+            m(k) = m.getOrElse(k, 0L) + 1L
+          }
+        live.foreach { case (nw, od) =>
+          var i = 0
+          while (i < nw.length) {
+            od.foreach(tally(nw(i), _))
+            var j = i + 1
+            while (j < nw.length) { tally(nw(i), nw(j)); j += 1 }
+            i += 1
+          }
+        }
+        m
+      }
+      if !inter.exists { case ((_, na, _, nb), c) => (na + nb).toLong == c }
     } yield {
       pairMineFastPathRuns.incrementAndGet(): Unit
-      val inter = scala.collection.mutable.HashMap.empty[(Any, Int, Any, Int), Long]
-      def tally(l: Posting, r: Posting): Unit =
-        if (l._1 != null && r._1 != null && l._1 != r._1) {
-          val (a, b) = if (ord.lt(l._1, r._1)) (l, r) else (r, l)
-          val k = (a._1, a._2, b._1, b._2)
-          inter(k) = inter.getOrElse(k, 0L) + 1L
-        }
-      live.foreach { case (nw, od) =>
-        var i = 0
-        while (i < nw.length) {
-          od.foreach(tally(nw(i), _))
-          var j = i + 1
-          while (j < nw.length) { tally(nw(i), nw(j)); j += 1 }
-          i += 1
-        }
-      }
       val pairs = inter.iterator.collect {
         case ((a, na, b, nb), c)
             if c.toDouble / ((na + nb).toLong - c).toDouble >= minJaccard =>
           Row(a, na, b, nb, c)
       }.toSeq
+      val dt = stored.schema("id").dataType
       val pairSchema = StructType(Seq(StructField("id_a", dt),
         StructField("n_a", IntegerType), StructField("id_b", dt),
         StructField("n_b", IntegerType), StructField("inter", LongType)))
-      // one output file each, as one task writes them
-      (spark.createDataFrame(pairs.asJava, pairSchema).coalesce(1),
-        spark.createDataFrame(fresh.toSeq.asJava, np.schema).coalesce(1))
+      // one output file, as one task writes it
+      spark.createDataFrame(pairs.asJava, pairSchema).coalesce(1)
     }
   }
 
@@ -1766,16 +1778,20 @@ object Dedup {
   }
 
   /** `df`'s rows when they fit the [[smallGraphGate]] budget, else None —
-    * a BOUNDED collect in ONE Spark job over every partition at once. The
-    * per-row estimate ([[rowBytes]]) makes wide URL-keyed inputs fall
-    * through to the distributed paths well before the driver heap is at
-    * risk. Each task stops reading once its own partition is over budget,
-    * and the driver keeps a partition's rows only while the running totals
-    * fit, so it holds the budget plus the results in flight — the exposure
-    * of Spark's own limit-collect, whose scale-up rounds also fetch many
-    * partitions at the full limit each, without those rounds' extra jobs
-    * (one, then 4×, then 16× the partitions). */
-  private def boundedCollect(df: DataFrame)
+    * a BOUNDED collect whose results never exceed one budget, in one Spark
+    * job for an input spread evenly enough. The per-row estimate
+    * ([[rowBytes]]) makes wide URL-keyed inputs fall through to the
+    * distributed paths well before the driver heap is at risk.
+    *
+    * The first job reads every partition at once. A task returns its rows
+    * only while its partition stays within its 1/numPartitions share of
+    * the budget; past the share it only counts, up to the whole budget,
+    * and returns the counts. The shares sum to the budget, so an
+    * over-budget input sends the driver counts and at most one budget of
+    * rows, and is turned away. When the counts fit but some partitions
+    * were over their share, a second job re-reads just those partitions,
+    * each task held to the row count its partition reported. */
+  private[graft] def boundedCollect(df: DataFrame)
       : Option[Array[org.apache.spark.sql.Row]] = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.StringType
@@ -1783,22 +1799,38 @@ object Dedup {
     val strIdx = df.schema.fields.indices
       .filter(i => df.schema(i).dataType == StringType).toArray
     val rdd = df.rdd
-    val parts = new Array[Array[Row]](rdd.getNumPartitions)
-    var (rows, bytes) = (0L, 0L)
-    def fits: Boolean = rows <= gate && bytes <= byteBudget
-    df.sparkSession.sparkContext.runJob(rdd, (it: Iterator[Row]) => {
+    val sc = df.sparkSession.sparkContext
+    val nParts = rdd.getNumPartitions
+    if (nParts == 0) return Some(Array.empty[Row])
+    val (shareRows, shareBytes) = (gate / nParts, byteBudget / nParts)
+    // (rows, or null past the share; rows counted; bytes counted)
+    val first = sc.runJob(rdd, (it: Iterator[Row]) => {
       val buf = Array.newBuilder[Row]
-      var (n, b) = (0L, 0L)
+      var (n, b, kept) = (0L, 0L, true)
       while (it.hasNext && n <= gate && b <= byteBudget) {
         val r = it.next()
-        n += 1; b += rowBytes(r, strIdx); buf += r
+        n += 1; b += rowBytes(r, strIdx)
+        if (kept && n <= shareRows && b <= shareBytes) buf += r
+        else if (kept) { kept = false; buf.clear() }
       }
-      (buf.result(), b)
-    }, (i: Int, res: (Array[Row], Long)) => {
-      rows += res._1.length; bytes += res._2
-      if (fits) parts(i) = res._1 else parts.mapInPlace(_ => null)
+      (if (kept) buf.result() else null, n, b)
     })
-    if (fits) Some(parts.flatten) else None
+    if (first.iterator.map(_._2).sum > gate ||
+        first.iterator.map(_._3).sum > byteBudget) return None
+    val spilled = first.indices.filter(first(_)._1 == null)
+    val caps = spilled.map(i => i -> first(i)._2).toMap
+    val rest = if (spilled.isEmpty) Map.empty[Int, Array[Row]] else {
+      val again = sc.runJob(rdd,
+        (ctx: org.apache.spark.TaskContext, it: Iterator[Row]) => {
+          val cap = caps(ctx.partitionId())
+          val rows = it.take(math.min(cap + 1, Int.MaxValue.toLong).toInt).toArray
+          if (rows.length > cap) null else rows // the input changed
+        }, spilled)
+      spilled.zip(again).toMap
+    }
+    if (rest.valuesIterator.contains(null)) None
+    else Some(first.indices.toArray.flatMap(i =>
+      Option(first(i)._1).getOrElse(rest(i))))
   }
 
   /** Min-id connected components on the driver — the one union-find behind

@@ -14,7 +14,8 @@ import graft.store.ManifestTable
   * `maxDf = None`, pending tombstones, null ids and null/empty text,
   * bigint, int and string ids, and a retry after the pairs commit. Also
   * pins the fallback for a batch whose pair work is over the gate, the
-  * small batch's job and shuffle budget, and [[Dedup.writePairs]]' id
+  * small batch's job and shuffle budget, a zero Jaccard denominator,
+  * [[Dedup.boundedCollect]]'s result bound, and [[Dedup.writePairs]]' id
   * type check. */
 class DedupPairsSpec extends SparkSpec {
   _quiet
@@ -213,6 +214,85 @@ class DedupPairsSpec extends SparkSpec {
     val pairs = bothPaths(docs(base, LongType), Some(1000), gate = "100")(
       appendOf(docs(batch, LongType), Some(1000)))
     assert(pairs.keys.count(p => p(0).asInstanceOf[Long] >= 300L) == 28)
+  }
+
+  test("a pair whose Jaccard denominator is 0 (a doc's postings stored " +
+      "twice) takes the distributed quotient, with the same outcome") {
+    val text = "d1 d2 d3 d4 d5"
+    val base = docs(Seq((1L, text), (2L, "x1 x2 x3 x4")), LongType)
+    // a blind re-run without a batchId stores doc 1's postings twice: the
+    // batch copy of its text then shares 8 postings with it, n_a + n_b = 8
+    val stored: String => Unit = path =>
+      ManifestTable.append(Dedup.hashedShingles(base.where(col("id") === 1L),
+          "id", "text", 2)
+        .select(col("id"), size(col("th")).as("n"), explode(col("th")).as("s")),
+        path + "/postings")
+    def run(gate: Option[String]): (scala.util.Try[Unit], Option[(Multiset, Multiset)], Long) = {
+      val path = layout(base, Some(1000))
+      stored(path)
+      val before = Dedup.pairMineFastPathRuns.get()
+      gate.foreach(spark.conf.set("graft.cc.smallGraphEdges", _))
+      val out = try scala.util.Try(
+        appendOf(docs(Seq((9L, text)), LongType), Some(1000))(path))
+      finally spark.conf.unset("graft.cc.smallGraphEdges")
+      (out, out.toOption.map(_ => tables(path)), Dedup.pairMineFastPathRuns.get() - before)
+    }
+    val (fast, dist) = (run(None), run(Some("0")))
+    assert(fast._1.isSuccess == dist._1.isSuccess &&
+      fast._1.failed.toOption.map(_.getClass) == dist._1.failed.toOption.map(_.getClass),
+      s"outcomes diverged: driver=${fast._1} distributed=${dist._1}")
+    assert(fast._2 == dist._2, s"tables diverged:\ndriver=${fast._2}\ndistributed=${dist._2}")
+    assert(fast._3 == 0L && dist._3 == 0L, "the driver mine must defer")
+  }
+
+  /** Sum of the task result bytes Spark sends the driver while `body` runs,
+    * and the number of jobs it starts. */
+  private def resultTraffic[T](body: => T): (T, Long, Int) = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytes.addAndGet(m.resultSize): Unit)
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val out = try {
+      val r = body
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (out, bytes.get, jobs.get)
+  }
+
+  test("boundedCollect turns away many over-budget partitions without " +
+      "sending their rows, and collects a skewed small input whole") {
+    val pad = "x" * 200
+    // 20 partitions of 2,000 rows of ~200 chars against a 1,000-row gate:
+    // every partition is over the whole budget on its own
+    val wide = spark.range(0L, 40000L, 1L, 20).select(col("id"), lit(pad).as("pad"))
+    spark.conf.set("graft.cc.smallGraphEdges", "1000")
+    try {
+      val (over, bytes, _) = resultTraffic(Dedup.boundedCollect(wide))
+      assert(over.isEmpty)
+      // one budget of these rows is ~200 kB; every partition's rows would
+      // be ~20× that
+      assert(bytes < 200000L, s"$bytes result bytes reached the driver")
+      // 900 rows in one of 20 partitions: over that partition's share of
+      // the gate, within the gate — a second job re-reads that partition
+      val skewed = spark.createDataFrame(spark.sparkContext
+        .parallelize(0 until 20, 20)
+        .flatMap(p => if (p == 7) (0 until 900).map(i => Row(i.toLong, pad)) else Nil),
+        StructType(Seq(StructField("id", LongType), StructField("pad", StringType))))
+      val (got, _, jobs) = resultTraffic(Dedup.boundedCollect(skewed))
+      assert(got.map(_.map(_.getLong(0)).sorted.toSeq) == Some((0L until 900L).toSeq))
+      assert(jobs == 2, s"$jobs jobs")
+      // an even spread within every share takes one job
+      val even = spark.range(0L, 900L, 1L, 20).select(col("id"), lit(pad).as("pad"))
+      val (all, _, oneJob) = resultTraffic(Dedup.boundedCollect(even))
+      assert(all.map(_.length) == Some(900) && oneJob == 1, s"$oneJob jobs")
+    } finally spark.conf.unset("graft.cc.smallGraphEdges")
   }
 
   test("a small appendPairs mines with no shuffle and at most 6 Spark jobs") {
