@@ -747,9 +747,12 @@ object Dedup {
       hashedShingles(df, idCol, textCol, shingleSize)
         .select(col("id"), size(col("th")).as("n"), explode(col("th")).as("s")),
       path + "/postings")
+    // a null id never pairs (`ordered_pairs` would read it as id 0), as in
+    // appendPairs; its postings still persist
     graft.store.ManifestTable.write(
       pairsFromPostings(
-          graft.store.ManifestTable.read(spark, path + "/postings"),
+          graft.store.ManifestTable.read(spark, path + "/postings")
+            .where(col("id").isNotNull),
           minJaccard, maxDf)
         .select(col("id_a"), col("n_a"), col("id_b"), col("n_b"), col("inter")),
       path + "/pairs")

@@ -679,7 +679,7 @@ object TextOps {
     // columns must not inflate it) scaled by a measured postings-expansion
     // factor (round-19; `graft.bm25.postingsExpansion` overrides). Measured
     // written-postings-bytes / input-estimate: 2.62 at sf0.1, 3.67 at
-    // sf0.01 (PhaseProbe `expansion`); default 3.0 sits in the band and
+    // sf0.01 (VERDICT.md, round 19); default 3.0 sits in the band and
     // errs toward MORE writers — files land under the 512 MB target rather
     // than over it.
     val expansion = df.sparkSession.conf

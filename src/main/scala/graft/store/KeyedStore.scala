@@ -211,26 +211,20 @@ object KeyedStore {
    *     are hash-partitioned on a literal preimage of their slot, so slot `s`
    *     is exactly task `s` and no output range can span an untouched file;
    *     that one exchange is the only shuffle the current rows cross.
-   *  4. GUARD, WRITE AND COMMIT ONCE: if any staged range overlaps another
-   *     staged range or an untouched file the staging is deleted and the
-   *     mutation fails having applied nothing; otherwise one rename-in,
-   *     one fenced index commit, one stray sweep. A table whose live
-   *     ranges already overlap (damage no slot rule can route around) is
-   *     refused before step 1.
+   *  4. GUARD, WRITE AND COMMIT ONCE: the staging commits through
+   *     [[org.apache.spark.sql.graft.GraftIndex.commitStaged]] under fresh
+   *     `m<stamp>-*` names: the overlap guard (nothing applied if a staged
+   *     range overlaps another or an untouched file), one rename-in, one
+   *     fenced index commit, one stray sweep. A table whose live ranges
+   *     already overlap (damage no slot rule can route around) is refused
+   *     before step 1.
    *
-   * Crash + reader-concurrency contract (the HBase-durability analogue —
-   * reference HbaseTable.scala:373-423 never loses acked region writes):
-   * the swap renames staged files IN first under fresh `m<stamp>-*` names
-   * (invisible — manifest-dialect readers resolve the file set from the
-   * index, see [[org.apache.spark.sql.graft.GraftIndex]]), then COMMITS by
-   * atomically publishing a new index version, and only then sweeps
-   * replaced originals past their keep-one-back window. A crash before the
-   * commit leaves the old snapshot exactly (strays swept by the next write
-   * or [[fsckIndexed]]); a crash after it leaves the new snapshot exactly.
-   * A reader that planned against the previous index version keeps every
-   * file it resolved through ONE subsequent mutation (the previous version
-   * funds it). Writers are externally serialized (single-maintainer, like
-   * every graft mutation verb); READERS are the protected concurrent party.
+   * Crash + reader-concurrency contract: `commitStaged`'s (a crash leaves
+   * exactly the old or the new snapshot). A reader that planned against
+   * the previous index version keeps every file it resolved through ONE
+   * subsequent mutation (the previous version funds it). Writers are
+   * externally serialized (single-maintainer, like every graft mutation
+   * verb); READERS are the protected concurrent party.
    *
    * Legacy advisory (v1) indexes upgrade to the manifest dialect on the
    * first mutation (unindexed late-arrival files are scanned once for their
@@ -245,12 +239,8 @@ object KeyedStore {
     val hadoopConf = spark.sessionState.newHadoopConf()
     val dirPath = new org.apache.hadoop.fs.Path(path)
     val fs = dirPath.getFileSystem(hadoopConf)
-    // capture the index VERSION together with the snapshot: it is this
-    // mutation's optimistic-concurrency fence — the commit below aborts
-    // loudly if any other maintainer published a version in between
-    val ixV = GraftIndex.readAllVersioned(dirPath, hadoopConf).headOption
-      .filter(_._2.keyCol == keyCol)
-      .map { case (v, i) => GraftIndex.ensureManifestVersioned(spark, path, v, i) }
+    // the index VERSION is captured with the snapshot: the commit's fence
+    val ixV = GraftIndex.openRewrite(spark, path, keyCol)
     val ix = ixV.map(_._2)
     val tag = ix.map(_.keyTag).getOrElse("")
     val isNum = tag == "num"
@@ -312,48 +302,12 @@ object KeyedStore {
     val code = route(keyCol)
     val slotKey =
       element_at(typedLit(partKey.toSeq), when(code >= 0, code + 1).otherwise(lit(n) - code))
-    // per-attempt staging name AND per-attempt salt in the renamed-in data
-    // file names: racing maintainers must collide only at the index commit
-    // (where the fence arbitrates loudly), never on staging dirs or final
-    // data-file names (where POSIX rename would silently replace bytes)
-    val salt = java.util.UUID.randomUUID().toString.take(8)
-    val staging = path + "__staging-" + salt
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
     // stage through the graft write: each task records its file's key stats,
     // so the staging dir arrives with its own sidecar — no re-scan needed.
     // The fold emits each slot's rows in key order, so no sort follows it.
-    plan(current, Some(numSlots -> slotKey))
-      .write.format("graft").option("key", keyCol).mode("overwrite").save(staging)
-    val (stagedRanged, stagedUnranged) =
-      GraftIndex.read(stagingPath, hadoopConf).filter(_.keyCol == keyCol)
-        .map(s => (s.ranges, s.unranged))
-        .getOrElse(GraftIndex.computeEntries(spark,
-          fs.listStatus(stagingPath).filter(_.getPath.getName.endsWith(".parquet"))
-            .map(_.getPath.toString).toSeq, keyCol, tag))
-    val untouched = ix.get.ranges -- affected.map(i => ranges(i)._1)
-    GraftIndex.guardStaged(fs, stagingPath, tag, untouched, stagedRanged, s"mergeIndexed: $path")
-    // crash-safe swap (see scaladoc): staged parts rename IN first under
-    // fresh m<stamp> names — invisible to manifest-dialect readers until the
-    // index commit below — then the new index version publishes ATOMICALLY;
-    // the rewritten originals stay on disk as strays funded by the previous
-    // index version (keep-one-back) until the post-commit sweep retires
-    // whatever fell out of window
-    val stamp = System.currentTimeMillis()
-    val renamed = (stagedRanged.keySet ++ stagedUnranged.keySet)
-      .toSeq.sorted.zipWithIndex.map { case (staged, i) =>
-        val name = f"m$stamp%d-$salt-$i%05d.parquet"
-        if (!fs.rename(new org.apache.hadoop.fs.Path(staging, staged),
-            new org.apache.hadoop.fs.Path(path, name)))
-          throw new java.io.IOException(
-            s"mergeIndexed: cannot move $staged into $path")
-        staged -> name
-      }.toMap
-    GraftIndex.writeRanges(spark, path, keyCol, tag,
-      untouched ++ stagedRanged.map { case (n, e) => renamed(n) -> e },
-      ix.get.unranged ++ stagedUnranged.map { case (n, r) => renamed(n) -> r },
-      manifest = true, basedOn = ixV.map(_._1)): Unit // FENCED COMMIT POINT
-    fs.delete(stagingPath, true)
-    GraftIndex.sweepStrays(spark, path): Unit
+    val staging = GraftIndex.stage(plan(current, Some(numSlots -> slotKey)), path, keyCol)
+    GraftIndex.commitStaged(spark, path, ixV.get, affected.map(i => ranges(i)._1),
+      Seq(staging), "m", "mergeIndexed")
     counts
   }
 
@@ -454,7 +408,7 @@ object KeyedStore {
     // per-attempt staging name: two racing maintainers must never write
     // into the SAME staging dir (they would corrupt each other's staged
     // bytes before the commit fence can even arbitrate)
-    val staging = path + "__staging-" + java.util.UUID.randomUUID().toString.take(8)
+    val staging = path + GraftIndex.StagingInfix + java.util.UUID.randomUUID().toString.take(8)
     val stagingPath = new org.apache.hadoop.fs.Path(staging)
     try {
       // plan construction INSIDE the try: an analysis error (missing key
@@ -595,11 +549,10 @@ object KeyedStore {
     val hadoopConf = spark.sessionState.newHadoopConf()
     val dirPath = new org.apache.hadoop.fs.Path(path)
     val fs = dirPath.getFileSystem(hadoopConf)
-    val (ixVersion, ix) = GraftIndex.readAllVersioned(dirPath, hadoopConf)
-      .headOption.filter(_._2.keyCol == keyCol)
-      .map { case (v, i) => GraftIndex.ensureManifestVersioned(spark, path, v, i) }
-      .getOrElse(throw new IllegalStateException(
+    val base = GraftIndex.openRewrite(spark, path, keyCol).getOrElse(
+      throw new IllegalStateException(
         s"compact requires a _graft_index (run writeIndexed first): $path"))
+    val ix = base._2
     val sizes = fs.listStatus(dirPath).filter(_.isFile)
       .map(st => st.getPath.getName -> st.getLen).toMap
     val ordered = ix.ranges.toSeq.sortWith((a, b) =>
@@ -615,42 +568,20 @@ object KeyedStore {
     flush()
     val merged = groups.result()
     if (merged.isEmpty) return 0
-    // stage EVERY group, then rename all outputs in (invisible — manifest
-    // readers resolve through the index), then ONE atomic index commit, then
-    // sweep out-of-window strays. Same crash/reader contract as mergeIndexed:
-    // every crash state reads as exactly the pre- or post-compaction
-    // snapshot (the old order deleted each group's originals before any
-    // commit — a mid-loop crash lost committed rows).
-    val stamp = System.currentTimeMillis()
-    val salt = java.util.UUID.randomUUID().toString.take(8)
-    var newRanges = ix.ranges
+    // stage EVERY group (one file each), then commit them all at once
+    // through GraftIndex.commitStaged under fresh c<stamp> names: every
+    // crash state reads as exactly the pre- or post-compaction snapshot
     val staged = merged.zipWithIndex.map { case (names, i) =>
-      val staging = new org.apache.hadoop.fs.Path(s"${path}__compact_$salt-$i")
       // the group's footers merged: no inference job, and a column only
       // some of the files carry survives the merge
-      val files = names.map(n => s"$path/$n")
-      GraftIndex.footerSchema(dirPath, hadoopConf, names)
-        .fold(spark.read)(st => spark.read.schema(st)).parquet(files: _*)
-        .coalesce(1).sortWithinPartitions(keyCol)
-        .write.format("graft").option("key", keyCol).mode("overwrite")
-        .save(staging.toString)
-      val entry = GraftIndex.read(staging, hadoopConf)
-        .filter(_.keyCol == keyCol).map(_.ranges).getOrElse(Map.empty)
-      require(entry.size == 1, s"compaction group $i staged ${entry.size} files")
-      (staging, names, entry.head)
+      val staging = GraftIndex.stage(GraftIndex.footerSchema(dirPath, hadoopConf, names)
+        .fold(spark.read)(st => spark.read.schema(st)).parquet(names.map(n => s"$path/$n"): _*)
+        .coalesce(1).sortWithinPartitions(keyCol), path, keyCol)
+      val files = GraftIndex.listDataFiles(fs, staging).size
+      require(files == 1, s"compaction group $i staged $files files")
+      staging
     }
-    staged.zipWithIndex.foreach { case ((staging, names, (stagedName, stagedEntry)), i) =>
-      val target = f"c$stamp%d-$salt-$i%05d.parquet"
-      if (!fs.rename(new org.apache.hadoop.fs.Path(staging, stagedName),
-          new org.apache.hadoop.fs.Path(path, target)))
-        throw new java.io.IOException(s"compact: cannot move $stagedName into $path")
-      newRanges = newRanges -- names + (target -> stagedEntry)
-    }
-    GraftIndex.writeRanges(spark, path, keyCol, ix.keyTag, newRanges,
-      ix.unranged, manifest = true,
-      basedOn = Some(ixVersion)): Unit // FENCED COMMIT POINT
-    staged.foreach { case (staging, _, _) => fs.delete(staging, true) }
-    GraftIndex.sweepStrays(spark, path): Unit
+    GraftIndex.commitStaged(spark, path, base, merged.flatten.toSet, staged, "c", "compact")
     merged.size
   }
 
@@ -674,8 +605,13 @@ object KeyedStore {
    *    full-rewrite fallback's two renames): rolls FORWARD when the staging
    *    dir carries the completion marker, else rolls BACK to the backup —
    *    either way the table reads again.
-   *  - Dead `__staging` / `__old*` / `__compact_*` sibling dirs and index
-   *    tmp files from interrupted mutations → swept.
+   *  - Dead sibling dirs of interrupted mutations → swept: the staging
+   *    dirs every rewrite makes (`<table>__staging-<salt>`, see
+   *    [[org.apache.spark.sql.graft.GraftIndex.stage]]; the full-rewrite
+   *    fallback's too) and `__old*` backups, plus the `__compact_*` and
+   *    `__delete_staging*` dirs that `compact` and `deleteWhere` staged in
+   *    before they shared that name (a crash under an earlier build can
+   *    leave them behind). Index tmp files → swept too.
    *  - Data files no retained index version references (swap strays) →
    *    swept (manifest tables only; under an advisory index every file is
    *    live).
@@ -702,7 +638,7 @@ object KeyedStore {
     // staging dirs carry a per-attempt suffix (racing maintainers must not
     // share one); the legacy exact name is still recognized
     def isStaging(n: String): Boolean =
-      n == name + "__staging" || n.startsWith(name + "__staging-")
+      n == name + "__staging" || n.startsWith(name + GraftIndex.StagingInfix)
     var healed = false
     if (!fs.exists(dirPath)) {
       // at most one staging can carry the completion marker: the marker is
@@ -728,9 +664,9 @@ object KeyedStore {
     // table dir exists belongs to an interrupted attempt (single-maintainer)
     val deadDirs =
       if (!fs.exists(dirPath)) Nil
-      else siblings(n => isStaging(n) ||
-        n.startsWith(name + BackupSuffix) || n.startsWith(name + "__compact_") ||
-        n.startsWith(name + "__delete_staging"))
+      else siblings(n => isStaging(n) || n.startsWith(name + BackupSuffix) ||
+        // staging names of earlier builds' compact and deleteWhere
+        n.startsWith(name + "__compact_") || n.startsWith(name + "__delete_staging"))
     deadDirs.foreach(fs.delete(_, true))
     val tmps =
       if (!fs.exists(dirPath)) Nil

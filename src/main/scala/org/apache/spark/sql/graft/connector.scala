@@ -160,8 +160,9 @@ class GraftTable(tableSchema: StructType, options: CaseInsensitiveStringMap)
    * task-commit stats; untouched files and their entries survive byte-
    * identical. Each affected file's survivors are written as one file of
    * their own (an exact hash slot per source file), so a rewritten range
-   * never spans an untouched file, and the staged ranges pass the same
-   * overlap guard as `KeyedStore.mergeIndexed` before the commit.
+   * never spans an untouched file; the rewrite commits through
+   * [[GraftIndex.commitStaged]], the guard and fenced swap
+   * `KeyedStore.mergeIndexed` and `KeyedStore.compact` share.
    * `TRUNCATE TABLE` arrives here as AlwaysTrue via the SupportsDelete
    * default bridge.
    */
@@ -171,17 +172,12 @@ class GraftTable(tableSchema: StructType, options: CaseInsensitiveStringMap)
     val pred = FilterToColumn.all(filters).getOrElse(
       throw new UnsupportedOperationException(
         s"unsupported DELETE predicate: ${filters.mkString(", ")}"))
-    val hadoopConf = spark.sessionState.newHadoopConf()
     val dirPath = new Path(path)
-    val fs = dirPath.getFileSystem(hadoopConf)
+    val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(dirPath)) return
     val listed = GraftIndex.listDataFiles(fs, dirPath)
     if (listed.isEmpty) return
-    // upgrade any advisory index to the manifest dialect so the swap below
-    // is crash-safe + reader-concurrent (see GraftIndex scaladoc)
-    val indexV = GraftIndex.readAllVersioned(dirPath, hadoopConf).headOption
-      .filter(_._2.keyCol == keyCol)
-      .map { case (v, ix) => GraftIndex.ensureManifestVersioned(spark, path, v, ix) }
+    val indexV = GraftIndex.openRewrite(spark, path, keyCol)
     val index = indexV.map(_._2)
     // same refusal contract as KeyedStore.mergeIndexed: an index that exists
     // but is unusable for THIS key means a wrong key column or a damaged
@@ -213,59 +209,25 @@ class GraftTable(tableSchema: StructType, options: CaseInsensitiveStringMap)
     val kept = spark.read.schema(tableSchema)
       .parquet(affectedNames.map(n => s"$path/$n"): _*)
       .where(!coalesce(pred, lit(false)))
-    // per-attempt staging dir + data-file salt: racing maintainers must
-    // only ever collide at the fenced index commit, never on shared names
-    val salt = java.util.UUID.randomUUID().toString.take(8)
-    val staging = path + "__delete_staging-" + salt
     // one output file per affected file: a file's survivors go to its own
     // slot (a literal whose hash lands in that partition), so no rewritten
     // range can span an untouched file between two affected ones
     val slotOf = typedLit(affectedNames.zip(GraftIndex.hashPreimages(affectedNames.size)).toMap)
-    kept.repartition(affectedNames.size, element_at(slotOf, col("_metadata.file_name")))
-      .sortWithinPartitions(keyCol)
-      .write.format("graft").option("key", keyCol).mode("overwrite").save(staging)
-    val stagingPath = new Path(staging)
-    val stagedIx = GraftIndex.read(stagingPath, hadoopConf).filter(_.keyCol == keyCol)
-    val stagedFiles = GraftIndex.listDataFiles(fs, stagingPath)
-    val stamp = System.currentTimeMillis()
-    def renameIn(): Map[String, String] =
-      stagedFiles.sortBy(_.getPath.getName).zipWithIndex.map { case (st, i) =>
-        val staged = st.getPath.getName
-        val name = f"d$stamp%d-$salt-$i%05d.parquet"
-        if (!fs.rename(st.getPath, new Path(path, name)))
-          throw new java.io.IOException(s"deleteWhere: cannot move $staged into $path")
-        staged -> name
-      }.toMap
-    index match {
-      case Some(ix) =>
-        // crash-safe swap (manifest dialect): staged files rename IN first —
-        // invisible until the index commit — then the new index version
-        // publishes atomically; replaced originals stay as strays funded by
-        // the previous index version (keep-one-back), swept once out of window
-        val stagedRanged = stagedIx.map(_.ranges).getOrElse(Map.empty)
-        val stagedUnranged = stagedIx.map(_.unranged).getOrElse(Map.empty)
-        require(stagedFiles.forall(st =>
-          stagedRanged.contains(st.getPath.getName) ||
-            stagedUnranged.contains(st.getPath.getName)),
-          s"deleteWhere: staged write left files out of its index at $staging")
-        GraftIndex.guardStaged(fs, stagingPath, ix.keyTag, ix.ranges -- affectedNames,
-          stagedRanged, s"deleteWhere: $path")
-        val moved = renameIn()
-        GraftIndex.writeRanges(spark, path, keyCol, ix.keyTag,
-          ix.ranges -- affectedNames ++
-            stagedRanged.map { case (n, e) => moved(n) -> e },
-          ix.unranged -- affectedNames ++
-            stagedUnranged.map { case (n, r) => moved(n) -> r },
-          manifest = true, basedOn = indexV.map(_._1)): Unit
-        fs.delete(stagingPath, true)
-        GraftIndex.sweepStrays(spark, path): Unit
+    val staging = GraftIndex.stage(
+      kept.repartition(affectedNames.size, element_at(slotOf, col("_metadata.file_name")))
+        .sortWithinPartitions(keyCol), path, keyCol)
+    indexV match {
+      case Some(base) =>
+        GraftIndex.commitStaged(spark, path, base, affectedNames.toSet, Seq(staging),
+          "d", "deleteWhere")
       case None =>
         // no index: readers list the dir, so originals must go before the
         // staged files become visible — the legacy delete-then-rename window;
         // index the table (KeyedStore.writeIndexed) to get the crash-safe swap
         affectedNames.foreach(n => fs.delete(new Path(path, n), false))
-        renameIn()
-        fs.delete(stagingPath, true): Unit
+        GraftIndex.renameIn(fs, GraftIndex.listDataFiles(fs, staging).map(_.getPath)
+          .sortBy(_.getName), dirPath, "d", "deleteWhere")
+        fs.delete(staging, true): Unit
     }
   }
   override def newScanBuilder(caseInsensitiveOptions: CaseInsensitiveStringMap): ScanBuilder = {
@@ -1005,17 +967,117 @@ object GraftIndex {
     }.sum
   }
 
-  /** The guard before a rewrite's commit: if any `staged` range overlaps
-    * another staged range or an `untouched` live one, the staging dir is
-    * deleted and the rewrite (`what`) fails having applied nothing. */
-  def guardStaged(fs: FileSystem, staging: Path, tag: String,
-      untouched: Map[String, (Any, Any, Long)], staged: Map[String, (Any, Any, Long)],
-      what: String): Unit = {
-    val overlaps = overlappingRanges(tag, untouched.values ++ staged.values)
-    if (overlaps > 0) {
-      fs.delete(staging, true)
-      throw new IllegalStateException(s"$what: $overlaps staged key range(s) " +
-        "overlap another live range — staging deleted, nothing applied")
+  /**
+   * Open a staged rewrite of keyed table `dir`: the live index version for
+   * `keyCol`, upgraded to the manifest dialect (itself a fenced commit) so
+   * the rewrite's swap is crash-safe and reader-concurrent. The returned
+   * version is the rewrite's optimistic-concurrency fence: its
+   * [[commitStaged]] aborts loudly if another maintainer published a
+   * version in between. None when `dir` has no index usable for `keyCol`.
+   */
+  def openRewrite(spark: SparkSession, dir: String,
+      keyCol: String): Option[(Long, GraftIndex)] =
+    readAllVersioned(new Path(dir), spark.sessionState.newHadoopConf()).headOption
+      .filter(_._2.keyCol == keyCol)
+      .map { case (v, ix) => ensureManifestVersioned(spark, dir, v, ix) }
+
+  /** Write `df` through the graft write into a fresh staging dir of table
+    * `dir`, `<dir>__staging-<salt>`, and return it: each partition becomes
+    * one file whose key stats land in the staging dir's own sidecar. The
+    * salt is per attempt, so racing maintainers never share a staging dir
+    * (they collide only at the fenced commit). */
+  def stage(df: org.apache.spark.sql.DataFrame, dir: String, keyCol: String): Path = {
+    val staging = new Path(s"$dir$StagingInfix${java.util.UUID.randomUUID().toString.take(8)}")
+    df.write.format("graft").option("key", keyCol).mode("overwrite").save(staging.toString)
+    staging
+  }
+
+  /** The name infix of every staging dir next to a table: [[stage]]'s and
+    * `KeyedStore`'s full-rewrite fallback's. */
+  val StagingInfix = "__staging-"
+
+  /**
+   * Commit a staged rewrite of keyed table `dir` — the one commit protocol
+   * of every keyed-table rewrite (`KeyedStore.mergeIndexed`,
+   * `KeyedStore.compact`, [[GraftTable.deleteWhere]]), the crash-safe
+   * analogue of HBase applying a mutation chain as one `htable.batch`
+   * (reference HbaseTable.scala:373-423 never loses acked region writes).
+   * `base` is the `(version, index)` from [[openRewrite]]; `replaced` names
+   * the live files the `staged` dirs ([[stage]]) replace. In order:
+   *
+   *  1. GUARD ([[guardStaged]]): every staged file is in its dir's
+   *     sidecar, and no staged range overlaps another or an untouched live
+   *     one — else the staging is deleted and nothing is applied.
+   *  2. RENAME IN under fresh `<prefix><stamp>-<salt>-<i>.parquet` names:
+   *     invisible, because manifest-dialect readers resolve the file set
+   *     from the index.
+   *  3. COMMIT: one fenced index version (`basedOn` the base version).
+   *     Replaced files stay on disk as strays the previous version funds
+   *     (keep-one-back), for readers that planned against it.
+   *  4. SWEEP: the staging dirs, then the strays out of window.
+   *
+   * A crash before step 3 leaves the old snapshot exactly (the renamed-in
+   * files are strays, swept by the next write or `KeyedStore.fsckIndexed`);
+   * a crash after it leaves the new snapshot exactly. `verb` names the
+   * rewrite in errors.
+   */
+  def commitStaged(spark: SparkSession, dir: String, base: (Long, GraftIndex),
+      replaced: Set[String], staged: Seq[Path], prefix: String, verb: String): Unit = {
+    val (version, ix) = base
+    val dirPath = new Path(dir)
+    val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
+    val untouchedRanged = ix.ranges -- replaced
+    val sidecars = guardStaged(fs, staged, ix, untouchedRanged, s"$verb: $dir")
+    val files = sidecars.flatMap { case (s, six) => six.files.toSeq.sorted.map(n => (s, n, six)) }
+    val moved = files.zip(renameIn(fs, files.map { case (s, n, _) => new Path(s, n) },
+      dirPath, prefix, verb))
+    writeRanges(spark, dir, ix.keyCol, ix.keyTag,
+      untouchedRanged ++ moved.flatMap { case ((_, n, six), m) => six.ranges.get(n).map(m -> _) },
+      ix.unranged -- replaced ++
+        moved.flatMap { case ((_, n, six), m) => six.unranged.get(n).map(m -> _) },
+      manifest = true, basedOn = Some(version)): Unit // FENCED COMMIT POINT
+    staged.foreach(fs.delete(_, true))
+    sweepStrays(spark, dir): Unit
+  }
+
+  /** The guard before a rewrite's commit: each `staged` dir's sidecar (for
+    * `base`'s key) must name every data file in that dir, and no staged
+    * range may overlap another staged range or an `untouched` live one.
+    * Otherwise the staging is deleted and the rewrite (`what`) fails having
+    * applied nothing. Returns each staged dir with its sidecar. */
+  private def guardStaged(fs: FileSystem, staged: Seq[Path], base: GraftIndex,
+      untouched: Map[String, (Any, Any, Long)], what: String): Seq[(Path, GraftIndex)] = {
+    def refuse(why: String): Nothing = {
+      staged.foreach(fs.delete(_, true))
+      throw new IllegalStateException(s"$what: $why — staging deleted, nothing applied")
+    }
+    val sidecars = staged.map { s =>
+      val six = read(s, fs.getConf).filter(_.keyCol == base.keyCol)
+        .getOrElse(GraftIndex(base.keyCol, base.keyTag, Map.empty))
+      if (!listDataFiles(fs, s).forall(st => six.files.contains(st.getPath.getName)))
+        refuse(s"the staged write at $s left files out of its index")
+      s -> six
+    }
+    val overlaps = overlappingRanges(base.keyTag,
+      untouched.values ++ sidecars.flatMap(_._2.ranges.values))
+    if (overlaps > 0) refuse(s"$overlaps staged key range(s) overlap another live range")
+    sidecars
+  }
+
+  /** Move staged data files into `dir` under fresh
+    * `<prefix><stamp>-<salt>-<i>.parquet` names, in the given order, and
+    * return the new names. The salt is per attempt, so racing maintainers
+    * never share a final name (where POSIX rename would silently replace
+    * bytes). */
+  private[graft] def renameIn(fs: FileSystem, files: Seq[Path], dir: Path,
+      prefix: String, verb: String): Seq[String] = {
+    val stamp = System.currentTimeMillis()
+    val salt = java.util.UUID.randomUUID().toString.take(8)
+    files.zipWithIndex.map { case (f, i) =>
+      val name = f"$prefix$stamp%d-$salt-$i%05d.parquet"
+      if (!fs.rename(f, new Path(dir, name)))
+        throw new java.io.IOException(s"$verb: cannot move $f into $dir")
+      name
     }
   }
 

@@ -16,7 +16,7 @@ import graft.store.ManifestTable
   * pins the fallback for a batch whose pair work is over the gate, the
   * small batch's job and shuffle budget, a zero Jaccard denominator,
   * [[Dedup.boundedCollect]]'s result bound, and [[Dedup.writePairs]]' id
-  * type check. */
+  * type check and null-id rule. */
 class DedupPairsSpec extends SparkSpec {
   _quiet
 
@@ -319,6 +319,16 @@ class DedupPairsSpec extends SparkSpec {
     assert(Dedup.pairMineFastPathRuns.get() - before == 1L)
     assert(shuffled.get == 0L, s"${shuffled.get} shuffle bytes written")
     assert(jobs.get <= 6, s"${jobs.get} jobs")
+  }
+
+  test("writePairs never pairs a null id (it once paired as id 0)") {
+    val path = java.nio.file.Files.createTempDirectory("graft_pairs_null")
+      .toString + "/p"
+    val text = "a b c d e f"
+    Dedup.writePairs(docs(Seq((5L, text), (null, text), (7L, text)), LongType),
+      "id", "text", path, shingleSize = 2)
+    assert(multiset(ManifestTable.read(spark, path + "/pairs")) ==
+      Map(Seq[Any](5L, 5, 7L, 5, 5L) -> 1))
   }
 
   test("writePairs refuses a non-bigint id column up front, naming the " +

@@ -20,6 +20,8 @@ trait SparkSpec extends AnyFunSuite {
       classOf[graft.SlowRenameFileSystem].getName)
     .config("spark.hadoop.fs.natomic.impl",
       classOf[graft.NonAtomicCreateFileSystem].getName)
+    .config("spark.hadoop.fs.crashfs.impl",
+      classOf[graft.CrashPointFileSystem].getName)
     .getOrCreate()
 
   def sf(dir: String = "sf0.001"): String = s"/root/testdata/$dir"
